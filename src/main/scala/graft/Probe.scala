@@ -1,0 +1,324 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions.{col, max, xxhash64}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Measurement probe over the SHIPPED catalog queries: every mode reaches
+  * them through [[SparkEntry.queries]] only, never a hand copy.
+  *
+  *  - `ab <qA> <qB> [rounds]`: both queries in one JVM, interleaved, first
+  *    slot alternating per round; the median PAIRED delta (a - b) isolates
+  *    the code effect from host drift, which hits both slots alike.
+  *  - `time [queries...] [rounds]`: build / plan / execute per sample, with
+  *    Bench's pure-CPU anchor after every sample. No queries = the heavy
+  *    tier, so the scale side-board is `SPARK_GRAFT_SF_DIR=<scaled> Probe time`.
+  *  - `plan <q> [rounds]`: task totals per round, then one line per
+  *    execution (eager checkpoints run as their own) with its durationNs
+  *    and final-plan digest; the last round's plans go to target/probe_plan/.
+  *  - `explain [queries...]`: formatted physical plans (default: bench subset).
+  *
+  * `sbt "runMain graft.Probe <mode> ..."` reads SPARK_GRAFT_SF_DIR and
+  * SPARK_GRAFT_CPUS with Bench's defaults, and SPARK_GRAFT_EXTRA_CONFS
+  * (`key=value;key=value`) for extra session confs.
+  */
+object Probe {
+
+  val usage: String = "usage: Probe ab <qA> <qB> [rounds] | time [queries...] [rounds]" +
+    " | plan <query> [rounds] | explain [queries...]"
+
+  sealed trait Command
+  final case class Ab(a: String, b: String, rounds: Int) extends Command
+  final case class Time(queries: Seq[String], rounds: Int) extends Command
+  final case class Plan(query: String, rounds: Int) extends Command
+  final case class Explain(queries: Seq[String]) extends Command
+
+  /** The >= 2 s tier at sf0.1: what `time` runs when no query is named. */
+  val heavyTier: Seq[String] = Seq("q306_item_cf_recs", "q286_semantic_dedup",
+    "q253_kcore", "q193_cheapest_path", "q175_triangle_census",
+    "q173_paragraph_dedup", "q101_mask_contaminated")
+
+  /** Validates the command line before any session exists; every
+    * rejection is an IllegalArgumentException that ends in [[usage]].
+    */
+  def parse(args: Seq[String]): Command = {
+    def fail(msg: String): Nothing = throw new IllegalArgumentException(s"$msg\n$usage")
+    val catalog = SparkEntry.queries.keySet
+    def query(n: String): String = if (catalog.contains(n)) n else fail(s"unknown catalog query: $n")
+    def rounds(s: String): Int =
+      s.toIntOption.filter(_ > 0).getOrElse(fail(s"rounds must be a positive integer: $s"))
+    args match {
+      case Seq("ab", a, b, r @ _*) if r.size <= 1 =>
+        Ab(query(a), query(b), r.headOption.map(rounds).getOrElse(7))
+      case Seq("plan", q, r @ _*) if r.size <= 1 =>
+        Plan(query(q), r.headOption.map(rounds).getOrElse(3))
+      case "time" +: rest =>
+        // a trailing argument that is no query name and starts like a
+        // number is the round count
+        val trailingRounds = rest.lastOption.exists(s => !catalog.contains(s) &&
+          s.headOption.exists(c => c.isDigit || c == '-' || c == '+'))
+        val (qs, r) = if (trailingRounds) (rest.init, rounds(rest.last)) else (rest, 3)
+        Time(if (qs.isEmpty) heavyTier else qs.map(query), r)
+      case "explain" +: qs =>
+        Explain(if (qs.isEmpty) SparkEntry.benchQueries else qs.map(query))
+      case (m @ ("ab" | "plan")) +: _ => fail(s"wrong number of arguments for $m")
+      case m +: _ => fail(s"unknown mode: $m")
+      case _ => fail("missing mode")
+    }
+  }
+
+  /** SPARK_GRAFT_EXTRA_CONFS: `key=value` entries separated by `;` (a value
+    * may itself hold `,` or `=`). An entry without `=` or with an empty
+    * key is rejected by name instead of being dropped or half-applied.
+    */
+  def extraConfs(raw: String): Seq[(String, String)] =
+    raw.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONFS entry '$kv' is not key=value")
+      }
+    }
+
+  def main(args: Array[String]): Unit = {
+    val (cmd, confs) =
+      try (parse(args.toSeq), extraConfs(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONFS", "")))
+      catch { case e: IllegalArgumentException => System.err.println(e.getMessage); sys.exit(2) }
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft-probe")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+    (Tables.requiredConfs.toSeq ++ confs).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try run(spark, sfDir, cmd) finally spark.stop()
+  }
+
+  /** Runs one command on an existing session and leaves it as found
+    * (listeners removed, no conf changed). Output goes line by line to `out`.
+    */
+  def run(spark: SparkSession, sfDir: String, cmd: Command,
+      out: String => Unit = println): Unit = {
+    val catalog = SparkEntry.queries
+    def build(q: String): DataFrame = catalog(q)(spark, sfDir)
+    cmd match {
+      case Ab(a, b, rounds) => ab(a, b, rounds, build, out)
+      case Time(qs, rounds) => time(spark, qs, rounds, build, out)
+      case Plan(q, rounds) => plan(spark, q, rounds, build, out)
+      case Explain(qs) => qs.foreach { q =>
+        out(s"\n========== $q ==========")
+        out(build(q).queryExecution.explainString(ExplainMode.fromString("formatted")))
+      }
+    }
+  }
+
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  private def timed(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def num(v: Double): String = f"$v%.3f"
+  private def arr(vs: Seq[String]): String = vs.mkString("[", ",", "]")
+
+  private def ab(a: String, b: String, rounds: Int, build: String => DataFrame,
+      out: String => Unit): Unit = {
+    def once(q: String): Double = timed(noop(build(q)))
+    once(a); once(b) // warm both: codegen, JIT, file listings
+    val pairs = (1 to rounds).map { r =>
+      if (r % 2 == 1) { val x = once(a); (x, once(b)) }
+      else { val y = once(b); (once(a), y) }
+    }
+    def slot(q: String, ss: Seq[Double]): String =
+      s"""{"query":"$q","median":${num(Bench.median(ss))},"min":${num(ss.min)},""" +
+        s""""samples":${arr(ss.map(num))}}"""
+    val delta = pairedDelta(pairs)
+    out(s"""{"probe":"ab","rounds":$rounds,"a":${slot(a, pairs.map(_._1))},""" +
+      s""""b":${slot(b, pairs.map(_._2))},"paired_delta_median":${num(delta)},""" +
+      s""""faster":"${if (delta <= 0) a else b}"}""")
+  }
+
+  /** Upper median of the signed deltas a - b (Bench.median would read a negative as a failure). */
+  private[graft] def pairedDelta(pairs: Seq[(Double, Double)]): Double =
+    pairs.map { case (x, y) => x - y }.sorted.apply(pairs.size / 2)
+
+  /** Bench's clean-anchor rule, restated because Bench is frozen and its
+    * `anchorBad` is private: a trailing anchor slower than
+    * max(1.5 x session minimum, session minimum + 0.25 s) marks the sample
+    * before it contaminated.
+    */
+  private[graft] def anchorBad(reading: Double, sessionMin: Double): Boolean =
+    reading > math.max(1.5 * sessionMin, sessionMin + 0.25)
+
+  private final case class Split(build: Double, plan: Double, exec: Double, anchor: Double) { def sec = build + plan + exec }
+
+  private def time(spark: SparkSession, queries: Seq[String], rounds: Int,
+      build: String => DataFrame, out: String => Unit): Unit = {
+    // Bench's anchor: pure CPU, no IO, no shuffle, plans identically
+    val anchors = collection.mutable.ArrayBuffer.empty[Double]
+    def anchor(): Double = {
+      anchors += timed(spark.range(1L << 28).select(xxhash64(col("id")).as("h")).agg(max(col("h"))).collect())
+      anchors.last
+    }
+    (1 to 3).foreach(_ => anchor())
+    // a slow reading gets one confirm-read; the faster of the pair stands
+    def anchorAfter(): Double = {
+      val a = anchor()
+      if (!anchorBad(a, anchors.min)) a else math.min(a, anchor())
+    }
+    // exec includes the noop write command's own planning of the query
+    def sample(q: String): Split = {
+      var df: DataFrame = null
+      val b = timed { df = build(q) }
+      val p = timed(df.queryExecution.executedPlan)
+      val e = timed(noop(df))
+      Split(b, p, e, anchorAfter())
+    }
+    val results = queries.map { q =>
+      noop(build(q)) // warmup: codegen, JIT, file listings
+      q -> (1 to rounds).map { i =>
+        val first = sample(q)
+        val s = if (anchorBad(first.anchor, anchors.min)) sample(q) else first
+        out(s"[time] $q round $i: build=${num(s.build)} plan=${num(s.plan)} " +
+          s"exec=${num(s.exec)} anchor=${num(s.anchor)}")
+        s
+      }
+    }
+    // statistics over the samples that are clean against the END-of-run
+    // anchor minimum; when none is clean, over all of them
+    val aMin = anchors.min
+    def clean(s: Split): Boolean = !anchorBad(s.anchor, aMin)
+    val entries = results.map { case (q, ss) =>
+      val kept = if (ss.exists(clean)) ss.filter(clean) else ss
+      def med(f: Split => Double): String = num(Bench.median(kept.map(f)))
+      val samples = ss.map(s => arr(Seq(num(s.sec), num(s.anchor), clean(s).toString)))
+      Bench.median(kept.map(_.sec)) ->
+        (s""""$q":{"median":${med(_.sec)},"min":${num(kept.map(_.sec).min)},""" +
+          s""""build":${med(_.build)},"plan":${med(_.plan)},"exec":${med(_.exec)},""" +
+          s""""samples":${arr(samples)}}""")
+    }
+    out(s"""{"probe":"time","master":"${spark.sparkContext.master}","rounds":$rounds,""" +
+      s""""anchor":{"min":${num(aMin)},"max":${num(anchors.max)},"n":${anchors.size}},""" +
+      s""""total":${num(entries.map(_._1).sum)},"queries":{${entries.map(_._2).mkString(",")}}}""")
+  }
+
+  /** Operator counts of the plan that RAN. An adaptive plan's `toString`
+    * prints the initial plan below the final one, so counting substrings
+    * reports joins AQE replaced; this walks the final plan instead, into
+    * every query stage and subquery. `EX` counts exchanges that ran;
+    * `reused` counts reads of an exchange that ran elsewhere.
+    */
+  private[graft] def digest(plan: SparkPlan): String = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case o => o.children ++ o.subqueries
+    }).flatMap(walk)
+    val ops = walk(plan)
+    def n(pf: PartialFunction[SparkPlan, Any]): Int = ops.count(pf.isDefinedAt)
+    val coalesced = ops.collect { case r: AQEShuffleReadExec if r.hasCoalescedPartition =>
+      val from = r.child match { case s: ShuffleQueryStageExec => s.shuffle.numPartitions; case _ => -1 }
+      s"$from->${r.partitionSpecs.size}"
+    }
+    s"BHJ=${n { case _: BroadcastHashJoinExec => }} SMJ=${n { case _: SortMergeJoinExec => }} " +
+      s"SHJ=${n { case _: ShuffledHashJoinExec => }} EX=${n { case _: Exchange => }} " +
+      s"reused=${n { case _: ReusedExchangeExec => }} AQERead=${n { case _: AQEShuffleReadExec => }} " +
+      s"coalesce=${arr(coalesced)} " +
+      s"skew=${n { case j: SortMergeJoinExec if j.isSkewJoin => case j: ShuffledHashJoinExec if j.isSkewJoin => }} " +
+      s"topk=${n { case _: graft.plans.TopKPerKeyExec => }}"
+  }
+
+  private final case class Execution(funcName: String, durationNs: Long, plan: SparkPlan)
+
+  private val MarkerKey = "graft.probe.marker"
+
+  /** Collects executions and task metrics, plus the drain marker: the
+    * listener bus delivers one queue's events in order, so once a marker
+    * job posted after the query is seen, every event before it has been too.
+    */
+  private final class Tap extends SparkListener with QueryExecutionListener {
+    val executions = new ConcurrentLinkedQueue[Execution]()
+    val tasks = new ConcurrentLinkedQueue[TaskMetrics]()
+    val markers = new AtomicLong
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      executions.add(Execution(funcName, durationNs, qe.executedPlan))
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach(tasks.add)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties != null && e.properties.getProperty(MarkerKey) != null) markers.incrementAndGet()
+  }
+
+  private def plan(spark: SparkSession, q: String, rounds: Int,
+      build: String => DataFrame, out: String => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tap = new Tap
+    // a zero-partition job posts its start event without running a task
+    def drain(): Unit = {
+      val seen = tap.markers.get
+      sc.setLocalProperty(MarkerKey, "drain")
+      try sc.emptyRDD[Int].count() finally sc.setLocalProperty(MarkerKey, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (tap.markers.get == seen) {
+        if (System.nanoTime() > deadline) throw new IllegalStateException("listener bus did not drain in 60 s")
+        Thread.sleep(5)
+      }
+    }
+    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
+    def round(i: Int): Unit = {
+      tap.executions.clear()
+      tap.tasks.clear()
+      val gc0 = gcBeans.map(_.getCollectionTime).sum
+      val jit0 = jitBean.getTotalCompilationTime
+      val sec = timed(noop(build(q)))
+      val gcSec = (gcBeans.map(_.getCollectionTime).sum - gc0) / 1e3
+      val jitSec = (jitBean.getTotalCompilationTime - jit0) / 1e3
+      drain()
+      val ts = tap.tasks.asScala.toSeq
+      def sum(f: TaskMetrics => Long): Long = ts.map(f).sum
+      val execs = tap.executions.asScala.toSeq
+      out(f"[plan] $q round $i sec=$sec%.2f gc=$gcSec%.2f " +
+        f"spill=${sum(m => m.memoryBytesSpilled + m.diskBytesSpilled) / 1e6}%.0fMB " +
+        f"fetchWait=${sum(_.shuffleReadMetrics.fetchWaitTime) / 1e3}%.1f " +
+        f"taskRun=${sum(_.executorRunTime) / 1e3}%.1f taskCpu=${sum(_.executorCpuTime) / 1e9}%.1f " +
+        f"deser=${sum(_.executorDeserializeTime) / 1e3}%.1f nTasks=${ts.size} " +
+        f"jit=$jitSec%.1f executions=${execs.size}")
+      // the noop write is the last execution; those before it ran nested
+      execs.zipWithIndex.foreach { case (e, k) =>
+        val line = s"$q round $i exec ${k + 1}/${execs.size} ${e.funcName} " +
+          s"durationNs=${e.durationNs} ${digest(e.plan)}"
+        out(s"[plan] $line")
+        if (i == rounds) {
+          val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target", "probe_plan"))
+          java.nio.file.Files.writeString(dir.resolve(f"${q}_exec${k + 1}%02d.txt"), s"-- $line\n${e.plan}")
+        }
+      }
+    }
+    spark.listenerManager.register(tap)
+    sc.addSparkListener(tap)
+    try {
+      drain()
+      (1 to rounds).foreach(round)
+    } finally {
+      spark.listenerManager.unregister(tap)
+      sc.removeSparkListener(tap)
+    }
+  }
+}

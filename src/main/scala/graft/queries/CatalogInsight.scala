@@ -2117,7 +2117,7 @@ private[queries] object CatalogInsight {
     // (TopKPerKeyPartial -> one hash exchange -> TopKPerKeyFinal; NO
     // Window, no per-group full sort — PlanSpec-pinned), oracle-paired
     // against the row_number window form. q336 is the SAME semantics in
-    // the window form — the interleaved BenchAB baseline (the measured
+    // the window form — the interleaved Probe ab baseline (the measured
     // claim, not an asserted one). The (cents desc, event_id asc) order
     // is total, the operator's determinism contract.
     "q335_topk_operator" -> QueryDef(
@@ -2139,7 +2139,7 @@ private[queries] object CatalogInsight {
         ORDER BY user_id, value_cents DESC, event_id ASC""")),
 
     // The stock window form of q335, cell-identical BY ORACLE — kept as
-    // a first-class entry so BenchAB can interleave the two in one JVM
+    // a first-class entry so Probe ab can interleave the two in one JVM
     // (the machine-drift-proof comparison discipline) and so a
     // regression in EITHER path is caught against the same oracle.
     "q336_topk_window_twin" -> QueryDef(
@@ -2293,7 +2293,7 @@ private[queries] object CatalogInsight {
     // (user_id, ts) so exact-ts tie nondeterminism cannot exist in any
     // engine; DuckDB's native ASOF LEFT JOIN is the oracle. q340 is the
     // SAME semantics via the union+window form — the interleaved
-    // BenchAB baseline (measured claim, not asserted).
+    // Probe ab baseline (measured claim, not asserted).
     "q339_asof_merge_operator" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
@@ -2318,7 +2318,7 @@ private[queries] object CatalogInsight {
         ORDER BY l.event_id""")),
 
     // The union+window form of q339, cell-identical BY ORACLE — kept
-    // first-class so BenchAB can interleave the two paths in one JVM
+    // first-class so Probe ab can interleave the two paths in one JVM
     // (the q335/q336 discipline) and a regression in EITHER surface is
     // caught against the same oracle.
     "q340_asof_window_twin" -> QueryDef(
@@ -2410,7 +2410,7 @@ private[queries] object CatalogInsight {
     // pointer jumps (component count halves per round; the sf graphs
     // converge well inside that). Oracle = the recurrence unrolled.
     // The stock window form of q341, cell-identical BY ORACLE — the
-    // BenchAB interleave baseline for the RANK mode (the q336
+    // Probe ab interleave baseline for the RANK mode (the q336
     // discipline applied to the tie-semantics variant).
     "q345_topk_rank_window_twin" -> QueryDef(
       fn = (s, d) => {
@@ -2569,7 +2569,7 @@ private[queries] object CatalogInsight {
     // on every LEFT row through the exchange AND buffered in the window
     // frame; the merge exec ships each side at its own width. Six
     // carried columns (vs q339's one) amplify exactly that cost — the
-    // BenchAB paired delta between q351 and q352 is the width-scaling
+    // Probe ab paired delta between q351 and q352 is the width-scaling
     // evidence. Carried columns are deterministic integer derivations
     // of the deduped purchase row, so the oracle is exact.
     "q351_asof_merge_wide" -> QueryDef(
@@ -2608,7 +2608,7 @@ private[queries] object CatalogInsight {
         ORDER BY l.event_id""")),
 
     // The union+window twin of q351 — same six carried columns through
-    // ops.AsOfJoin, cell-identical BY ORACLE; BenchAB interleaves the
+    // ops.AsOfJoin, cell-identical BY ORACLE; Probe ab interleaves the
     // two for the width-scaling paired delta.
     "q352_asof_window_wide_twin" -> QueryDef(
       fn = (s, d) => {
@@ -2658,7 +2658,7 @@ private[queries] object CatalogInsight {
     // vs the merge exec's two per-side exchanges and the union form's
     // combined-width exchange. Same semantics as q339/q340; the SAME
     // DuckDB ASOF oracle pins all three surfaces interchangeable;
-    // BenchAB q353 vs q339 is the measured zero-shuffle delta.
+    // Probe ab q353 vs q339 is the measured zero-shuffle delta.
     "q353_asof_broadcast" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
@@ -2693,7 +2693,7 @@ private[queries] object CatalogInsight {
     // story; here the right side is calendar-bounded, so the comparison
     // isolates what the 100 TB deployment cares about: map-only probe vs
     // shuffling every fact row. q355 is the identical semantics through
-    // the merge exec — BenchAB q354 vs q355 is the measured claim.
+    // the merge exec — Probe ab q354 vs q355 is the measured claim.
     "q354_asof_broadcast_dim" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
@@ -3107,7 +3107,7 @@ private[queries] object CatalogInsight {
     // The higher-order-function twin of q361 — identical semantics
     // (and the identical oracle text) through `filter(sequence(...))`
     // position lambdas: one interpreted predicate per position per
-    // pattern, |patterns| passes over each text. First-class so BenchAB
+    // pattern, |patterns| passes over each text. First-class so Probe ab
     // can interleave the two paths in one JVM — the q336/q340 discipline;
     // the paired delta is the measured cost of leaving multi-pattern
     // scanning to Catalyst's HOF interpreter instead of the automaton.
@@ -3132,7 +3132,7 @@ private[queries] object CatalogInsight {
             col("n_docs"), col("n_hits"))
           .orderBy("pattern")
       },
-      // deliberately NOT in the nightly bench: the measured BenchAB pair
+      // deliberately NOT in the nightly bench: the measured Probe ab pair
       // read 25.7 s vs the automaton's 0.35 s median at sf0.1 (~74x) —
       // a quarter-minute fixed cost would distort the bench total; the
       // pairing lives in NOTES.md and is re-runnable on demand
@@ -4379,7 +4379,7 @@ private[queries] object CatalogInsight {
     // threshold, so the dispatch lands on the zero-shuffle broadcast
     // rung — the SAME DuckDB ASOF oracle as q354/q355 pins the choice
     // as purely physical. AsOfAutoSpec pins three-way parity and each
-    // dispatch rule; BenchAB q383 vs q355 is the measured win of
+    // dispatch rule; Probe ab q383 vs q355 is the measured win of
     // letting the engine choose.
     "q383_asof_auto_dispatch" -> QueryDef(
       fn = (s, d) => {
