@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, date_format}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, date_format, lit}
 import org.apache.spark.storage.StorageLevel
 
 /** The end-to-end mart pipeline — the reference's Glue job
@@ -9,12 +9,11 @@ import org.apache.spark.storage.StorageLevel
   * program (SURVEY §3.1).
   *
   * Deviations from the reference, all deliberate:
-  *  - one `persist()` after dedup instead of five uncached actions that each
-  *    re-run the scan (reference re-computes lineage at `:101,137,161,200`);
-  *  - declared input schema by default (kills the VoidType bug class);
-  *  - deterministic dedup tie-break by default (W1 hazard, SURVEY §7.4);
-  *  - counts are computed once off the persisted frame and reported as
-  *    metrics, matching the reference's log surface.
+  *  - one action computes every logged count and the null audit, by
+  *    `Observation` on one persisted mart, instead of five uncached
+  *    actions that each re-run the scan (reference `:101,137,161,200,228`);
+  *  - declared input schema (kills the VoidType bug class);
+  *  - deterministic dedup tie-break (W1 hazard, SURVEY §7.4).
   */
 object OpenAqPipeline {
 
@@ -28,12 +27,10 @@ object OpenAqPipeline {
   /** S1 — scan the raw zone: NDJSON with the declared schema (recursive,
     * matching Glue's recursive S3 listing).
     */
-  def readRaw(spark: SparkSession, cfg: Schemas.JobConfig): DataFrame = {
-    val reader = spark.read.option("recursiveFileLookup", "true")
-    val withSchema =
-      if (cfg.inferSchema) reader else reader.schema(Schemas.rawMeasurement)
-    withSchema.json(cfg.inputPath)
-  }
+  def readRaw(spark: SparkSession, cfg: Schemas.JobConfig): DataFrame =
+    spark.read.option("recursiveFileLookup", "true")
+      .schema(Schemas.rawMeasurement)
+      .json(cfg.inputPath)
 
   /** S1 with a quarantine channel: malformed NDJSON lines are captured in
     * `_corrupt_record` (PERMISSIVE mode) and split into a side frame
@@ -62,143 +59,89 @@ object OpenAqPipeline {
   /** The transform chain, input-to-mart, as one logical plan. Exposed
     * separately from [[run]] so tests and queries can apply it to any
     * long-format frame.
+    *
+    * @return (deduped, pivoted, mart)
     */
-  def transform(raw: DataFrame, cfg: Schemas.JobConfig): (DataFrame, DataFrame, DataFrame) = {
-    val parsed = raw
+  def transform(raw: DataFrame, cfg: Schemas.JobConfig): (DataFrame, DataFrame, DataFrame) =
+    chain(raw, raw, identity, identity)
+
+  /** parse → dedup → pivot → enrich → fill. The location dimension is
+    * built from `metaRaw`; `tapDedup` and `tapPivot` wrap the dedup and
+    * pivot outputs, where [[run]] attaches its row-count observations.
+    */
+  private def chain(
+      raw: DataFrame,
+      metaRaw: DataFrame,
+      tapDedup: DataFrame => DataFrame,
+      tapPivot: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    def parse(df: DataFrame): DataFrame = df
       .transform(Transforms.parseDatetime)
       .transform(Transforms.dropInvalidDatetime)
       .transform(Transforms.derivePartitions)
 
-    val dedupKeys = Seq("location_id", "datetime")
-    val deduped =
-      if (cfg.deterministicDedup)
-        parsed.transform(Transforms.dedupByRank(dedupKeys, Seq(col("parameter"), col("value"))))
-      else
-        parsed.transform(Transforms.dedupByRank(dedupKeys, Nil))
-
-    val pivoted = deduped.transform(Transforms.pivotParameters(values = cfg.pivotValues))
-
-    val meta = Transforms.buildMetadata(parsed)
+    val deduped = parse(raw)
+      .transform(Transforms.dedupByRank(
+        Seq("location_id", "datetime"), Seq(col("parameter"), col("value"))))
+      .transform(tapDedup)
+    val pivoted = deduped.transform(Transforms.pivotParameters()).transform(tapPivot)
     val mart = pivoted
       .withColumn("location_id", col("location_id").cast("string"))
-      .transform(Transforms.enrich(meta))
+      .transform(Transforms.enrich(Transforms.buildMetadata(parse(metaRaw))))
       .transform(Transforms.fillDefaults)
     (deduped, pivoted, mart)
   }
 
   /** Full job: scan → transform → validate → partitioned Parquet sink →
-    * register view. Returns the mart frame and the metrics the reference
-    * logs.
+    * register view. Returns the mart frame (no longer cached) and the
+    * metrics the reference logs.
+    *
+    * Every metric comes from `Observation`s on the scan, dedup, pivot and
+    * mart (the mart's also carries the null audit), all filled by ONE
+    * count of the persisted mart; the audit gate fires before the write,
+    * which reads the cache.
+    *
+    * Observations sit only on the scan→dedup→pivot→mart spine, which runs
+    * exactly once. The enrich metadata branch reads the raw zone a second
+    * time without one: it runs as its own broadcast-build job, and a
+    * CollectMetrics node reached by two jobs would count twice.
     */
   def run(spark: SparkSession, cfg: Schemas.JobConfig, viewName: String = "vietnam"): (DataFrame, Metrics) = {
-    val raw = readRaw(spark, cfg)
-    val rawCount = raw.count()
+    val rows = count(lit(1)).as("n")
+    val obsRaw, obsDedup, obsPivot, obsMart = Observation()
+    val (_, _, enriched) = chain(
+      readRaw(spark, cfg).observe(obsRaw, rows), readRaw(spark, cfg),
+      _.observe(obsDedup, rows), _.observe(obsPivot, rows))
+    Transforms.requireColumns(enriched)
+    val mart = enriched.observe(obsMart, rows, Transforms.nullCounts(): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      mart.count()
+      val martRow = obsMart.get
+      val audit = Schemas.criticalColumns.map(c => c -> martRow(c).asInstanceOf[Long]).toMap
+      require(audit.values.forall(_ == 0L), s"null critical columns: $audit")
 
-    val (deduped, pivoted, mart) = transform(raw, cfg)
-    // persist the post-dedup frame: every downstream count (dedup, pivot,
-    // enrich) and the write reuse it instead of re-running the scan + the
-    // dedup shuffle (the reference re-executes the whole lineage per count)
-    deduped.persist(StorageLevel.MEMORY_AND_DISK)
-    val dedupCount = deduped.count()
-    val pivotCount = pivoted.count()
+      Sink.writePartitioned(mart, cfg.outputPath, cfg.partitionCols, cfg.writeMode)
 
-    mart.persist(StorageLevel.MEMORY_AND_DISK)
-    val enrichedCount = mart.count()
+      // re-read with the mart's declared schema: bare partition discovery
+      // would type-infer month='01' back to int 1, silently breaking the
+      // string-partition contract (and month=1 vs month='01' pruning)
+      val written = spark.read.schema(mart.schema).parquet(cfg.outputPath)
+      written.createOrReplaceTempView(viewName)
 
-    Transforms.requireColumns(mart)
-    val auditRow = Transforms.nullAudit(mart).collect()(0)
-    val audit = Schemas.criticalColumns.zipWithIndex
-      .map { case (c, i) => c -> auditRow.getLong(i) }.toMap
-    require(audit.values.forall(_ == 0L), s"null critical columns: $audit")
-
-    Sink.writePartitioned(mart, cfg.outputPath, cfg.partitionCols, cfg.writeMode)
-
-    // re-read with the mart's declared schema: bare partition discovery
-    // would type-infer month='01' back to int 1, silently breaking the
-    // string-partition contract (and month=1 vs month='01' pruning)
-    val written = spark.read.schema(mart.schema).parquet(cfg.outputPath)
-    written.createOrReplaceTempView(viewName)
-
-    deduped.unpersist()
-    (mart, Metrics(rawCount, dedupCount, pivotCount, enrichedCount, audit))
-  }
-
-  /** [[run]]'s zero-extra-pass twin: every metric the reference logs
-    * (raw/dedup/pivot/enriched counts + the critical-column null audit)
-    * is collected by `Observation` DURING the single mart-write action —
-    * no persist, no count actions, no second scan of the mart. At 100 TB
-    * this removes a MEMORY_AND_DISK spill of the whole dataset plus four
-    * extra jobs; the trade is that validation becomes post-write (the
-    * audit `require` fires AFTER data landed), so pair it with
-    * `writeMode = "overwrite-dynamic"` when reruns must be idempotent.
-    * [[run]] stays the reference-parity default (gate before write),
-    * same opt-in pattern as the overwrite-dynamic sink mode.
-    *
-    * Observations live ONLY on the scan→dedup→pivot→mart spine, which
-    * executes exactly once per write. The enrich metadata branch
-    * re-derives `parsed` WITHOUT observations: it runs as a separate
-    * (broadcast-build) job over the same scan, and a CollectMetrics node
-    * reached by two jobs in one action would double-count.
-    */
-  def runObserved(spark: SparkSession, cfg: Schemas.JobConfig, viewName: String = "vietnam"): (DataFrame, Metrics) = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit, when}
-    val obsRaw = Observation(); val obsDedup = Observation()
-    val obsPivot = Observation(); val obsMart = Observation()
-
-    val raw = readRaw(spark, cfg).observe(obsRaw, count(lit(1)).as("n"))
-    val parsed = raw
-      .transform(Transforms.parseDatetime)
-      .transform(Transforms.dropInvalidDatetime)
-      .transform(Transforms.derivePartitions)
-    val dedupKeys = Seq("location_id", "datetime")
-    val deduped = (if (cfg.deterministicDedup)
-        parsed.transform(Transforms.dedupByRank(dedupKeys, Seq(col("parameter"), col("value"))))
-      else
-        parsed.transform(Transforms.dedupByRank(dedupKeys, Nil)))
-      .observe(obsDedup, count(lit(1)).as("n"))
-    val pivoted = deduped
-      .transform(Transforms.pivotParameters(values = cfg.pivotValues))
-      .observe(obsPivot, count(lit(1)).as("n"))
-
-    // unobserved metadata branch (see scaladoc)
-    val metaParsed = readRaw(spark, cfg)
-      .transform(Transforms.parseDatetime)
-      .transform(Transforms.dropInvalidDatetime)
-      .transform(Transforms.derivePartitions)
-    val meta = Transforms.buildMetadata(metaParsed)
-
-    val martBase = pivoted
-      .withColumn("location_id", col("location_id").cast("string"))
-      .transform(Transforms.enrich(meta))
-      .transform(Transforms.fillDefaults)
-    Transforms.requireColumns(martBase)
-    // same expressions as Transforms.nullAudit, riding the write pass
-    val auditExprs = Schemas.criticalColumns
-      .map(c => count(when(col(c).isNull, 1)).as(c))
-    val mart = martBase.observe(
-      obsMart, count(lit(1)).as("n"), auditExprs: _*)
-
-    Sink.writePartitioned(mart, cfg.outputPath, cfg.partitionCols, cfg.writeMode)
-
-    val martRow = obsMart.get
-    val audit = Schemas.criticalColumns.map(c => c -> martRow(c).asInstanceOf[Long]).toMap
-    require(audit.values.forall(_ == 0L), s"null critical columns: $audit")
-
-    val written = spark.read.schema(mart.schema).parquet(cfg.outputPath)
-    written.createOrReplaceTempView(viewName)
-
-    (mart, Metrics(
-      obsRaw.get("n").asInstanceOf[Long],
-      obsDedup.get("n").asInstanceOf[Long],
-      obsPivot.get("n").asInstanceOf[Long],
-      martRow("n").asInstanceOf[Long],
-      audit))
+      def n(o: Observation): Long = o.get("n").asInstanceOf[Long]
+      (mart, Metrics(n(obsRaw), n(obsDedup), n(obsPivot), n(obsMart), audit))
+    } finally mart.unpersist()
   }
 }
 
 /** S3/S4 — sinks. */
 object Sink {
+
+  /** The modes [[writePartitioned]] accepts (lower case): Spark's save
+    * modes plus `overwrite-dynamic`.
+    */
+  val writeModes: Set[String] = Set(
+    "overwrite-dynamic", "overwrite", "append", "ignore", "error", "errorifexists", "default")
 
   /** Partitioned Parquet mart sink (reference
     * `glue_jobs/process_openaq_raw.py:249-256`): repartition by the
@@ -212,7 +155,8 @@ object Sink {
   /** `mode="overwrite-dynamic"` is the opt-in exactly-once upgrade
     * (SURVEY §7.4#4): only partitions present in this batch are replaced,
     * making re-runs idempotent, while default `append` keeps the
-    * reference's duplicate-on-rerun behavior bit-for-bit.
+    * reference's duplicate-on-rerun behavior bit-for-bit. Any other mode
+    * is passed to `DataFrameWriter.mode`; modes match case-insensitively.
     */
   def writePartitioned(
       df: DataFrame,
@@ -220,7 +164,7 @@ object Sink {
       partitionCols: Seq[String] = Seq("year", "month", "day"),
       mode: String = "append",
       sortCols: Seq[String] = Seq("location_id", "datetime")): Unit = {
-    val (sparkMode, dynamic) = mode match {
+    val (sparkMode, dynamic) = mode.toLowerCase(java.util.Locale.ROOT) match {
       case "overwrite-dynamic" => ("overwrite", true)
       case m                   => (m, false)
     }

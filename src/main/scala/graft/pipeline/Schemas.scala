@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
   * which is the root cause of its VoidType bug class (all-null JSON columns
   * infer as null type, regression test reference
   * `tests/test_glue_complete.py:222-265`). The Spark-idiomatic fix is to
-  * declare every input schema up front — inference remains available via
-  * [[OpenAqPipeline]]'s `inferSchema` option for compatibility testing.
+  * declare every input schema up front; [[OpenAqPipeline.readRaw]] always
+  * reads with [[rawMeasurement]].
   */
 object Schemas {
 
@@ -113,8 +113,8 @@ object Schemas {
   val pollutants: Seq[String] = Seq("pm25", "pm10", "no2", "so2", "o3", "co", "bc")
 
   /** The 15-column mart contract (FIXTURES F6; reference
-    * `tests/test_glue_output_schema.py:44-60`). `bc` is dynamic — present
-    * only when the input contains it.
+    * `tests/test_glue_output_schema.py:44-60`). The mart also always
+    * carries `bc`, since the pivot values are fixed to [[pollutants]].
     */
   val martColumns: Seq[String] = Seq(
     "location_id", "datetime", "year", "month", "day",
@@ -129,17 +129,21 @@ object Schemas {
 
   /** Job configuration mirroring the Glue job args (reference
     * `glue_jobs/process_openaq_raw.py:65-84`): `--input_path`,
-    * `--output_path`, `--env`, `--partition_cols`.
+    * `--output_path`, `--env`, `--partition_cols`, plus the sink's
+    * `--write_mode`. A bad write mode or an empty partition-column name
+    * fails here, at construction, before any job runs.
     */
   final case class JobConfig(
       inputPath: String,
       outputPath: String,
       env: String = "dev",
       partitionCols: Seq[String] = Seq("year", "month", "day"),
-      pivotValues: Option[Seq[String]] = Some(pollutants),
-      deterministicDedup: Boolean = true,
-      inferSchema: Boolean = false,
-      writeMode: String = "append")
+      writeMode: String = "append") {
+    require(Sink.writeModes.contains(writeMode.toLowerCase(java.util.Locale.ROOT)),
+      s"unknown write mode '$writeMode'; expected one of ${Sink.writeModes.toSeq.sorted.mkString(", ")}")
+    require(partitionCols.forall(_.trim.nonEmpty),
+      s"empty partition column name in ${partitionCols.mkString("[", ",", "]")}")
+  }
 
   /** Country code → mart table-folder name (reference
     * `pipelines/glue_pipeline.py:167-168`).

@@ -47,24 +47,15 @@ object Transforms {
     * (`location_id`,`datetime`) — a constant within the partition, so the
     * survivor is whatever row the shuffle delivered first
     * (`glue_jobs/process_openaq_raw.py:131-135`, acknowledged at
-    * `doc/GLUE_JOBS_GUIDE.md:214-221`). `tieBreak` adds a documented
-    * deterministic tie-breaker; pass `Nil` for the bit-compatible
-    * nondeterministic mode.
+    * `doc/GLUE_JOBS_GUIDE.md:214-221`). `tieBreak` orders the rows within
+    * a key instead, so the survivor is deterministic.
     */
   def dedupByRank(keys: Seq[String], tieBreak: Seq[Column]): DataFrame => DataFrame = { df =>
-    val order = if (tieBreak.nonEmpty) tieBreak else Seq(col(keys.last))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(tieBreak: _*)
     df.withColumn("row_num", row_number().over(w))
       .filter(col("row_num") === 1)
       .drop("row_num")
   }
-
-  /** Simpler Spark-native dedup for the same grain — `dropDuplicates`
-    * avoids the full sort inside each window partition. Survivor is
-    * arbitrary (same guarantee as the reference's mode).
-    */
-  def dedupDropDuplicates(keys: Seq[String]): DataFrame => DataFrame =
-    _.dropDuplicates(keys)
 
   /** A1 — the core long→wide pivot:
     * `groupBy(location_id, datetime, year, month, day).pivot(parameter)
@@ -144,7 +135,13 @@ object Transforms {
   }
 
   def nullAudit(df: DataFrame, cols: Seq[String] = Schemas.criticalColumns): DataFrame =
-    df.select(cols.map(c => count(when(col(c).isNull, 1)).as(c)): _*)
+    df.select(nullCounts(cols): _*)
+
+  /** The null audit's aggregates (one null count per column, named after
+    * it), shared with the mart observation in [[OpenAqPipeline.run]].
+    */
+  def nullCounts(cols: Seq[String] = Schemas.criticalColumns): Seq[Column] =
+    cols.map(c => count(when(col(c).isNull, 1)).as(c))
 
   /** P10 — data-quality range predicates (reference
     * `tests/test_glue_transformation.py:198-253`): keep rows with sane

@@ -288,7 +288,7 @@ private[queries] object CatalogRoundtrip {
     // its tie-break spells NULLS FIRST because Spark's window asc is
     // nulls-first while DuckDB defaults nulls-last. Staging + oracle are
     // shared with q152 ([[stagedRawFrame]] / [[rawPipelineOracleSql]])
-    // so the plain and the observed dataflow gates cannot drift.
+    // so the bare-transform and the full-job gates cannot drift.
     "q147_raw_pipeline" -> QueryDef(
       fn = (s, d) => {
         val base = java.nio.file.Files.createTempDirectory("graft-rawpipe")
@@ -313,16 +313,16 @@ private[queries] object CatalogRoundtrip {
       oracle = Some(rawPipelineOracleSql(""))),
 
     // §2.11 + A3/A4 under the oracle gate: the SAME staged raw data as
-    // q147, through [[graft.pipeline.OpenAqPipeline.runObserved]] — the
-    // zero-extra-pass twin that collects every reference-logged metric
-    // by Observation DURING the one write action. The result carries the
+    // q147, through the full job [[graft.pipeline.OpenAqPipeline.run]],
+    // which collects every reference-logged metric by Observation during
+    // its one materialization of the mart. The result carries the
     // observed counts as constant columns, so the oracle proves BOTH
     // claims at once: (a) the instrumented pipeline emits the
     // byte-identical mart, and (b) raw/dedup/pivot/mart counts match an
     // independent SQL recomputation. The CollectMetrics double-count
-    // hazard runObserved's scaladoc designs around (a broadcast metadata
-    // branch re-reading an observed scan) would surface here as n_raw
-    // doubling → hash red.
+    // hazard run's scaladoc designs around (a broadcast metadata branch
+    // re-reading an observed scan) would surface here as n_raw doubling
+    // → hash red.
     "q152_observed_pipeline" -> QueryDef(
       fn = (s, d) => {
         val base = java.nio.file.Files.createTempDirectory("graft-obspipe")
@@ -332,14 +332,14 @@ private[queries] object CatalogRoundtrip {
             inputPath = s"$base/raw", outputPath = s"$base/out",
             writeMode = "overwrite-dynamic")
           val (_, m) = graft.pipeline.OpenAqPipeline
-            .runObserved(s, cfg, viewName = "q152_mart")
+            .run(s, cfg, viewName = "q152_mart")
           // read the mart BACK from the registered view over the written
-          // parquet rather than re-materializing the logical frame: the
-          // write already executed the whole lineage once (that's what
-          // the Observations rode), and the round trip through the sink
-          // is the stronger gate — byte-level through partitioned
-          // parquet, string partition values preserved by the declared
-          // schema (see run's re-read comment)
+          // parquet rather than re-materializing the logical frame: run
+          // already executed the whole lineage once (that's what the
+          // Observations rode), and the round trip through the sink is
+          // the stronger gate — byte-level through partitioned parquet,
+          // string partition values preserved by the declared schema
+          // (see run's re-read comment)
           s.table("q152_mart")
             .withColumn("year", col("year").cast("long"))
             .withColumn("n_raw", lit(m.rawCount))
@@ -395,9 +395,9 @@ private[queries] object CatalogRoundtrip {
       lit("2024-06-01T00:00:00Z").as("extracted_at"))
   }
 
-  /** The mart-rebuild oracle shared VERBATIM by q147 (plain `transform`)
-    * and q152 (`runObserved`) — identical mart rows are the
-    * plain/observed parity claim; `extraCols` appends q152's
+  /** The mart-rebuild oracle shared VERBATIM by q147 (bare `transform`)
+    * and q152 (the full `run`) — identical mart rows are the
+    * transform/run parity claim; `extraCols` appends q152's
     * observed-count columns (scalar subqueries over the same CTEs).
     */
   private def rawPipelineOracleSql(extraCols: String): String = s"""

@@ -2,15 +2,19 @@ package graft.pipeline
 
 import graft.GraftSpark
 import java.nio.file.Files
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.{ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end pipeline acceptance mirroring the reference's full-flow test
   * (reference `tests/test_glue_complete.py:267-319,326-406`): NDJSON in,
   * 15-column mart out, partitioned parquet on disk, analytics over the
   * registered view.
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TimeLimits {
   lazy val spark = GraftSpark.spark
 
   private val ndjson = Seq(
@@ -30,12 +34,17 @@ class PipelineSpec extends AnyFunSuite {
       ndjson.mkString("\n").getBytes("UTF-8"))
 
     val cfg = Schemas.JobConfig(inputPath = inDir.getAbsolutePath, outputPath = outDir)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     val (mart, metrics) = OpenAqPipeline.run(spark, cfg, viewName = "vietnam_test")
 
     assert(metrics.rawCount == 5)
     assert(metrics.dedupCount == 2)     // invalid dropped; (18,10:00) deduped; loc 2
+    assert(metrics.pivotCount == 2)
     assert(metrics.enrichedCount == 2)
-    assert(metrics.nullAudit.values.forall(_ == 0L))
+    assert(metrics.nullAudit == Schemas.criticalColumns.map(_ -> 0L).toMap)
+    // run owns its cache: nothing it persisted outlives it
+    assert(mart.storageLevel == StorageLevel.NONE)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
 
     // 15-column contract (FIXTURES F6)
     val sch = mart.schema
@@ -62,27 +71,49 @@ class PipelineSpec extends AnyFunSuite {
     assert(top.count() == 2)
   }
 
-  test("runObserved: identical metrics and mart via Observation, no extra pass") {
-    val inDir = Files.createTempDirectory("graft-in-obs").toFile
-    Files.write(new java.io.File(inDir, "raw_1.json").toPath,
-      ndjson.mkString("\n").getBytes("UTF-8"))
-    val outA = Files.createTempDirectory("graft-out-obs-a").toFile.getAbsolutePath + "/mart"
-    val outB = Files.createTempDirectory("graft-out-obs-b").toFile.getAbsolutePath + "/mart"
+  test("a null critical column fails run before anything is written") {
+    val inDir = Files.createTempDirectory("graft-in-gate").toFile
+    val outDir = Files.createTempDirectory("graft-out-gate").toFile.getAbsolutePath + "/mart"
+    Files.write(new java.io.File(inDir, "raw_1.json").toPath, (ndjson :+
+      """{"location_id":null,"datetime":"2024-01-15T12:00:00Z","parameter":"pm25","value":9.0,"unit":"u","city":"Hue","country":"VN","latitude":16.4,"longitude":107.6}""")
+      .mkString("\n").getBytes("UTF-8"))
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      OpenAqPipeline.run(spark,
+        Schemas.JobConfig(inputPath = inDir.getAbsolutePath, outputPath = outDir),
+        viewName = "v_gate")
+    }
+    assert(e.getMessage.contains("location_id -> 1"), e.getMessage)
+    val out = new java.io.File(outDir)
+    assert(!out.exists() || FileUtils.listFiles(out, Array("parquet"), true).isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+  }
 
-    val (_, mRun) = OpenAqPipeline.run(spark,
-      Schemas.JobConfig(inputPath = inDir.getAbsolutePath, outputPath = outA),
-      viewName = "obs_run")
-    val (_, mObs) = OpenAqPipeline.runObserved(spark,
-      Schemas.JobConfig(inputPath = inDir.getAbsolutePath, outputPath = outB),
-      viewName = "obs_observed")
+  test("an empty raw zone gives all-zero metrics without hanging on Observation.get") {
+    val inDir = Files.createTempDirectory("graft-in-empty").toFile
+    val outDir = Files.createTempDirectory("graft-out-empty").toFile.getAbsolutePath + "/mart"
+    val (_, m) = failAfter(Span(180, Seconds)) {
+      OpenAqPipeline.run(spark,
+        Schemas.JobConfig(inputPath = inDir.getAbsolutePath, outputPath = outDir),
+        viewName = "v_empty")
+    }(ThreadSignaler)
+    assert(m == OpenAqPipeline.Metrics(0L, 0L, 0L, 0L,
+      Schemas.criticalColumns.map(_ -> 0L).toMap))
+    assert(spark.table("v_empty").count() == 0L)
+  }
 
-    assert(mObs == mRun) // every count + the full null-audit map
-    // written marts are row-identical (compare on the deterministic key)
-    val a = spark.read.parquet(outA).selectExpr("location_id", "datetime", "pm25")
-      .collect().map(_.toString).sorted.toSeq
-    val b = spark.read.parquet(outB).selectExpr("location_id", "datetime", "pm25")
-      .collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.nonEmpty)
+  test("JobConfig rejects a bad write mode or an empty partition column at construction") {
+    def cfg(mode: String, parts: Seq[String] = Seq("year", "month", "day")) =
+      Schemas.JobConfig(inputPath = "/in", outputPath = "/out", partitionCols = parts,
+        writeMode = mode)
+    Seq("append", "overwrite", "overwrite-dynamic", "Overwrite-Dynamic", "ignore",
+        "error", "errorifexists", "default").foreach(m => assert(cfg(m).writeMode == m))
+    val bad = intercept[IllegalArgumentException](cfg("upsert")).getMessage
+    assert(bad.contains("unknown write mode 'upsert'") && bad.contains("overwrite-dynamic"), bad)
+    Seq(Seq("year", ""), Seq(" "), Seq("")).foreach { parts =>
+      val m = intercept[IllegalArgumentException](cfg("append", parts)).getMessage
+      assert(m.contains("empty partition column name"), m)
+    }
   }
 
   test("quarantined read splits malformed lines from valid rows") {
@@ -120,17 +151,14 @@ class PipelineSpec extends AnyFunSuite {
       """{"location_id":7,"datetime":"2024-01-15T10:00:00Z","parameter":"pm25","value":5.0,"unit":"u","city":null,"country":null,"latitude":null,"longitude":null}""")
     Files.write(new java.io.File(inDir, "raw.json").toPath,
       rows.mkString("\n").getBytes("UTF-8"))
-    val outDir = Files.createTempDirectory("graft-out3").toFile.getAbsolutePath + "/mart"
-    val cfg = Schemas.JobConfig(inputPath = inDir.getAbsolutePath,
-      outputPath = outDir, inferSchema = true)
-    val (mart, metrics) = OpenAqPipeline.run(spark, cfg, viewName = "v3")
-    assert(metrics.enrichedCount == 1)
-    assert(mart.head().getAs[String]("city_name") == "Unknown")
-    // the declared-schema default path is immune by construction: same
-    // all-null input, same mart — and the all-null columns carry their
-    // declared types, not whatever inference produced
     val declared = Schemas.JobConfig(inputPath = inDir.getAbsolutePath,
-      outputPath = Files.createTempDirectory("graft-out3b").toFile.getAbsolutePath + "/mart")
+      outputPath = Files.createTempDirectory("graft-out3").toFile.getAbsolutePath + "/mart")
+    val (_, _, mart) = OpenAqPipeline.transform(spark.read.json(inDir.getAbsolutePath), declared)
+    assert(mart.count() == 1)
+    assert(mart.head().getAs[String]("city_name") == "Unknown")
+    // the declared-schema job is immune by construction: same all-null
+    // input, same mart — and the all-null columns carry their declared
+    // types, not whatever inference produced
     val (mart2, metrics2) = OpenAqPipeline.run(spark, cfg = declared, viewName = "v3b")
     assert(metrics2.enrichedCount == 1)
     assert(mart2.head().getAs[String]("city_name") == "Unknown")

@@ -68,15 +68,6 @@ class TransformsSpec extends AnyFunSuite {
     assert(df.count() == 2)
   }
 
-  test("dedupDropDuplicates keeps one row per key (arbitrary survivor mode)") {
-    val df = rawDf(Seq(
-      (18L, "2024-01-15T10:00:00Z", "pm25", 45.5, "Hanoi", "VN"),
-      (18L, "2024-01-15T10:00:00Z", "pm25", 99.9, "Hanoi", "VN")))
-      .transform(Transforms.parseDatetime)
-      .transform(Transforms.dedupDropDuplicates(Seq("location_id", "datetime")))
-    assert(df.count() == 1)
-  }
-
   test("pivotParameters merges one row per key with pollutant columns; mean resolves dups") {
     val df = rawDf(Seq(
       (18L, "2024-01-15T10:00:00Z", "pm25", 40.0, "Hanoi", "VN"),
