@@ -350,8 +350,8 @@ object Catalog {
 
   /** Stage the events table into a temp directory for the file-stream
     * source (which monitors directories), tolerating both the single-file
-    * and the directory-of-part-files layouts. Caller deletes via
-    * [[dropStaged]] once the streaming query has materialized.
+    * and the directory-of-part-files layouts. The caller drops it with
+    * [[dropStaged]] in a `finally` around the whole stream run.
     *
     * HARNESS PLUMBING ONLY — this driver-side file copy exists because the
     * oracle harness hands us one static parquet file, while
@@ -373,10 +373,57 @@ object Catalog {
       dir
     }
 
-  /** Recursive variant for staged trees (parquet WRITES create nested
-    * dirs + _SUCCESS markers that the flat [[dropStaged]] can't clear).
+  /** Stage `slices` as one parquet file each (`slice00.parquet`, ...) in a
+    * fresh temp directory, with strictly increasing mtimes. Read back with
+    * `stagedEventsStream(.., oneFilePerTrigger = true)`, FileStreamSource
+    * feeds the files oldest-first, so micro-batch k is exactly slice k —
+    * the batch sequence the sliced streams' oracles replay. Drop with
+    * [[dropStaged]] in a `finally`; a failed write drops the directory
+    * itself. The slice writes are query work and stay off
+    * [[StagingClock]]; only the delete of their write directory is timed.
     */
-  private[queries] def dropStagedTree(dir: java.nio.file.Path): Unit =
+  private[queries] def stageSlices(slices: Seq[DataFrame]): java.nio.file.Path = {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-stream-slices")
+    try {
+      // '_'-prefixed: the file source never lists it
+      val work = dir.resolve("_slice")
+      slices.zipWithIndex.foreach { case (slice, i) =>
+        slice.coalesce(1).write.mode("overwrite").parquet(work.toString)
+        val part = {
+          val l = Files.list(work)
+          try l.filter(f => f.getFileName.toString.endsWith(".parquet"))
+            .findFirst().get
+          finally l.close()
+        }
+        val dst = dir.resolve(f"slice$i%02d.parquet")
+        Files.move(part, dst)
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+      }
+      dropStaged(work)
+      dir
+    } catch { case e: Throwable => dropStaged(dir); throw e }
+  }
+
+  /** Which third of the events' time span each row falls in: with
+    * c0 = lo + span/3 and c1 = lo + 2*span/3 in epoch millis, 0 for
+    * ms <= c0, 1 for ms <= c1, else 2 — the slicing the sliced streams'
+    * oracles spell as `CASE WHEN epoch_ms(ts) <= c0 THEN 0 ...`. Costs
+    * one bounded scalar aggregate.
+    */
+  private[queries] def timeThird(ev: DataFrame): Column = {
+    val ms = unix_millis(col("ts"))
+    val b = ev.agg(min(ms), max(ms)).head
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    when(ms <= lo + (hi - lo) / 3, 0).when(ms <= lo + 2 * (hi - lo) / 3, 1)
+      .otherwise(2)
+  }
+
+  /** Recursive delete of a staged directory (flat copies and parquet
+    * write trees with their nested dirs and `_SUCCESS` markers alike).
+    */
+  private[queries] def dropStaged(dir: java.nio.file.Path): Unit =
     StagingClock.timed {
       val walk = java.nio.file.Files.walk(dir)
       try walk.sorted(java.util.Comparator.reverseOrder())
@@ -384,16 +431,7 @@ object Catalog {
       finally walk.close()
     }
 
-  private[queries] def dropStaged(dir: java.nio.file.Path): Unit =
-    StagingClock.timed {
-      val staged = java.nio.file.Files.list(dir)
-      try staged.forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally staged.close()
-      java.nio.file.Files.deleteIfExists(dir)
-      ()
-    }
-
-  /** Streaming reader over a staged events dir that is agnostic to the
+  /** The one streaming reader over a staged directory, agnostic to the
     * file's `ts` encoding. `readStream` needs a declared schema, so we take
     * it from the actual parquet footer (one cheap batch-read of the staged
     * copy) rather than hardcoding an assumption — the driver has already
@@ -401,19 +439,26 @@ object Catalog {
     * turns that flip into a silent 1000× time-axis compression. The footer
     * schema plus [[graft.Tables.normalizeTs]] yields session-TZ
     * `TimestampType` for every encoding, identical to the batch path.
+    * `oneFilePerTrigger` feeds one file per micro-batch (the
+    * [[stageSlices]] contract); otherwise one batch reads every file.
     */
-  private[queries] def stagedEventsStream(s: SparkSession, dir: java.nio.file.Path): DataFrame = {
+  private[queries] def stagedEventsStream(s: SparkSession, dir: java.nio.file.Path,
+      oneFilePerTrigger: Boolean = false): DataFrame = {
     val footer = s.read.parquet(dir.toString).schema
-    Tables.normalizeTs(s.readStream.schema(footer).parquet(dir.toString))
+    val reader = s.readStream.schema(footer)
+    Tables.normalizeTs((if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", 1)
+      else reader).parquet(dir.toString))
   }
 
+  private val StreamingShufflePartitions = 8L
+
   /** Cloned session for a streaming harness query, with
-    * `spark.sql.shuffle.partitions` scoped DOWN (default 8, overridable
-    * via `graft.streaming.shufflePartitions` on the parent). Streaming
-    * state-store cost is per-partition PER MICRO-BATCH — every batch
-    * opens, updates, snapshots, and commits one store per shuffle
-    * partition, so a 4-batch replay at the batch engine's 32 partitions
-    * pays 128 store commits for ~100k rows of state (r12 bench: ~2.2 s
+    * `spark.sql.shuffle.partitions` scoped DOWN to a fixed 8
+    * ([[StreamingShufflePartitions]]). Streaming state-store cost is
+    * per-partition PER MICRO-BATCH — every batch opens, updates,
+    * snapshots, and commits one store per shuffle partition, so a
+    * 4-batch replay at the batch engine's 32 partitions pays 128 store
+    * commits for ~100k rows of state (r12 bench: ~2.2 s
     * of fixed cost per batch, the whole q160 floor). A real deployment
     * sizes this to state volume / executor count, not to the batch
     * engine's scan parallelism; 8 gives ~12k state rows per store at
@@ -425,15 +470,14 @@ object Catalog {
   private[queries] def streamingSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     Tables.requiredConfs.foreach { case (k, v) => ss.conf.set(k, v) }
-    val parts = try s.conf.get("graft.streaming.shufflePartitions")
-      catch { case _: Throwable => "8" }
-    ss.conf.set("spark.sql.shuffle.partitions", parts)
+    ss.conf.set("spark.sql.shuffle.partitions", StreamingShufflePartitions)
     ss
   }
 
   /** Per-batch StreamingQueryProgress capture (r11 verdict #5): every
     * streaming runner records each micro-batch's (query, batchId,
-    * triggerExecution ms, input rows) here before stopping its query;
+    * triggerExecution ms, input rows) here exactly once, before stopping
+    * its query ([[runToMemoryTable]] does it for the memory-sink runners);
     * Bench drains the buffer per SAMPLE into the side file, so a
     * q239/q160-class bench anomaly can be attributed to batch 0 vs
     * steady state from the artifact alone, without a rerun.
@@ -463,24 +507,19 @@ object Catalog {
       synchronized { val r = buf.toVector; buf.clear(); r }
   }
 
-  /** Run a streaming frame to a complete-mode memory sink and return the
-    * materialized table (stopping any prior query of the same name so the
-    * entry is re-runnable). Per-batch progress lands in [[ProgressLog]].
+  /** Run a streaming frame to a memory sink through
+    * [[graft.streaming.StreamingIngest.runToMemory]] (which stops any
+    * prior query of the same name, so the entry is re-runnable), record
+    * its per-batch progress in [[ProgressLog]] once, stop it in a
+    * `finally`, and return the materialized table. The table lives in the
+    * STREAM's session (possibly a [[streamingSession]] clone), so
+    * everything derives from `agg`'s session.
     */
-  private[queries] def runToMemoryTable(agg: DataFrame, name: String): DataFrame = {
-    // the memory sink registers its table in the STREAM's session (which
-    // may be a streamingSession clone) — resolve both the prior-query
-    // guard and the table there; everything derives from agg's session,
-    // so no session parameter (a dead one would invite callers to
-    // believe the passed session matters, r13 ADVICE)
-    val ss = agg.sparkSession
-    ss.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    ProgressLog.record(q)
-    q.stop()
-    ss.table(name)
+  private[queries] def runToMemoryTable(agg: DataFrame, name: String,
+      outputMode: String = "complete"): DataFrame = {
+    val q = graft.streaming.StreamingIngest.runToMemory(agg, name, outputMode)
+    try ProgressLog.record(q) finally q.stop()
+    agg.sparkSession.table(name)
   }
 
   /** J3's static lookup table (the reference hardcodes location→city; we

@@ -405,12 +405,12 @@ private[queries] object CatalogAnalytics {
     "q48_stream_hour_agg" -> QueryDef(
       fn = (s, d) => {
         val dir = stageEventsDir(d)
-        val stream = stagedEventsStream(streamingSession(s), dir)
-        val agg = stream
-          .groupBy(window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("cnt"), exactSum(col("value")).as("sum_value"))
-        val table = runToMemoryTable(agg, "q48_mem")
-        dropStaged(dir)
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir)
+            .groupBy(window(col("ts"), "1 hour"))
+            .agg(count(lit(1)).as("cnt"), exactSum(col("value")).as("sum_value"))
+          runToMemoryTable(agg, "q48_mem")
+        } finally dropStaged(dir)
         table
           .select(col("window.start").as("hour"), col("cnt"), col("sum_value"))
           .orderBy("hour")
@@ -828,14 +828,14 @@ private[queries] object CatalogAnalytics {
     "q60_stream_dedup_count" -> QueryDef(
       fn = (s, d) => {
         val dir = stageEventsDir(d)
-        val stream = stagedEventsStream(streamingSession(s), dir)
-        val agg = stream
-          .select("user_id", "event_type")
-          .dropDuplicates("user_id", "event_type")
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_users"))
-        val table = runToMemoryTable(agg, "q60_mem")
-        dropStaged(dir)
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir)
+            .select("user_id", "event_type")
+            .dropDuplicates("user_id", "event_type")
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n_users"))
+          runToMemoryTable(agg, "q60_mem")
+        } finally dropStaged(dir)
         table.orderBy("event_type")
       },
       oracle = Some("""

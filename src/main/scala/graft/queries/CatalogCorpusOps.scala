@@ -511,15 +511,14 @@ private[queries] object CatalogCorpusOps {
       fn = (s, d) => {
         val dir = stageEventsDir(d)
         val ss = streamingSession(s)
-        val stream = stagedEventsStream(ss, dir)
-          .select("user_id", "ts", "event_type")
-        val frontiers = graft.ops.Funnel.streamingFunnel(ss, stream,
-          funnelStepSeq, maxSpanMicros = Some(7L * 24 * 3600 * 1000000L))
-        val q = graft.streaming.StreamingIngest.runToMemory(
-          frontiers.toDF(), "q104_mem", outputMode = "update")
-        q.stop()
-        dropStaged(dir)
-        val folded = ss.table("q104_mem").groupBy("user_id")
+        val table = try {
+          val stream = stagedEventsStream(ss, dir)
+            .select("user_id", "ts", "event_type")
+          val frontiers = graft.ops.Funnel.streamingFunnel(ss, stream,
+            funnelStepSeq, maxSpanMicros = Some(7L * 24 * 3600 * 1000000L))
+          runToMemoryTable(frontiers.toDF(), "q104_mem", outputMode = "update")
+        } finally dropStaged(dir)
+        val folded = table.groupBy("user_id")
           .agg(min(col("reached").getItem(0)).as("__t0"),
             funnelStepSeq.indices.tail.map(i =>
               min(col("reached").getItem(i)).as(s"__t$i")): _*)
@@ -542,19 +541,19 @@ private[queries] object CatalogCorpusOps {
         val docs = t(s, d, "documents")
         val base = java.nio.file.Files.createTempDirectory("graft-evolve")
         val p1 = s"$base/v1"; val p2 = s"$base/v2"
-        docs.filter(col("doc_id") % 2 === 0)
-          .select("doc_id", "source")
-          .write.mode("overwrite").parquet(p1)
-        docs.filter(col("doc_id") % 2 =!= 0)
-          .select("doc_id", "source", "lang")
-          .write.mode("overwrite").parquet(p2)
-        val out = s.read.option("mergeSchema", "true").parquet(p1, p2)
-          .groupBy(coalesce(col("lang"), lit("__absent__")).as("lang"))
-          .agg(count(lit(1)).as("n"), min("doc_id").as("min_id"))
-          .orderBy("lang")
-          .localCheckpoint(true)
-        dropStagedTree(base)
-        out
+        try {
+          docs.filter(col("doc_id") % 2 === 0)
+            .select("doc_id", "source")
+            .write.mode("overwrite").parquet(p1)
+          docs.filter(col("doc_id") % 2 =!= 0)
+            .select("doc_id", "source", "lang")
+            .write.mode("overwrite").parquet(p2)
+          s.read.option("mergeSchema", "true").parquet(p1, p2)
+            .groupBy(coalesce(col("lang"), lit("__absent__")).as("lang"))
+            .agg(count(lit(1)).as("n"), min("doc_id").as("min_id"))
+            .orderBy("lang")
+            .localCheckpoint(true)
+        } finally dropStaged(base)
       },
       oracle = Some("""
         SELECT CASE WHEN doc_id % 2 = 0 THEN '__absent__' ELSE lang END AS lang,

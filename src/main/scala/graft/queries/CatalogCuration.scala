@@ -934,14 +934,15 @@ private[queries] object CatalogCuration {
     "q237_stream_dedup_ttl" -> QueryDef(
       fn = (s, d) => {
         val dir = stageEventsDir(d)
-        val stream = stagedEventsStream(streamingSession(s), dir)
-          .withWatermark("ts", "30 days")
-          .select(col("user_id"), col("event_type"), col("ts"))
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-        val agg = stream.groupBy("event_type")
-          .agg(count(lit(1)).as("n_users"))
-        val table = runToMemoryTable(agg, "q237_mem")
-        dropStaged(dir)
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir)
+            .withWatermark("ts", "30 days")
+            .select(col("user_id"), col("event_type"), col("ts"))
+            .dropDuplicatesWithinWatermark("user_id", "event_type")
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n_users"))
+          runToMemoryTable(agg, "q237_mem")
+        } finally dropStaged(dir)
         table.orderBy("event_type")
       },
       oracle = Some("""
@@ -1046,17 +1047,18 @@ private[queries] object CatalogCuration {
     "q239_stream_static_join" -> QueryDef(
       fn = (s, d) => {
         val dir = stageEventsDir(d)
-        val profile = t(s, d, "events").groupBy("user_id")
-          .agg(count(lit(1)).as("__n"))
-          .select(col("user_id"), expr("__n div 10").as("bucket"))
-          .localCheckpoint(eager = true) // build dim ONCE, not per batch
-        val stream = stagedEventsStream(streamingSession(s), dir)
-          .select(col("user_id"))
-          .join(profile, Seq("user_id")) // static side: micro-batch hash join
-        val agg = stream.groupBy("bucket")
-          .agg(count(lit(1)).as("n_events"))
-        val table = runToMemoryTable(agg, "q239_mem")
-        dropStaged(dir)
+        val table = try {
+          val profile = t(s, d, "events").groupBy("user_id")
+            .agg(count(lit(1)).as("__n"))
+            .select(col("user_id"), expr("__n div 10").as("bucket"))
+            .localCheckpoint(eager = true) // build dim ONCE, not per batch
+          val agg = stagedEventsStream(streamingSession(s), dir)
+            .select(col("user_id"))
+            .join(profile, Seq("user_id")) // static side: micro-batch hash join
+            .groupBy("bucket")
+            .agg(count(lit(1)).as("n_events"))
+          runToMemoryTable(agg, "q239_mem")
+        } finally dropStaged(dir)
         table.orderBy("bucket")
       },
       oracle = Some("""

@@ -672,12 +672,13 @@ private[queries] object CatalogGraphMining {
     "q184_stream_hll" -> QueryDef(
       fn = (s, d) => {
         val dir = stageEventsDir(d)
-        val stream = stagedEventsStream(streamingSession(s), dir)
-        val agg = stream.groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"),
-            hll_sketch_agg(col("user_id")).as("__sk"))
-        val table = runToMemoryTable(agg, "q184_mem")
-        dropStaged(dir)
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir)
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n_events"),
+              hll_sketch_agg(col("user_id")).as("__sk"))
+          runToMemoryTable(agg, "q184_mem")
+        } finally dropStaged(dir)
         val exact = t(s, d, "events").groupBy("event_type")
           .agg(countDistinct(col("user_id")).as("n_distinct"))
         table

@@ -339,7 +339,7 @@ private[queries] object CatalogInfra {
             min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
           .orderBy("o_orderstatus")
           .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT o_orderstatus, count(*) AS n,
@@ -635,15 +635,12 @@ private[queries] object CatalogInfra {
     "q125_stream_sliding" -> QueryDef(
       fn = (s, d) => {
         val dir = stageEventsDir(d)
-        // staging cleanup in finally (the q136 pattern): a failed
-        // stream run must not leak the staged copy of events
-        val table =
-          try {
-            val stream = stagedEventsStream(streamingSession(s), dir)
-            val agg = stream.groupBy(window(col("ts"), "2 hours", "1 hour"))
-              .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
-            runToMemoryTable(agg, "q125_mem")
-          } finally dropStaged(dir)
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir)
+            .groupBy(window(col("ts"), "2 hours", "1 hour"))
+            .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
+          runToMemoryTable(agg, "q125_mem")
+        } finally dropStaged(dir)
         table.select(unix_millis(col("window.start")).as("win_start_ms"),
           col("n"), col("sum_value"))
           .orderBy("win_start_ms")
@@ -680,7 +677,7 @@ private[queries] object CatalogInfra {
             .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
             .orderBy("event_type")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT event_type, count(*) AS n, ${sumSql("value")} AS sum_value
@@ -838,7 +835,7 @@ private[queries] object CatalogInfra {
               exactSum(col("l_extendedprice")).as("sum_price"))
             .orderBy("l_returnflag")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT l_returnflag, count(*) AS n,
@@ -945,7 +942,7 @@ private[queries] object CatalogInfra {
       fn = (s, d) => {
         val dir = stageEventsDir(d)
         val ss = streamingSession(s)
-        try {
+        val table = try {
           def src = stagedEventsStream(ss, dir)
           val clicks = src.filter(col("event_type") === "click")
             .select("event_id", "user_id", "ts")
@@ -954,11 +951,9 @@ private[queries] object CatalogInfra {
           val joined = graft.streaming.StreamingIngest.streamStreamJoin(
             clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
             within = "1 hour", watermark = "2 hours")
-          val q = graft.streaming.StreamingIngest.runToMemory(
-            joined, "q136_mem", outputMode = "append")
-          q.stop()
+          runToMemoryTable(joined, "q136_mem", outputMode = "append")
         } finally dropStaged(dir)
-        ss.table("q136_mem")
+        table
           .groupBy((col("user_id") % 10).as("bucket"))
           .agg(count(lit(1)).as("n"), exactSum(col("r_value")).as("sum_value"))
           .orderBy("bucket")
@@ -1155,8 +1150,10 @@ private[queries] object CatalogInfra {
               ()
             }
             .start()
-          q.processAllAvailable()
-          q.stop()
+          try {
+            q.processAllAvailable()
+            Catalog.ProgressLog.record(q)
+          } finally q.stop()
         } finally dropStaged(staged)
         graft.sources.ManifestTable.read(s, dir)
           .groupBy("event_type")

@@ -1291,8 +1291,8 @@ private[queries] object CatalogInsight {
         FROM sm ORDER BY event_type""")),
 
     // Streaming LATE-DATA accounting — the watermark-semantics surface
-    // none of the other streaming entries isolates: three time-sliced
-    // files fed one-per-trigger, with a deterministic LATE RIBBON
+    // none of the other streaming entries isolates: three time slices
+    // (stageSlices) fed one-per-trigger, with a deterministic LATE RIBBON
     // (event_id % 101 == 0 arrives one slice after its event-time slice),
     // an hourly windowed count under a 30-minute watermark in APPEND
     // mode. The emitted table is therefore shaped by BOTH watermark
@@ -1305,52 +1305,22 @@ private[queries] object CatalogInsight {
     // append-emission rules, not just an aggregate.
     "q324_stream_late_data" -> QueryDef(
       fn = (s, d) => {
-        import java.nio.file.Files
         val ev = t(s, d, "events")
-        val ms = unix_millis(col("ts"))
-        val b = ev.agg(min(ms), max(ms)).head // bounded scalar
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val cuts = Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-        val natural = when(ms <= cuts(0), 0).when(ms <= cuts(1), 1).otherwise(2)
         // the ribbon arrives in the LAST slice regardless of event time:
         // two slices late for the oldest third, one for the middle —
         // late enough that the drop branch provably fires under the
         // MEASURED one-batch-lagged watermark (see oracle comment)
-        val slice = when(col("event_id") % 101 === 0, lit(2)).otherwise(natural)
-        val dir = Files.createTempDirectory("graft-late-stream")
-        (0 to 2).foreach { i =>
-          val tmp = Files.createTempDirectory(s"graft-late-slice$i")
-          ev.withColumn("__k", slice).filter(col("__k") === i).drop("__k")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val l = Files.list(tmp)
-            try l.filter(f => f.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get
-            finally l.close()
-          }
-          val dst = dir.resolve(f"slice$i%02d.parquet")
-          Files.move(part, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-          dropStagedTree(tmp)
-        }
-        val ss = streamingSession(s)
-        val footer = ss.read.parquet(dir.toString).schema
-        val stream = graft.Tables.normalizeTs(
-          ss.readStream.schema(footer).option("maxFilesPerTrigger", 1)
-            .parquet(dir.toString))
-        val agg = stream.withWatermark("ts", "30 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        ss.streams.active.filter(q => Option(q.name).contains("q324_mem"))
-          .foreach(_.stop())
-        val q = agg.writeStream.format("memory").queryName("q324_mem")
-          .outputMode("append").start()
-        q.processAllAvailable()
-        Catalog.ProgressLog.record(q)
-        q.stop()
-        dropStagedTree(dir)
-        ss.table("q324_mem")
+        val slice = when(col("event_id") % 101 === 0, lit(2)).otherwise(timeThird(ev))
+        val dir = stageSlices((0 to 2).map(i => ev.filter(slice === i)))
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir,
+              oneFilePerTrigger = true)
+            .withWatermark("ts", "30 minutes")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(count(lit(1)).as("n"))
+          runToMemoryTable(agg, "q324_mem", outputMode = "append")
+        } finally dropStaged(dir)
+        table
           .select(col("window.start").as("hour"), col("event_type"), col("n"))
           .orderBy("hour", "event_type")
       },
@@ -2172,44 +2142,16 @@ private[queries] object CatalogInsight {
     // <= k, emitted iff the type appears in slice k.
     "q337_stream_update_mode" -> QueryDef(
       fn = (s, d) => {
-        import java.nio.file.Files
         val ev = t(s, d, "events")
-        val ms = unix_millis(col("ts"))
-        val b = ev.agg(min(ms), max(ms)).head
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val cuts = Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-        val preds = Seq(ms <= cuts(0), ms > cuts(0) && ms <= cuts(1), ms > cuts(1))
-        val dir = Files.createTempDirectory("graft-update-stream")
-        preds.zipWithIndex.foreach { case (p, i) =>
-          val tmp = Files.createTempDirectory(s"graft-upd-slice$i")
-          ev.filter(p).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val l = Files.list(tmp)
-            try l.filter(f => f.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get
-            finally l.close()
-          }
-          val dst = dir.resolve(f"slice$i%02d.parquet")
-          Files.move(part, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-          dropStagedTree(tmp)
-        }
-        val ss = streamingSession(s)
-        val footer = ss.read.parquet(dir.toString).schema
-        val stream = graft.Tables.normalizeTs(
-          ss.readStream.schema(footer).option("maxFilesPerTrigger", 1)
-            .parquet(dir.toString))
-        val agg = stream.groupBy(col("event_type")).agg(count(lit(1)).as("cum_count"))
-        ss.streams.active.filter(q => Option(q.name).contains("q337_mem"))
-          .foreach(_.stop())
-        val q = agg.writeStream.format("memory").queryName("q337_mem")
-          .outputMode("update").start()
-        q.processAllAvailable()
-        Catalog.ProgressLog.record(q)
-        q.stop()
-        dropStagedTree(dir)
-        ss.table("q337_mem")
+        val third = timeThird(ev)
+        val dir = stageSlices((0 to 2).map(i => ev.filter(third === i)))
+        val table = try {
+          val agg = stagedEventsStream(streamingSession(s), dir,
+              oneFilePerTrigger = true)
+            .groupBy(col("event_type")).agg(count(lit(1)).as("cum_count"))
+          runToMemoryTable(agg, "q337_mem", outputMode = "update")
+        } finally dropStaged(dir)
+        table
           .withColumn("emission_rank", row_number().over(
             Window.partitionBy("event_type").orderBy(col("cum_count").asc)).cast("long"))
           .select(col("event_type"), col("emission_rank"), col("cum_count"))
@@ -3029,7 +2971,7 @@ private[queries] object CatalogInsight {
       fn = (s, d) => {
         val dir = stageEventsDir(d)
         val ss = streamingSession(s)
-        try {
+        val table = try {
           def src = stagedEventsStream(ss, dir)
           val clicks = src.filter(col("event_type") === "click")
             .select("event_id", "user_id", "ts")
@@ -3038,11 +2980,9 @@ private[queries] object CatalogInsight {
           val joined = graft.streaming.StreamingIngest.streamStreamJoin(
             clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
             within = "1 hour", watermark = "2 hours", joinType = "left_outer")
-          val q = graft.streaming.StreamingIngest.runToMemory(
-            joined, "q360_mem", outputMode = "append")
-          q.stop()
+          runToMemoryTable(joined, "q360_mem", outputMode = "append")
         } finally dropStaged(dir)
-        ss.table("q360_mem")
+        table
           .groupBy((col("user_id") % 10).as("bucket"))
           .agg(sum(when(col("r_ts").isNotNull, 1L).otherwise(0L)).as("n_matched"),
             sum(when(col("r_ts").isNull, 1L).otherwise(0L)).as("n_outer"),
@@ -3192,7 +3132,7 @@ private[queries] object CatalogInsight {
       fn = (s, d) => {
         val dir = stageEventsDir(d)
         val ss = streamingSession(s)
-        try {
+        val table = try {
           def src = stagedEventsStream(ss, dir)
           val clicks = src.filter(col("event_type") === "click")
             .select("event_id", "user_id", "ts")
@@ -3201,11 +3141,9 @@ private[queries] object CatalogInsight {
           val joined = graft.streaming.StreamingIngest.streamStreamJoin(
             clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
             within = "1 hour", watermark = "2 hours", joinType = "full_outer")
-          val q = graft.streaming.StreamingIngest.runToMemory(
-            joined, "q364_mem", outputMode = "append")
-          q.stop()
+          runToMemoryTable(joined, "q364_mem", outputMode = "append")
         } finally dropStaged(dir)
-        ss.table("q364_mem")
+        table
           .groupBy((coalesce(col("user_id"), col("r_user_id")) % 10).as("bucket"))
           .agg(
             sum(when(col("ts").isNotNull && col("r_ts").isNotNull, 1L)
@@ -4079,7 +4017,7 @@ private[queries] object CatalogInsight {
       fn = (s, d) => {
         val dir = stageEventsDir(d)
         val ss = streamingSession(s)
-        try {
+        val table = try {
           def src = stagedEventsStream(ss, dir)
           val clicks = src.filter(col("event_type") === "click")
             .select("event_id", "user_id", "ts")
@@ -4089,11 +4027,9 @@ private[queries] object CatalogInsight {
             clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
             within = "1 hour", watermark = "1 hour", joinType = "left_outer",
             rightWatermark = Some("3 hours"))
-          val q = graft.streaming.StreamingIngest.runToMemory(
-            joined, "q378_mem", outputMode = "append")
-          q.stop()
+          runToMemoryTable(joined, "q378_mem", outputMode = "append")
         } finally dropStaged(dir)
-        ss.table("q378_mem")
+        table
           .groupBy((col("user_id") % 10).as("bucket"))
           .agg(sum(when(col("r_ts").isNotNull, 1L).otherwise(0L)).as("n_matched"),
             sum(when(col("r_ts").isNull, 1L).otherwise(0L)).as("n_outer"))

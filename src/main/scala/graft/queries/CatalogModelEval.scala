@@ -1337,8 +1337,9 @@ private[queries] object CatalogModelEval {
     // Spark 4 `transformWithState` — the successor arbitrary-state
     // streaming API (typed per-key state handles + TTL + timers, RocksDB
     // state store): live per-user running totals maintained in a
-    // ValueState across micro-batches. The staged events are split into
-    // TWO files and fed one-per-trigger, so the state GENUINELY crosses
+    // ValueState across micro-batches. The events are staged as TWO
+    // slices split by event_id parity (stageSlices), fed one-per-trigger:
+    // every user spans both batches, so the state GENUINELY crosses
     // batch boundaries (a single batch would never read state back);
     // the memory sink runs in update mode, so the final per-user row is
     // the max-(n, spend) struct — totals are monotone. Both
@@ -1347,32 +1348,24 @@ private[queries] object CatalogModelEval {
     // cloned session (the q158 rule).
     "q212_stream_running_state" -> QueryDef(
       fn = (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft-tws-src")
-        t(s, d, "events").filter(col("value").isNotNull)
-          .select(col("user_id"), cents(col("value")).as("cents"))
-          .repartition(2)
-          .write.mode("overwrite").parquet(dir.toString)
-        val sess = streamingSession(s)
-        sess.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        import sess.implicits._
-        val footer = sess.read.parquet(dir.toString).schema
-        val stream = sess.readStream.schema(footer)
-          .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-          .as[graft.streaming.UserSpend]
-        val out = stream.groupByKey(_.user_id)
-          .transformWithState(new graft.streaming.RunningTotalsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-        sess.streams.active.filter(q => Option(q.name).contains("q212_mem"))
-          .foreach(_.stop())
-        val q = out.toDF().writeStream.format("memory").queryName("q212_mem")
-          .outputMode("update").start()
-        q.processAllAvailable()
-        Catalog.ProgressLog.record(q)
-        q.stop()
-        dropStagedTree(dir)
-        sess.table("q212_mem")
+        val ev = t(s, d, "events").filter(col("value").isNotNull)
+        val even = col("event_id") % 2 === 0
+        val dir = stageSlices(Seq(ev.filter(even), ev.filter(!even))
+          .map(_.select(col("user_id"), cents(col("value")).as("cents"))))
+        val table = try {
+          val sess = streamingSession(s)
+          sess.conf.set("spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+          import sess.implicits._
+          val out = stagedEventsStream(sess, dir, oneFilePerTrigger = true)
+            .as[graft.streaming.UserSpend]
+            .groupByKey(_.user_id)
+            .transformWithState(new graft.streaming.RunningTotalsProcessor,
+              org.apache.spark.sql.streaming.TimeMode.None(),
+              org.apache.spark.sql.streaming.OutputMode.Update())
+          runToMemoryTable(out.toDF(), "q212_mem", outputMode = "update")
+        } finally dropStaged(dir)
+        table
           .groupBy("user_id")
           .agg(max(struct(col("n_events"), col("spend_cents"))).as("__t"))
           .select(col("user_id"), col("__t.n_events").as("n_events"),

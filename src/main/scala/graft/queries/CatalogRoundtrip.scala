@@ -51,7 +51,7 @@ private[queries] object CatalogRoundtrip {
               min("event_id").as("min_id"), max("event_id").as("max_id"))
             .orderBy("event_type")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT event_type, count(*) AS n, count(value) AS n_value,
@@ -95,7 +95,7 @@ private[queries] object CatalogRoundtrip {
               min("datetime").as("min_dt"), max("datetime").as("max_dt"))
             .orderBy("parameter")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT event_type AS parameter, count(*) AS n,
@@ -144,7 +144,7 @@ private[queries] object CatalogRoundtrip {
               graft.pipeline.Extract.readLocations(s, s"$base/loc"))
             .orderBy("sensor_id")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some("""
         WITH c AS (SELECT c_custkey AS id, c_name, c_mktsegment
@@ -183,7 +183,7 @@ private[queries] object CatalogRoundtrip {
             .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
             .orderBy("y", "m", "d", "h")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT CAST(strftime(ts, '%Y') AS BIGINT) AS y,
@@ -218,7 +218,7 @@ private[queries] object CatalogRoundtrip {
             .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
             .orderBy("y", "m", "d")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(s"""
         SELECT CAST(strftime(ts, '%Y') AS BIGINT) AS y,
@@ -268,7 +268,7 @@ private[queries] object CatalogRoundtrip {
               asOf = java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
             .orderBy("sensor_id")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some("""
         SELECT c_custkey * 10 + 1 AS sensor_id,
@@ -308,7 +308,7 @@ private[queries] object CatalogRoundtrip {
             .withColumn("year", col("year").cast("long"))
             .orderBy("location_id", "datetime")
             .localCheckpoint(true)
-        } finally dropStagedTree(base)
+        } finally dropStaged(base)
       },
       oracle = Some(rawPipelineOracleSql(""))),
 
@@ -352,7 +352,7 @@ private[queries] object CatalogRoundtrip {
           // the view points at $base/out, which the next line deletes — a
           // dangling catalog entry would shadow any later same-named view
           s.catalog.dropTempView("q152_mart")
-          dropStagedTree(base)
+          dropStaged(base)
         }
       },
       oracle = Some(rawPipelineOracleSql("""

@@ -382,7 +382,7 @@ private[queries] object CatalogScaleOps {
             .localCheckpoint(true) // eager: resolves before table drop
         } finally {
           ddl.sql(s"DROP TABLE IF EXISTS $tbl")
-          dropStagedTree(base)
+          dropStaged(base)
         }
       },
       oracle = Some("""
@@ -421,12 +421,9 @@ private[queries] object CatalogScaleOps {
             .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
             .agg(count(lit(1)).as("n_events"),
               exactSum(col("value")).as("sum_value"))
-          ss.streams.active.filter(q => Option(q.name).contains("q160_mem"))
-            .foreach(_.stop())
-          val q = agg.writeStream.format("memory").queryName("q160_mem")
-            .outputMode("append").start()
+          val q = graft.streaming.StreamingIngest.runToMemory(
+            agg, "q160_mem", outputMode = "append")
           try {
-            q.processAllAvailable()
             // sentinel: bump the max-ts row 7 days, in the staged files'
             // OWN ts encoding (the write must match the declared stream
             // schema)
@@ -444,7 +441,7 @@ private[queries] object CatalogScaleOps {
             Catalog.ProgressLog.record(q)
           } finally q.stop() // a leaked query would hold the staged dir
           ss.table("q160_mem")
-        } finally dropStagedTree(dir)
+        } finally dropStaged(dir)
         table.filter(col("user_id") >= 0)
           .select(col("user_id"),
             col("session_window.start").as("session_start"),

@@ -537,63 +537,41 @@ private[queries] object CatalogSelection {
       bench = true), // the multi-join recommender wall-time probe
 
     // Streaming SCD2 maintenance: the events stream arrives as THREE
-    // time-sliced files fed one-per-trigger (mtimes force oldest-first
-    // order), and foreachBatch folds each micro-batch into the dimension
-    // with scd2 / scd2Merge — the continuous form of q129's one-shot
-    // merge. The oracle is scd2OracleSql VERBATIM, shared with q107
-    // (one-shot) and q129 (two-part merge): all three surfaces must
-    // produce the identical interval table, which is the
+    // time slices fed one-per-trigger (stageSlices' increasing mtimes
+    // force oldest-first order), and foreachBatch folds each micro-batch
+    // into the dimension with scd2 / scd2Merge — the continuous form of
+    // q129's one-shot merge. The oracle is scd2OracleSql VERBATIM,
+    // shared with q107 (one-shot) and q129 (two-part merge): all three
+    // surfaces must produce the identical interval table, which is the
     // batch/incremental/streaming 3-way parity claim. The driver-side
     // `dim` var is the harness's stand-in for a real sink table; each
     // fold is localCheckpointed so batch N never replays batches 1..N-1.
     "q307_stream_scd2" -> QueryDef(
       fn = (s, d) => {
-        import java.nio.file.{Files, Paths}
         val ev = t(s, d, "events")
-        val ms = unix_millis(col("ts"))
-        val b = ev.agg(min(ms), max(ms)).head // bounded scalar
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val cuts = Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-        val preds = Seq(ms <= cuts(0), ms > cuts(0) && ms <= cuts(1), ms > cuts(1))
-        val dir = Files.createTempDirectory("graft-scd2-stream")
-        preds.zipWithIndex.foreach { case (p, i) =>
-          val tmp = Files.createTempDirectory(s"graft-scd2-slice$i")
-          ev.filter(p).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val l = Files.list(tmp)
-            try l.filter(f => f.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get
-            finally l.close()
-          }
-          val dst = dir.resolve(f"slice$i%02d.parquet")
-          Files.move(part, dst)
-          // deterministic increasing mtimes: FileStreamSource feeds
-          // oldest-first, making slice order == event-time order (the
-          // scd2Merge batch contract)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-          dropStagedTree(tmp)
-        }
-        val ss = streamingSession(s)
-        val footer = ss.read.parquet(dir.toString).schema
-        val stream = graft.Tables.normalizeTs(
-          ss.readStream.schema(footer).option("maxFilesPerTrigger", 1)
-            .parquet(dir.toString))
-          .select(col("user_id"), col("event_type"),
-            unix_millis(col("ts")).as("__ms"), col("event_id"))
+        val third = timeThird(ev)
+        // slice order == event-time order (the scd2Merge batch contract)
+        val dir = stageSlices((0 to 2).map(i => ev.filter(third === i)))
         var dim: Option[DataFrame] = None
-        val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          dim = Some((dim match {
-            case None => ChangeCapture.scd2(batch, "user_id", "event_type",
-              col("__ms"), col("event_id"))
-            case Some(dm) => ChangeCapture.scd2Merge(dm, batch, "user_id",
-              "event_type", col("__ms"), col("event_id"))
-          }).localCheckpoint(eager = true))
-          ()
-        }.start()
-        q.processAllAvailable()
-        q.stop()
-        dropStagedTree(dir)
+        try {
+          val stream = stagedEventsStream(streamingSession(s), dir,
+              oneFilePerTrigger = true)
+            .select(col("user_id"), col("event_type"),
+              unix_millis(col("ts")).as("__ms"), col("event_id"))
+          val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+            dim = Some((dim match {
+              case None => ChangeCapture.scd2(batch, "user_id", "event_type",
+                col("__ms"), col("event_id"))
+              case Some(dm) => ChangeCapture.scd2Merge(dm, batch, "user_id",
+                "event_type", col("__ms"), col("event_id"))
+            }).localCheckpoint(eager = true))
+            ()
+          }.start()
+          try {
+            q.processAllAvailable()
+            Catalog.ProgressLog.record(q)
+          } finally q.stop()
+        } finally dropStaged(dir)
         dim.get.select(col("user_id"), col("version"), col("event_type"),
           col("valid_from").as("valid_from_ms"),
           col("valid_to").as("valid_to_ms"), col("is_current"))

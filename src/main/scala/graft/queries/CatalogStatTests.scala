@@ -2011,9 +2011,10 @@ private[queries] object CatalogStatTests {
         ORDER BY j.event_id""")),
 
     // STREAMING heavy hitters (round 15) — q86's Misra-Gries summary on
-    // an unbounded token stream: the corpus is staged as two files fed
-    // one per trigger (state genuinely crosses batch boundaries), each
-    // token routed by hash to one of 8 buckets whose transformWithState
+    // an unbounded token stream: the corpus is staged as two slices split
+    // by doc_id parity (stageSlices), fed one per trigger (state
+    // genuinely crosses batch boundaries), each token routed by hash to
+    // one of 8 buckets whose transformWithState
     // ValueState folds the SAME MG step function the batch Aggregator
     // uses (graft.ops.HeavyHitters.MisraGries.reduce — shared code, the
     // q421 parity discipline). State is O(buckets x k) regardless of
@@ -2026,47 +2027,40 @@ private[queries] object CatalogStatTests {
     "q427_stream_heavy_hitters" -> QueryDef(
       fn = (s, d) => {
         val TFx = graft.functions.TextFunctions
-        val dir = java.nio.file.Files.createTempDirectory("graft-mg-src")
-        t(s, d, "documents").select(col("doc_id"), col("text"))
-          .repartition(2).write.mode("overwrite").parquet(dir.toString)
+        val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
+        val even = col("doc_id") % 2 === 0
+        val dir = stageSlices(Seq(docs.filter(even), docs.filter(!even)))
         val minCount = 500L
-        val n = t(s, d, "documents")
-          .select(explode(TFx.tokens(col("text"))).as("token")).count()
-        // q86's fail-fast cap, same reason: an ABSOLUTE threshold makes
-        // k corpus-proportional (at 100 TB a φN relative threshold is
-        // the right call — k = 1/φ, constant); a summary too large for
-        // its guarantee must be an error, not a silent giant state
-        val k = (n / minCount + 1L).toInt
-        require(k <= (1 << 17),
-          s"minCount=$minCount over $n tokens needs a $k-counter summary " +
-            "per bucket — use a relative threshold at this scale")
         val sess = streamingSession(s)
-        sess.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        import sess.implicits._
-        val footer = sess.read.parquet(dir.toString).schema
-        val stream = sess.readStream.schema(footer)
-          .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-          .select(explode(TFx.tokens(col("text"))).as("token"))
-          .select(pmod(xxhash64(col("token")), lit(8)).cast("int").as("bucket"),
-            col("token"))
-          .as[graft.streaming.BucketToken]
-        val out = stream.groupByKey(_.bucket)
-          .transformWithState(new graft.streaming.MisraGriesProcessor(k),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-        sess.streams.active.filter(q => Option(q.name).contains("q427_mem"))
-          .foreach(_.stop())
-        val q = out.toDF().writeStream.format("memory").queryName("q427_mem")
-          .outputMode("update").start()
-        q.processAllAvailable()
-        Catalog.ProgressLog.record(q)
-        q.stop()
-        dropStagedTree(dir)
+        val table = try {
+          val n = t(s, d, "documents")
+            .select(explode(TFx.tokens(col("text"))).as("token")).count()
+          // q86's fail-fast cap, same reason: an ABSOLUTE threshold makes
+          // k corpus-proportional (at 100 TB a φN relative threshold is
+          // the right call — k = 1/φ, constant); a summary too large for
+          // its guarantee must be an error, not a silent giant state
+          val k = (n / minCount + 1L).toInt
+          require(k <= (1 << 17),
+            s"minCount=$minCount over $n tokens needs a $k-counter summary " +
+              "per bucket — use a relative threshold at this scale")
+          sess.conf.set("spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+          import sess.implicits._
+          val out = stagedEventsStream(sess, dir, oneFilePerTrigger = true)
+            .select(explode(TFx.tokens(col("text"))).as("token"))
+            .select(pmod(xxhash64(col("token")), lit(8)).cast("int").as("bucket"),
+              col("token"))
+            .as[graft.streaming.BucketToken]
+            .groupByKey(_.bucket)
+            .transformWithState(new graft.streaming.MisraGriesProcessor(k),
+              org.apache.spark.sql.streaming.TimeMode.None(),
+              org.apache.spark.sql.streaming.OutputMode.Update())
+          runToMemoryTable(out.toDF(), "q427_mem", outputMode = "update")
+        } finally dropStaged(dir)
         // candidate superset = union of every batch's surviving counters
         // (a true heavy is in the FINAL state, hence in the last batch's
         // emission); exact verify fixes precision — the q86 discipline
-        val cands = sess.table("q427_mem").select(col("item")).distinct()
+        val cands = table.select(col("item")).distinct()
         t(sess, d, "documents")
           .select(explode(TFx.tokens(col("text"))).as("item"))
           .join(broadcast(cands), Seq("item"), "left_semi")

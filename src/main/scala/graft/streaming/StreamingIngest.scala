@@ -115,18 +115,24 @@ object StreamingIngest {
         joinType)
   }
 
-  /** Synchronous local smoke runner: memory sink + processAllAvailable,
-    * letting a directory of NDJSON drive the streaming query to
-    * completion in tests.
+  /** Synchronous local runner and the only memory-sink site: stops any
+    * active query of the same name (so a caller is re-runnable), starts
+    * `df` into the in-memory table `queryName` of `df`'s session, and
+    * drains all available input. Returns the LIVE query, so a caller can
+    * land more input and drain again; the caller stops it. A drain that
+    * throws stops the query before rethrowing.
     */
   def runToMemory(df: DataFrame, queryName: String,
       outputMode: String = "append"): StreamingQuery = {
+    df.sparkSession.streams.active
+      .filter(q => Option(q.name).contains(queryName)).foreach(_.stop())
     val q = df.writeStream
       .outputMode(outputMode)
       .format("memory")
       .queryName(queryName)
       .start()
-    q.processAllAvailable()
+    try q.processAllAvailable()
+    catch { case e: Throwable => q.stop(); throw e }
     q
   }
 }

@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * 1000× and crashed every `unix_millis(ts)` call site. This spec writes
   * every encoding the driver has produced (plus the adjusted-UTC one it
   * plausibly could) and asserts they all load — batch AND streaming —
-  * to the identical session-TZ TimestampType column.
+  * to the identical session-TZ TimestampType column. The staged-stream
+  * harness the catalog streams share (stage, read, run to a memory
+  * table, drop) is pinned here too: its slice batching and its cleanup
+  * when a stream fails.
   */
 class TsEncodingSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -104,5 +107,54 @@ class TsEncodingSpec extends AnyFunSuite {
           s"$name: window start shifted: ${table.head.getTimestamp(0)}")
       } finally Catalog.dropStaged(staged)
     }
+  }
+
+  test("stageSlices + oneFilePerTrigger: one micro-batch per slice, in slice order") {
+    val s = spark
+    import s.implicits._
+    // distinct sizes, so the batch sequence pins the slice order
+    val slices = Seq(3, 1, 2).zipWithIndex.map { case (n, k) =>
+      (1 to n).map(i => (k.toLong, i.toLong)).toDF("slice", "i")
+    }
+    Catalog.ProgressLog.drain()
+    val dir = Catalog.stageSlices(slices)
+    val table = try {
+      val agg = Catalog.stagedEventsStream(spark, dir, oneFilePerTrigger = true)
+        .groupBy("slice").agg(count(lit(1)).as("n"))
+      Catalog.runToMemoryTable(agg, "slice_contract")
+    } finally Catalog.dropStaged(dir)
+    assert(!java.nio.file.Files.exists(dir))
+    val batches = Catalog.ProgressLog.drain().filter(_.query == "slice_contract")
+    assert(batches.map(_.batchId) == Seq(0L, 1L, 2L), s"batches: $batches")
+    assert(batches.map(_.inputRows) == slices.map(_.count()), s"batches: $batches")
+    assert(table.orderBy("slice").as[(Long, Long)].collect().toSeq ==
+      Seq((0L, 3L), (1L, 1L), (2L, 2L)))
+  }
+
+  test("runToMemoryTable: a failing stream throws, leaves no query or staged copy, and re-runs") {
+    val ss = Catalog.streamingSession(spark)
+    val name = "harness_fail"
+    var staged: java.nio.file.Path = null
+    // the catalog streams' own shape: stage, read, run, drop in finally
+    def run(fail: Boolean): Seq[Long] = {
+      staged = Catalog.stageEventsDir(fixtures("micros-utc"))
+      val table = try {
+        val agg = Catalog.stagedEventsStream(ss, staged)
+          .withColumn("value", when(lit(fail) && col("event_id") > 0L,
+            raise_error(lit("injected stream failure"))).otherwise(col("value")))
+          .groupBy(window(col("ts"), "1 hour"))
+          .agg(count(lit(1)).as("n"), sum(col("value")).as("v"))
+        Catalog.runToMemoryTable(agg, name)
+      } finally Catalog.dropStaged(staged)
+      table.orderBy("window").collect().map(_.getLong(1)).toSeq
+    }
+    val err = intercept[Exception](run(fail = true))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("injected stream failure"))),
+      s"unexpected failure: $err")
+    assert(!ss.streams.active.exists(q => Option(q.name).contains(name)))
+    assert(!java.nio.file.Files.exists(staged))
+    assert(run(fail = false) == Seq(2L, 1L))
+    assert(!java.nio.file.Files.exists(staged))
   }
 }
