@@ -1,12 +1,12 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
@@ -23,11 +23,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    the code effect from host drift, which hits both slots alike.
   *  - `time [queries...] [rounds]`: build / plan / execute per sample, with
   *    Bench's pure-CPU anchor after every sample. No queries = the heavy
-  *    tier, so the scale side-board is `SPARK_GRAFT_SF_DIR=<scaled> Probe time`.
+  *    tier, so the scale side-board is `Probe scale 4 <dir>`, then
+  *    `SPARK_GRAFT_SF_DIR=<dir> Probe time`.
   *  - `plan <q> [rounds]`: task totals per round, then one line per
   *    execution (eager checkpoints run as their own) with its durationNs
   *    and final-plan digest; the last round's plans go to target/probe_plan/.
   *  - `explain [queries...]`: formatted physical plans (default: bench subset).
+  *  - `scale <k> <outDir>`: writes the sf-dir replicated k times under
+  *    outDir through [[ScaleData.replicate]] and prints its key strides.
   *
   * `sbt "runMain graft.Probe <mode> ..."` reads SPARK_GRAFT_SF_DIR and
   * SPARK_GRAFT_CPUS with Bench's defaults, and SPARK_GRAFT_EXTRA_CONFS
@@ -36,13 +39,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Probe {
 
   val usage: String = "usage: Probe ab <qA> <qB> [rounds] | time [queries...] [rounds]" +
-    " | plan <query> [rounds] | explain [queries...]"
+    " | plan <query> [rounds] | explain [queries...] | scale <k> <outDir>"
 
   sealed trait Command
   final case class Ab(a: String, b: String, rounds: Int) extends Command
   final case class Time(queries: Seq[String], rounds: Int) extends Command
   final case class Plan(query: String, rounds: Int) extends Command
   final case class Explain(queries: Seq[String]) extends Command
+  final case class Scale(k: Int, outDir: String) extends Command
 
   /** The >= 2 s tier at sf0.1: what `time` runs when no query is named. */
   val heavyTier: Seq[String] = Seq("q306_item_cf_recs", "q286_semantic_dedup",
@@ -56,8 +60,9 @@ object Probe {
     def fail(msg: String): Nothing = throw new IllegalArgumentException(s"$msg\n$usage")
     val catalog = SparkEntry.queries.keySet
     def query(n: String): String = if (catalog.contains(n)) n else fail(s"unknown catalog query: $n")
-    def rounds(s: String): Int =
-      s.toIntOption.filter(_ > 0).getOrElse(fail(s"rounds must be a positive integer: $s"))
+    def positive(what: String)(s: String): Int =
+      s.toIntOption.filter(_ > 0).getOrElse(fail(s"$what must be a positive integer: $s"))
+    val rounds = positive("rounds") _
     args match {
       case Seq("ab", a, b, r @ _*) if r.size <= 1 =>
         Ab(query(a), query(b), r.headOption.map(rounds).getOrElse(7))
@@ -72,7 +77,8 @@ object Probe {
         Time(if (qs.isEmpty) heavyTier else qs.map(query), r)
       case "explain" +: qs =>
         Explain(if (qs.isEmpty) SparkEntry.benchQueries else qs.map(query))
-      case (m @ ("ab" | "plan")) +: _ => fail(s"wrong number of arguments for $m")
+      case Seq("scale", k, outDir) => Scale(positive("K")(k), outDir)
+      case (m @ ("ab" | "plan" | "scale")) +: _ => fail(s"wrong number of arguments for $m")
       case m +: _ => fail(s"unknown mode: $m")
       case _ => fail("missing mode")
     }
@@ -124,6 +130,10 @@ object Probe {
         out(s"\n========== $q ==========")
         out(build(q).queryExecution.explainString(ExplainMode.fromString("formatted")))
       }
+      case Scale(k, outDir) =>
+        val strides = ScaleData.replicate(spark, sfDir, k, outDir)
+          .map { case (d, s) => "\"" + d + "\":" + s }.mkString(",")
+        out(s"""{"probe":"scale","k":$k,"src":"$sfDir","out":"$outDir","strides":{$strides}}""")
     }
   }
 
@@ -247,39 +257,21 @@ object Probe {
 
   private final case class Execution(funcName: String, durationNs: Long, plan: SparkPlan)
 
-  private val MarkerKey = "graft.probe.marker"
-
-  /** Collects executions and task metrics, plus the drain marker: the
-    * listener bus delivers one queue's events in order, so once a marker
-    * job posted after the query is seen, every event before it has been too.
-    */
+  /** Collects executions and task metrics; read after [[GraftBus]] drains. */
   private final class Tap extends SparkListener with QueryExecutionListener {
     val executions = new ConcurrentLinkedQueue[Execution]()
     val tasks = new ConcurrentLinkedQueue[TaskMetrics]()
-    val markers = new AtomicLong
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       executions.add(Execution(funcName, durationNs, qe.executedPlan))
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach(tasks.add)
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (e.properties != null && e.properties.getProperty(MarkerKey) != null) markers.incrementAndGet()
   }
 
   private def plan(spark: SparkSession, q: String, rounds: Int,
       build: String => DataFrame, out: String => Unit): Unit = {
     val sc = spark.sparkContext
     val tap = new Tap
-    // a zero-partition job posts its start event without running a task
-    def drain(): Unit = {
-      val seen = tap.markers.get
-      sc.setLocalProperty(MarkerKey, "drain")
-      try sc.emptyRDD[Int].count() finally sc.setLocalProperty(MarkerKey, null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (tap.markers.get == seen) {
-        if (System.nanoTime() > deadline) throw new IllegalStateException("listener bus did not drain in 60 s")
-        Thread.sleep(5)
-      }
-    }
+    def drain(): Unit = GraftBus.waitUntilEmpty(sc, 60000L)
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
     val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
     def round(i: Int): Unit = {

@@ -420,16 +420,19 @@ object Catalog {
       .otherwise(2)
   }
 
-  /** Recursive delete of a staged directory (flat copies and parquet
-    * write trees with their nested dirs and `_SUCCESS` markers alike).
+  /** Recursive delete of a directory tree (flat copies and parquet write
+    * trees with their nested dirs and `_SUCCESS` markers alike), untimed.
     */
+  private[graft] def deleteTree(dir: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally walk.close()
+  }
+
+  /** [[deleteTree]] of a staged directory, timed by [[StagingClock]]. */
   private[queries] def dropStaged(dir: java.nio.file.Path): Unit =
-    StagingClock.timed {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    StagingClock.timed(deleteTree(dir))
 
   /** The one streaming reader over a staged directory, agnostic to the
     * file's `ts` encoding. `readStream` needs a declared schema, so we take

@@ -1174,11 +1174,7 @@ private[queries] object CatalogInfra {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${q}_" +
       sfDir.replaceAll("[^0-9a-zA-Z]", "_")
     val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    if (java.nio.file.Files.exists(root)) deleteTree(root)
     dir
   }
 }

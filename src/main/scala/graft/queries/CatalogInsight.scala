@@ -35,7 +35,7 @@ import Catalog._
   * One slice of the query catalog; entry ORDER is load-bearing (see
   * [[CatalogTraining]]).
   */
-private[queries] object CatalogInsight {
+private[graft] object CatalogInsight {
 
   /** q309's item grain and support floor: part FAMILIES (key mod 50, the
     * q271 grain — C(50,2) pair space stays densely sampled at every sf)
@@ -57,7 +57,7 @@ private[queries] object CatalogInsight {
     * converges the two small scales and is the documented
     * fixed-round refinement at the largest (the kCorePeel contract).
     */
-  private val TrussBlock = 30L
+  private[graft] val TrussBlock = 30L
   private val TrussK = 5
   private val TrussRounds = 6
 

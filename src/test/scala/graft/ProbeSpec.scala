@@ -37,7 +37,10 @@ class ProbeSpec extends AnyFunSuite {
       Seq("ab", a, b, "0") -> "rounds must be a positive integer: 0",
       Seq("ab", a, b, "x") -> "rounds must be a positive integer: x",
       Seq("plan", a, "1.5") -> "rounds must be a positive integer: 1.5",
-      Seq("time", a, "-2") -> "rounds must be a positive integer: -2")
+      Seq("time", a, "-2") -> "rounds must be a positive integer: -2",
+      Seq("scale", "4") -> "wrong number of arguments for scale",
+      Seq("scale", "0", "/tmp/x") -> "K must be a positive integer: 0",
+      Seq("scale", "2.5", "/tmp/x") -> "K must be a positive integer: 2.5")
     cases.foreach { case (args, msg) =>
       val m = rejected(args: _*)
       assert(m.startsWith(msg) && m.endsWith(Probe.usage), s"$args -> $m")
@@ -52,6 +55,7 @@ class ProbeSpec extends AnyFunSuite {
     assert(Probe.parse(Seq("time", "5")) == Probe.Time(Probe.heavyTier, 5))
     assert(Probe.parse(Seq("time", a, b, "2")) == Probe.Time(Seq(a, b), 2))
     assert(Probe.parse(Seq("explain")) == Probe.Explain(SparkEntry.benchQueries))
+    assert(Probe.parse(Seq("scale", "4", "/tmp/x")) == Probe.Scale(4, "/tmp/x"))
     Probe.heavyTier.foreach(q => assert(SparkEntry.queries.contains(q), q))
   }
 
@@ -129,6 +133,14 @@ class ProbeSpec extends AnyFunSuite {
 
     val explain = runLines(Probe.Explain(Seq(b)))
     assert(explain.head.contains(s"== $b ==") && explain(1).contains("== Physical Plan =="))
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-probe-scale")
+    try {
+      val scale = json(runLines(Probe.Scale(2, tmp.toString)).last)
+      assert(scale.get("probe").asText == "scale" && scale.get("k").asInt == 2, scale)
+      def tables(dir: java.nio.file.Path) = dir.toFile.list().toSet
+      assert(tables(tmp) == tables(java.nio.file.Paths.get(sf)))
+    } finally graft.queries.Catalog.deleteTree(tmp)
 
     assert(spark.range(5).count() == 5)
   }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+
+import graft.queries.Catalog
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * proportional champion cap (superlinear posting-join fanout) a round
   * early, and it guards every future cap/threshold choice.
   *
-  * Replication is PERTURBED so the workload actually scales instead of
-  * degenerating: every replica's tokens get a per-replica suffix (so
-  * replicas are fully DISSIMILAR — 16 identical copies of each doc would
-  * make every dedup/similarity op legitimately quadratic in the factor,
-  * false-failing the audit) and ids are shifted past the base range (so
-  * key cardinality grows with the data, as at real scale).
+  * The scaled sf-dirs come from [[ScaleData.replicate]], whose scaladoc
+  * holds the replication rules: replicas are id-disjoint and DISSIMILAR
+  * (16 identical copies of each doc would make every dedup/similarity op
+  * legitimately quadratic in the factor, false-failing the audit), so key
+  * cardinality grows with the data, as at real scale.
   *
   * Interpretation limits, by design: at these sizes (base sf0.001)
   * wall-time has a large constant stage-overhead term, so the fitted
@@ -136,11 +137,11 @@ class ScaleGrowthSpec extends AnyFunSuite {
     // P^2 pair join runs on the P-row z frame. NOT audited from the
     // wave: q429 (the demo first-char block key is quadratic in
     // per-block distinct names BY DESIGN — production blocking keys
-    // bound block size, see its scaladoc; and replicas suffix p_name
-    // vocab linearly), q430 (replica token suffixes empty its fixed
-    // query-term list — vacuous measurement), q431 (brute-force
-    // O(n^2) exact baseline, the documented q25 class; IVF/LSH are
-    // its scale paths)
+    // bound block size, see its scaladoc; and replicas copy p_name
+    // verbatim, so every block grows K-fold), q430 (replica token
+    // suffixes empty its fixed query-term list — vacuous measurement),
+    // q431 (brute-force O(n^2) exact baseline, the documented q25
+    // class; IVF/LSH are its scale paths)
     "q432_kmv_intersection", "q433_burrows_delta",
     // wave 2: Allen census (users x fixed type-pair frame — linear
     // span aggs feed bounded per-user joins); Kneser-Ney (suffixed
@@ -157,120 +158,21 @@ class ScaleGrowthSpec extends AnyFunSuite {
     // at <=31 points regardless of volume, only the daily sums feed
     // grows (linear scan, constant tournament)
     "q437_winnowing", "q438_consensus_line_fit")
-  // NOT audited from wave 4: q439 (customer is not a staged table —
-  // and the op is one two-level keyed agg, the already-audited A5/A10
-  // shape), q440 (replicated embeddings share identical vectors, so
-  // the cohort pair blocks grow quadratically BY DESIGN — the q25/q431
-  // documented exact-baseline class; random features / cohort samples
-  // are the scale path per its scaladoc)
+  // NOT audited from wave 4: q439 (the op is one two-level keyed agg,
+  // the already-audited A5/A10 shape), q440 (its cohort pair blocks grow
+  // quadratically BY DESIGN — the q25/q431 documented exact-baseline
+  // class; random features / cohort samples are the scale path per its
+  // scaladoc)
 
-  /** Per-replica token suffix: replicas share (almost) no grams/tokens,
-    * so similarity/dedup work grows linearly in the factor (each replica
-    * is its own self-contained corpus of the base's internal structure).
-    * Language-marker words are kept VERBATIM so the filter stages of the
-    * capstones (q219's lang-id + stopword quality gate) still pass a
-    * representative fraction at every replica — a marker suffix would
-    * turn every replica 'und' and let the heavy tail run on zero rows.
-    * Marker-only shingles are therefore shared across replicas; that is
-    * the realistic stopword-heavy-hitter case the gram-keyed ops must
-    * absorb anyway.
-    */
-  private val markerWords: Seq[String] =
-    TF.langMarkers.values.flatten.map(_.toLowerCase).toSeq.distinct
-  private def perturbText(c: org.apache.spark.sql.Column, i: Int) =
-    array_join(transform(TF.tokens(c),
-      t => when(lower(t).isin(markerWords: _*), t)
-        .otherwise(concat(t, lit(s"_r$i")))), " ")
-
-  /** Write documents+lineitem replicated `factor`x under a temp sf-dir
-    * shaped like the driver's (one `<table>.parquet` per table).
-    */
+  /** `ScaleData.replicate` of the base into a fresh temp sf-dir. */
   private def stage(factor: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-growth-x$factor").toString
-    // lang rides along VERBATIM (q405's 'en' target slice must scale
-    // with the replicas — a suffixed lang would empty the target)
-    val docs = Tables.documents(spark, baseSf)
-      .select("doc_id", "text", "source", "lang")
-    val maxDoc = docs.agg(max("doc_id")).head.getLong(0) + 1
-    // sources suffix per replica too (q319's keyness cell frame is
-    // sources x vocab — shared sources would grow its per-source token
-    // marginals instead of its row count)
-    (0 until factor).map(i => docs.select(
-        (col("doc_id") + lit(i * maxDoc)).as("doc_id"),
-        perturbText(col("text"), i).as("text"),
-        concat(col("source"), lit(s"_r$i")).as("source"),
-        col("lang")))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // part/supp keys shift per replica too: each replica is its own
-    // disjoint co-occurrence graph, so the basket/graph family's work
-    // grows linearly in the factor (shared keys would densify the ONE
-    // graph superlinearly and false-fail the audit — the text-perturb
-    // argument, applied to graph keys)
-    val li = Tables.lineitem(spark, baseSf)
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_partkey", "l_suppkey")
-    // ONE orderkey shift shared by lineitem AND orders so the
-    // orders><lineitem join (q306) stays consistent within each replica
-    val ord = Tables.load(spark, baseSf, "orders").select("o_orderkey", "o_custkey")
-    val maxOk = ord.agg(max("o_orderkey")).head.getLong(0) + 1
-    val maxPk = li.agg(max("l_partkey")).head.getLong(0) + 1
-    val maxSk = li.agg(max("l_suppkey")).head.getLong(0) + 1
-    (0 until factor).map(i => li.select(
-        (col("l_orderkey") + lit(i * maxOk)).as("l_orderkey"),
-        col("l_linenumber"), col("l_quantity"),
-        (col("l_partkey") + lit(i * maxPk)).as("l_partkey"),
-        (col("l_suppkey") + lit(i * maxSk)).as("l_suppkey")))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    // orders: same orderkey shift as lineitem; custkey shift rounded up
-    // to a TrussBlock multiple so replica block-graphs (q310) stay
-    // disjoint — a straddling block would couple replicas superlinearly
-    val maxCk = {
-      val raw = ord.agg(max("o_custkey")).head.getLong(0) + 1
-      ((raw / 30) + 2) * 30
-    }
-    (0 until factor).map(i => ord.select(
-        (col("o_orderkey") + lit(i * maxOk)).as("o_orderkey"),
-        (col("o_custkey") + lit(i * maxCk)).as("o_custkey")))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    // events: shift user/event ids per replica (user cardinality grows
-    // with the data, so per-user windows/sessions stay bounded — shared
-    // users would deepen each window superlinearly and false-fail)
-    val ev = Tables.events(spark, baseSf)
-    val maxUid = ev.agg(max("user_id")).head.getLong(0) + 1
-    val maxEid = ev.agg(max("event_id")).head.getLong(0) + 1
-    (0 until factor).map(i => ev.select(
-        (col("event_id") + lit(i * maxEid)).as("event_id"), col("ts"),
-        (col("user_id") + lit(i * maxUid)).as("user_id"),
-        col("event_type"), col("value"), col("props")))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // supplier: suppkey shifts by the SAME stride as lineitem's
-    // l_suppkey so supplier><lineitem joins stay consistent per replica.
-    // q384 derives its synthetic grid points from s_suppkey mod a fixed
-    // span, so shifted replicas land NEW points on the SAME bounded
-    // grid — cell count fixed, per-cell mass grows, which is exactly
-    // the grid-keyed-linear claim under audit
-    val sup = Tables.load(spark, baseSf, "supplier")
-      .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    (0 until factor).map(i => sup.select(
-        (col("s_suppkey") + lit(i * maxSk)).as("s_suppkey"),
-        col("s_name"), col("s_nationkey"), col("s_acctbal")))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
-    // embeddings: ids shift per replica; vectors and labels ride along
-    // unchanged (the audited ops — Gramian, silhouette — do no dedup,
-    // so replica-identical vectors don't collapse any work)
-    val em = Tables.load(spark, baseSf, "embeddings")
-    val maxVid = em.agg(max("vec_id")).head.getLong(0) + 1
-    (0 until factor).map(i => em.select(
-        (col("vec_id") + lit(i * maxVid)).as("vec_id"),
-        col("embedding"), col("label")))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val dir = Files.createTempDirectory(s"graft-growth-x$factor").toString
+    ScaleData.replicate(spark, baseSf, factor, dir)
     dir
   }
+
+  private def drop(dirs: Iterable[String]): Unit =
+    dirs.foreach(d => Catalog.deleteTree(Paths.get(d)))
 
   private def timeOnce(name: String, dir: String): Double = {
     val t0 = System.nanoTime()
@@ -282,8 +184,8 @@ class ScaleGrowthSpec extends AnyFunSuite {
   // under an accidental 2x CPU load (two sbt JVMs) and 0.27 clean — a
   // wall-time growth ASSERTION must not fire on a loaded host. Bench's
   // anchor trick, in-suite: a fixed pure-CPU probe (no IO, no shuffle)
-  // runs after every measurement; a trailing anchor drifting past
-  // max(1.5 x sessionMin, sessionMin + 0.25 s) invalidates the
+  // runs after every measurement; a trailing anchor that Probe.anchorBad
+  // judges slow against the session minimum invalidates the
   // measurement, which is retried; a point still dirty after retries
   // makes that query UNVERIFIABLE this run — reported and excluded from
   // the assert instead of false-failing (or false-passing) on stolen CPU.
@@ -297,8 +199,6 @@ class ScaleGrowthSpec extends AnyFunSuite {
     s
   }
   private def anchorMin: Double = anchorTrace.min
-  private def anchorBad(r: Double): Boolean =
-    r > math.max(1.5 * anchorMin, anchorMin + 0.25)
 
   /** One guarded measurement: (seconds, clean). Retries while the
     * trailing anchor drifts; `before` runs ahead of every attempt (the
@@ -311,13 +211,13 @@ class ScaleGrowthSpec extends AnyFunSuite {
     before()
     var t = timeOnce(name, dir)
     var a = anchorOnce()
-    while (anchorBad(a) && left > 0) {
+    while (Probe.anchorBad(a, anchorMin) && left > 0) {
       left -= 1
       before()
       t = timeOnce(name, dir)
       a = anchorOnce()
     }
-    (t, !anchorBad(a))
+    (t, !Probe.anchorBad(a, anchorMin))
   }
 
   /** Growth exponent from the LAST segment (largest two scales):
@@ -372,12 +272,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
             "threshold is probably proportional to corpus size (q124's " +
             "round-7 bug class); profile the 16x plan")
       }
-    } finally dirs.values.foreach { d =>
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(d)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally drop(dirs.values)
   }
 
   // --- 64x spill probe (opt-in: SPARK_GRAFT_GROWTH64=1) -----------------
@@ -433,7 +328,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
         .selectExpr("1 AS k", "id")
         .selectExpr("k", "id", "sum(id) OVER (PARTITION BY k ORDER BY id) AS s")
         .write.format("noop").mode("overwrite").save()
-      Thread.sleep(1000)
+      GraftBus.waitUntilEmpty(spark.sparkContext, 30000L)
       val selfSpill = spilled.get()
       info(f"spill self-test: single-key 200k-row window spilled ${selfSpill / 1024 / 1024}MB")
       assert(selfSpill > 0, "spill tripwire is dead: the synthetic " +
@@ -444,10 +339,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
         val rows = probeFactors.map { f =>
           val (t, clean) = timedClean(q, dirs(f),
             before = () => spilled.set(0L))
-          // listener events drain asynchronously after the job returns
-          // (the bus API is private[spark]; a beat is enough in local mode
-          // and this is a measurement probe, not a correctness gate)
-          Thread.sleep(1000)
+          GraftBus.waitUntilEmpty(spark.sparkContext, 30000L)
           (f, t, spilled.get(), clean)
         }
         val e = fitExponent(rows.map { case (f, t, _, _) => (f, t) })
@@ -463,12 +355,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       saved.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      dirs.values.foreach { d =>
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(d)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      drop(dirs.values)
     }
   }
 
@@ -520,12 +407,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
           s"$q peak state rows grew ${r64.toDouble / r4}x for 16x keys — " +
             "state is not bounded by live keys")
       }
-    } finally dirs.values.foreach { d =>
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(d)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally drop(dirs.values)
   }
 
   // --- ManifestTable many-commits probe (opt-in, same switch) ------------
@@ -541,7 +423,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
   test("1k-commit manifest probe: per-commit cost stays flat") {
     assume(sys.env.contains("SPARK_GRAFT_GROWTH64"),
       "opt-in probe: set SPARK_GRAFT_GROWTH64=1")
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-1k").toString
+    val dir = Files.createTempDirectory("graft-manifest-1k").toString
     val one = spark.range(1).toDF("id").coalesce(1)
     def window(lo: Int, hi: Int): Double = {
       val t0 = System.nanoTime()
@@ -574,10 +456,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
     // per commit by then)
     assert(w10 / w1 < 4.0,
       f"per-commit cost grew ${w10 / w1}%.1fx from first-100 to last-100")
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    drop(Seq(dir))
   }
 
   test("the tripwire actually fires on a quadratic workload (self-test)") {

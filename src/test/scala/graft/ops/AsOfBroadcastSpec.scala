@@ -176,9 +176,7 @@ class AsOfBroadcastSpec extends AnyFunSuite {
     def shuffleBytes(body: => Unit): Long = {
       written.set(0L)
       body
-      // listener events drain asynchronously — block until the bus is
-      // empty (a fixed sleep under-reads the counters under CI load)
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext, 30000L)
+      org.apache.spark.GraftBus.waitUntilEmpty(spark.sparkContext, 30000L)
       written.get()
     }
     // doubling the fact side doubles the merge exec's shuffle volume

@@ -143,7 +143,7 @@ class AsOfMergeJoinSpec extends AnyFunSuite {
     def shuffleBytes(df: => org.apache.spark.sql.DataFrame): Long = {
       written.set(0L)
       df.write.format("noop").mode("overwrite").save()
-      Thread.sleep(800) // listener events drain asynchronously
+      org.apache.spark.GraftBus.waitUntilEmpty(spark.sparkContext, 30000L)
       written.get()
     }
     try {

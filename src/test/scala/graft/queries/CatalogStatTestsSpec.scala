@@ -36,12 +36,7 @@ class CatalogStatTestsSpec extends AnyFunSuite {
       assert(got("click") == ((3L, 3L, 2.0, expZ)))
       // the other three treatments have no rows -> absent
       assert(got.keySet == Set("click"))
-    } finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } finally Catalog.deleteTree(dir)
   }
 
   test("q262: per-row contributions are non-negative and finite") {
@@ -86,12 +81,7 @@ class CatalogStatTestsSpec extends AnyFunSuite {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       assert(got("click") == ((3L, 3L, expD, expKs)))
       assert(got.keySet == Set("click"))
-    } finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } finally Catalog.deleteTree(dir)
   }
 
   test("q266: ACF is bounded by Cauchy-Schwarz and covers every probed lag") {
@@ -130,12 +120,7 @@ class CatalogStatTestsSpec extends AnyFunSuite {
         .write.parquet(s"$dir/events.parquet")
       val eq = SparkEntry.queries("q270_theil_index")(spark, dir.toString).collect()
       assert(eq.length == 1 && eq.head.getAs[Double]("theil") == 0.0, eq.toSeq)
-    } finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } finally Catalog.deleteTree(dir)
   }
 
   test("q272: hand-computed MAD on an asymmetric 5-value fixture") {
@@ -155,12 +140,7 @@ class CatalogStatTestsSpec extends AnyFunSuite {
       val r = got.head
       assert((r.getAs[Long]("n"), r.getAs[Long]("median_cents"),
         r.getAs[Long]("mad_cents")) == ((5L, 300L, 200L)), r.toString)
-    } finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } finally Catalog.deleteTree(dir)
   }
 
   test("q274: the vocabulary curve is nondecreasing and genuinely grows") {

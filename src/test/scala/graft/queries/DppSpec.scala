@@ -14,14 +14,6 @@ class DppSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
   import spark.implicits._
 
-  private def rmTree(base: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(base)
-    try walk.iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-  }
-
   test("partition-column join against a filtered dim plans dynamicpruning") {
     val base = java.nio.file.Files.createTempDirectory("graft-dpp-spec")
     try {
@@ -41,7 +33,7 @@ class DppSpec extends AnyFunSuite {
       assert(plan.contains("dynamicpruning"),
         s"expected a dynamicpruning partition filter in:\n$plan")
       assert(joined.collect()(0).getLong(0) == 500L)
-    } finally rmTree(base)
+    } finally Catalog.deleteTree(base)
   }
 
   test("q126's staged events join plans dynamicpruning on the day partition") {
@@ -62,6 +54,6 @@ class DppSpec extends AnyFunSuite {
       assert(plan.contains("dynamicpruning"),
         s"q126 shape lost its runtime partition filter:\n$plan")
       assert(joined.count() > 0)
-    } finally rmTree(base)
+    } finally Catalog.deleteTree(base)
   }
 }
