@@ -6,9 +6,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Expression, ExpressionInfo, Literal, RegExpCount, RegExpReplace}
 import org.apache.spark.sql.types.LongType
 
-/** Session-extension hook registering the engine's native expressions at
-  * session build time — the deployment-grade alternative to per-session
-  * temp-function registration:
+/** Session-extension hook registering the engine's native expressions and
+  * the planner strategies of its two custom operators (per-key top-k and
+  * the as-of merge join) at session build time — the deployment-grade
+  * alternative to per-session temp-function registration. It adds no
+  * optimizer rule: a plan only uses the custom operators where the caller
+  * asked for them through their Column API.
   *
   * {{{
   * SparkSession.builder()
@@ -39,12 +42,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft.plans.AsOfMergeJoin); the Column API registers the same
     // strategy per-session idempotently
     e.injectPlannerStrategy(_ => graft.plans.AsOfMergeJoinStrategy)
-    // the optimizer-rule rung: users who write the row_number()<=k
-    // window idiom get the bounded-heap plan — OPT-IN via
-    // spark.graft.topk.rewrite.enabled=true (default off: with a
-    // non-total ORDER BY the heap pair may pick a different-but-valid
-    // tie row set than the Window; see TopKRewriteRule's contract)
-    e.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
     e.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

@@ -211,6 +211,18 @@ case class NearestCentroid(child: Expression,
     })
   }
 
+  // content equality: the case-class defaults would compare the centroid
+  // arrays by reference, and semanticEquals (CSE, exchange reuse) compares
+  // canonicalized forms with equals
+  override def equals(other: Any): Boolean = other match {
+    case o: NearestCentroid => (this eq o) || (child == o.child && dim == o.dim &&
+      java.util.Arrays.equals(flat, o.flat) && java.util.Arrays.equals(norms2, o.norms2))
+    case _ => false
+  }
+  private lazy val contentHash = java.util.Arrays.hashCode(Array[Int](
+    child.hashCode, dim, java.util.Arrays.hashCode(flat), java.util.Arrays.hashCode(norms2)))
+  override def hashCode(): Int = contentHash
+
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
 }

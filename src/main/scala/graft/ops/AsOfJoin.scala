@@ -148,10 +148,9 @@ object AsOfJoin {
         when(ok, matchTs).otherwise(lit(null)).as("asof_ts")): _*)
   }
 
-  /** Auto-dispatching as-of join (r12 verdict #5 — the TopKRewrite idea
-    * applied to the as-of ladder): picks the best of the three surfaces
-    * by shape and size, so callers get merge-exec economics or a
-    * zero-shuffle broadcast probe without choosing by hand.
+  /** Auto-dispatching as-of join (r12 verdict #5): picks the best of the
+    * three surfaces by shape and size, so callers get merge-exec economics
+    * or a zero-shuffle broadcast probe without choosing by hand.
     *
     * Dispatch rules, in order (micros tolerance requires a micros/long
     * axis up front — the rule every surface now shares):

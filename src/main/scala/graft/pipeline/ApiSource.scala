@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Pluggable paginated-API source for the live extraction plane.
   *
@@ -80,13 +79,26 @@ object ApiSource {
     spark.read.schema(Schemas.location).json(spark.createDataset(fetched.rawJson))
   }
 
+  /** The per-sensor fetch loop: one request per id, lazily, each page's
+    * raw measurement JSON tagged with its sensor id. A failed sensor
+    * yields no rows and no failure — the reference's continue-on-error
+    * contract (`extract_api.py:231-266`). Both measurement planes run it:
+    * [[fetchMeasurementsDistributed]] per task and the `openaq`
+    * DataSource per input partition.
+    */
+  def fetchEach(fetcher: PageFetcher, sensorIds: Iterator[Long],
+      dateFrom: String, dateTo: String, limit: Int): Iterator[(Long, String)] =
+    sensorIds.flatMap { id =>
+      fetcher.fetchMeasurements(id, dateFrom, dateTo, limit) match {
+        case Page(rs)        => rs.iterator.map(json => (id, json))
+        case HttpError(_, _) => Iterator.empty
+      }
+    }
+
   /** Distributed per-sensor measurement extraction. Sensor ids are spread
-    * over `parallelism` partitions; each task calls the fetcher and emits
-    * raw measurement JSON tagged with its sensor id. A failed sensor is
-    * skipped, not fatal — the reference's continue-on-error contract
-    * (`extract_api.py:231-266`). Flattening matches
-    * [[Extract.readWrappedMeasurements]]: `period.datetimeFrom.utc` →
-    * `datetime`, `parameter.{name,units}` → `parameter`/`unit`.
+    * over `parallelism` partitions; each task runs [[fetchEach]] over its
+    * ids; [[Extract.parseMeasurements]] flattens the rows to the columns
+    * [[Extract.readWrappedMeasurements]] yields.
     */
   def fetchMeasurementsDistributed(
       spark: SparkSession,
@@ -97,29 +109,10 @@ object ApiSource {
       limit: Int = 1000,
       parallelism: Int = 32): DataFrame = {
     import spark.implicits._
-    val raw = spark.createDataset(sensorIds)
+    Extract.parseMeasurements(spark.createDataset(sensorIds)
       .repartition(math.min(parallelism, math.max(1, sensorIds.size)))
-      .mapPartitions { ids =>
-        ids.flatMap { id =>
-          fetcher.fetchMeasurements(id, dateFrom, dateTo, limit) match {
-            case Page(rs)        => rs.iterator.map(json => (id, json))
-            case HttpError(_, _) => Iterator.empty
-          }
-        }
-      }
-      .toDF("sensor_id", "json")
-    raw
-      .select(col("sensor_id"),
-        from_json(col("json"), Schemas.apiMeasurement).as("m"))
-      .filter(col("m").isNotNull)
-      .select(
-        col("sensor_id"),
-        col("m.period.datetimeFrom.utc").as("datetime"),
-        col("m.parameter.name").as("parameter"),
-        col("m.value").as("value"),
-        col("m.parameter.units").as("unit"),
-        col("m.coordinates.latitude").as("latitude"),
-        col("m.coordinates.longitude").as("longitude"))
+      .mapPartitions(ids => fetchEach(fetcher, ids, dateFrom, dateTo, limit))
+      .toDF("sensor_id", "json"))
   }
 
   /** Fixture fetcher: serves pre-canned pages/measurements from maps —

@@ -38,14 +38,33 @@ object Extract {
       .option("multiLine", value = true)
       .json(path)
       .select(explode(col("results")).as("m"))
-      .select(
-        lit(sensorId).as("sensor_id"),
-        col("m.period.datetimeFrom.utc").as("datetime"),
-        col("m.parameter.name").as("parameter"),
-        col("m.value").as("value"),
-        col("m.parameter.units").as("unit"),
-        col("m.coordinates.latitude").as("latitude"),
-        col("m.coordinates.longitude").as("longitude"))
+      .select(measurementColumns(lit(sensorId)): _*)
+
+  /** Parse raw measurement JSON rows (`sensor_id`, `json`) — what
+    * [[ApiSource.fetchEach]] yields, from [[ApiSource.fetchMeasurementsDistributed]]
+    * or the `openaq` DataSource — into the same seven columns, dropping
+    * rows whose JSON does not parse.
+    */
+  def parseMeasurements(raw: DataFrame): DataFrame =
+    raw.select(col("sensor_id"), from_json(col("json"), Schemas.apiMeasurement).as("m"))
+      .filter(col("m").isNotNull)
+      .select(measurementColumns(col("sensor_id")): _*)
+
+  /** The seven-column long format of one API measurement, read from a
+    * struct column `m` of [[Schemas.apiMeasurement]]: `sensorId`,
+    * `period.datetimeFrom.utc` → `datetime`, `parameter.{name,units}` →
+    * `parameter`/`unit`, `value`, and the coordinates. Every measurement
+    * source projects through it — the wrapped capture above and
+    * [[parseMeasurements]] — so their frames cannot drift apart.
+    */
+  private def measurementColumns(sensorId: Column): Seq[Column] = Seq(
+    sensorId.as("sensor_id"),
+    col("m.period.datetimeFrom.utc").as("datetime"),
+    col("m.parameter.name").as("parameter"),
+    col("m.value").as("value"),
+    col("m.parameter.units").as("unit"),
+    col("m.coordinates.latitude").as("latitude"),
+    col("m.coordinates.longitude").as("longitude"))
 
   /** Normalize a parameter name the way the reference does before matching:
     * lowercase and strip dots, so `PM2.5` == `pm25` (reference

@@ -155,17 +155,24 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
   override def nodeName: String =
     if (partial) "TopKPerKeyPartial" else "TopKPerKeyFinal"
 
+  /** A flush-valve cap: a positive integer, else an error that names the
+    * key — a value like `1e6` must not surface as a bare
+    * NumberFormatException.
+    */
+  private def valveCap(key: String, default: Long): Long = {
+    val raw = conf.getConfString(key, default.toString)
+    raw.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive integer, got '$raw'"))
+  }
+
   protected override def doExecute(): RDD[InternalRow] = {
     val keyExprs = keys
     val sortOrders = order
     val kk = k
     val childOutput = child.output
     if (partial) {
-      val maxKeysInFlight =
-        conf.getConfString("spark.graft.topk.maxKeysInFlight", "1000000").toInt
-      val maxBytesInFlight =
-        conf.getConfString("spark.graft.topk.maxBytesInFlight",
-          (256L << 20).toString).toLong
+      val maxKeysInFlight = valveCap("spark.graft.topk.maxKeysInFlight", 1000000L)
+      val maxBytesInFlight = valveCap("spark.graft.topk.maxBytesInFlight", 256L << 20)
       val theMode = mode
       child.execute().mapPartitions({ iter =>
         val keyProj = UnsafeProjection.create(keyExprs, childOutput)

@@ -799,21 +799,28 @@ private[queries] object CatalogAnalytics {
                count(*) AS n, min(doc_id) AS min_id
         FROM documents GROUP BY 1 ORDER BY split""")),
 
-    // Grouped top-k via the bounded-state TopK Aggregator — result-
-    // identical to the q57 window form, but partial aggregation trims each
-    // group to <=k items per input partition BEFORE the shuffle (the
-    // exchange carries O(groups x k), not O(rows); the window form shuffles
-    // everything). Same oracle shape as q57, null scores excluded.
+    // Grouped top-k via the bounded-state TopKPerKey operator — result-
+    // identical to the q57 window form, but the partial phase trims each
+    // key to <=k rows per input partition BEFORE the one hash exchange
+    // (the exchange carries O(groups x k), not O(rows); the window form
+    // shuffles everything). The rank is a row_number() over the
+    // operator's output: its final phase is already clustered on
+    // event_type and sorted by (event_type, value desc, event_id), so the
+    // window adds no exchange and ranks at most k rows per key. Same
+    // oracle shape as q57, null values excluded.
     "q59_topk_aggregate" -> QueryDef(
-      fn = (s, d) => t(s, d, "events")
-        .filter(col("value").isNotNull)
-        .groupBy("event_type")
-        .agg(graft.functions.TopKAggregate.topK(3, col("value"), col("event_id"))
-          .as("top"))
-        .select(col("event_type"), posexplode(col("top")))
-        .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
-                col("col.id").as("event_id"), col("col.score").as("value"))
-        .orderBy("event_type", "rank"),
+      fn = (s, d) => {
+        val top = graft.plans.TopKPerKey.topKPerKey(
+          t(s, d, "events").filter(col("value").isNotNull)
+            .select("event_type", "event_id", "value"),
+          Seq(col("event_type")),
+          Seq((col("value"), false), (col("event_id"), true)), 3)
+        val w = Window.partitionBy("event_type")
+          .orderBy(col("value").desc, col("event_id"))
+        top.select(col("event_type"), row_number().over(w).cast("long").as("rank"),
+            col("event_id"), col("value"))
+          .orderBy("event_type", "rank")
+      },
       oracle = Some("""
         SELECT event_type, CAST(rn AS BIGINT) AS rank, event_id, value
         FROM (SELECT event_type, event_id, value,

@@ -62,22 +62,24 @@ private[queries] object CatalogCorpusOps {
                len(string_split(d.text, chr(10))) - coalesce(k.n_kept, 0) AS n_removed
         FROM d LEFT JOIN k USING (doc_id) ORDER BY doc_id""")),
 
-    // Bounded per-group uniform sample (functions/MinKAggregate): the k
-    // smallest md5(id) per language are a deterministic uniform k-subset,
-    // and partial aggregation caps the exchange at O(groups × k) — the
+    // Bounded per-group uniform sample (plans/TopKPerKey): the k smallest
+    // md5(id) per language are a deterministic uniform k-subset, and the
+    // operator's partial phase caps the exchange at O(groups × k) — the
     // bounded-state replacement for the full window shuffle-and-sort the
-    // oracle expresses.
+    // oracle expresses. The rank is a row_number() over the operator's
+    // output, which is already clustered on lang and sorted by
+    // (lang, hash, doc_id): no second exchange, at most k rows per key.
     "q90_group_sample" -> QueryDef(
-      fn = (s, d) => t(s, d, "documents")
-        .select(col("lang"), md5(col("doc_id").cast("string")).as("__h"),
-          col("doc_id"))
-        .groupBy("lang")
-        .agg(graft.functions.MinKAggregate
-          .minK(10, col("__h"), col("doc_id")).as("__sample"))
-        .select(col("lang"), posexplode(col("__sample")))
-        .select(col("lang"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.id").as("doc_id"))
-        .orderBy("lang", "rank"),
+      fn = (s, d) => {
+        val sample = graft.plans.TopKPerKey.topKPerKey(
+          t(s, d, "documents").select(col("lang"),
+            md5(col("doc_id").cast("string")).as("__h"), col("doc_id")),
+          Seq(col("lang")), Seq((col("__h"), true), (col("doc_id"), true)), 10)
+        val w = Window.partitionBy("lang").orderBy(col("__h"), col("doc_id"))
+        sample.select(col("lang"), row_number().over(w).cast("long").as("rank"),
+            col("doc_id"))
+          .orderBy("lang", "rank")
+      },
       oracle = Some("""
         SELECT lang, CAST(rn AS BIGINT) AS rank, doc_id
         FROM (SELECT lang, doc_id,

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.pipeline.{ApiSource, Schemas}
+import graft.pipeline.{ApiSource, Extract, Schemas}
 
 /** DataSource V2 wrapper for the paginated OpenAQ-style API: the
   * reference's Lambda fetch loops (`extract_api.py:38-104` locations,
@@ -56,8 +56,8 @@ object OpenAqSource {
   }
 
   /** Typed measurements frame: read the source, parse + flatten in
-    * Catalyst. Same 7-column contract as
-    * [[graft.pipeline.Extract.readWrappedMeasurements]].
+    * Catalyst through [[graft.pipeline.Extract.parseMeasurements]] — the
+    * 7-column contract of [[graft.pipeline.Extract.readWrappedMeasurements]].
     */
   def measurements(
       spark: SparkSession,
@@ -67,7 +67,7 @@ object OpenAqSource {
       dateTo: String,
       limit: Int = 1000,
       numPartitions: Int = 32): DataFrame =
-    spark.read.format(FORMAT)
+    Extract.parseMeasurements(spark.read.format(FORMAT)
       .option("endpoint", "measurements")
       .option("fetcher", fetcherClass)
       .option("sensorIds", sensorIds.mkString(","))
@@ -75,18 +75,7 @@ object OpenAqSource {
       .option("dateTo", dateTo)
       .option("limit", limit)
       .option("numPartitions", numPartitions)
-      .load()
-      .select(col("sensor_id"),
-        from_json(col("json"), Schemas.apiMeasurement).as("m"))
-      .filter(col("m").isNotNull)
-      .select(
-        col("sensor_id"),
-        col("m.period.datetimeFrom.utc").as("datetime"),
-        col("m.parameter.name").as("parameter"),
-        col("m.value").as("value"),
-        col("m.parameter.units").as("unit"),
-        col("m.coordinates.latitude").as("latitude"),
-        col("m.coordinates.longitude").as("longitude"))
+      .load())
 
   /** Typed locations frame (declared schema — inference never sees this
     * data, keeping the VoidType bug class dead on the live path too).
@@ -229,18 +218,14 @@ private[sources] class LocationsReader(opts: OpenAqOptions)
   override def close(): Unit = ()
 }
 
-/** One fetch per sensor id, lazily — a failed sensor yields no rows and no
-  * failure (the reference's continue-on-error contract).
+/** One fetch per sensor id, lazily — [[ApiSource.fetchEach]], so a failed
+  * sensor yields no rows and no failure (the reference's continue-on-error
+  * contract).
   */
 private[sources] class MeasurementsReader(opts: OpenAqOptions, ids: Array[Long])
     extends PartitionReader[InternalRow] {
-  private lazy val fetcher = opts.newFetcher()
-  private lazy val rows: Iterator[(Long, String)] = ids.iterator.flatMap { id =>
-    fetcher.fetchMeasurements(id, opts.dateFrom, opts.dateTo, opts.limit) match {
-      case ApiSource.Page(rs)        => rs.iterator.map((id, _))
-      case ApiSource.HttpError(_, _) => Iterator.empty
-    }
-  }
+  private lazy val rows: Iterator[(Long, String)] = ApiSource.fetchEach(
+    opts.newFetcher(), ids.iterator, opts.dateFrom, opts.dateTo, opts.limit)
   private var current: (Long, String) = _
   override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
   override def get(): InternalRow =

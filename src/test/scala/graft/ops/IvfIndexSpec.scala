@@ -81,6 +81,23 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(proj != null)
   }
 
+  test("nearest_centroid compares by content: equal matrices are semanticEquals") {
+    import graft.functions.expressions.NearestCentroid
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val v = BoundReference(0, ArrayType(FloatType), nullable = true)
+    def nc(c: Double, child: BoundReference = v, dim: Int = 2) =
+      NearestCentroid(child, Array(1.0, c, 0.5, 0.25), Array(0.5, 0.1), dim)
+    val (a, b) = (nc(2.0), nc(2.0))
+    assert(a ne b)
+    assert(a == b && a.hashCode == b.hashCode)
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    for (other <- Seq(nc(3.0), nc(2.0, dim = 4),
+        nc(2.0, child = BoundReference(1, ArrayType(FloatType), nullable = true)))) {
+      assert(a != other && !a.semanticEquals(other), other)
+    }
+  }
+
   test("nearest_centroid fails fast on a wrong-dimension vector (r15 ADVICE)") {
     val m = IvfIndex.Model(Seq(Array(1.0, 0.0), Array(0.0, 1.0)))
     val ragged = Seq((1L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
