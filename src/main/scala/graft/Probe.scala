@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,13 +22,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `ab <qA> <qB> [rounds]`: both queries in one JVM, interleaved, first
   *    slot alternating per round; the median PAIRED delta (a - b) isolates
   *    the code effect from host drift, which hits both slots alike.
-  *  - `time [queries...] [rounds]`: build / plan / execute per sample, with
-  *    Bench's pure-CPU anchor after every sample. No queries = the heavy
-  *    tier, so the scale side-board is `Probe scale 4 <dir>`, then
-  *    `SPARK_GRAFT_SF_DIR=<dir> Probe time`.
-  *  - `plan <q> [rounds]`: task totals per round, then one line per
-  *    execution (eager checkpoints run as their own) with its durationNs
-  *    and final-plan digest; the last round's plans go to target/probe_plan/.
+  *  - `time [queries...] [rounds]`: build / plan / execute and the classes
+  *    compiled per sample, with Bench's pure-CPU anchor after every sample.
+  *    No queries = the heavy tier, so the scale side-board is
+  *    `Probe scale 4 <dir>`, then `SPARK_GRAFT_SF_DIR=<dir> Probe time`.
+  *  - `plan <q> [rounds]`: task totals and classes compiled per round, then
+  *    one line per execution (eager checkpoints run as their own) with its
+  *    durationNs and final-plan digest; the last round's plans go to
+  *    target/probe_plan/.
   *  - `explain [queries...]`: formatted physical plans (default: bench subset).
   *  - `scale <k> <outDir>`: writes the sf-dir replicated k times under
   *    outDir through [[ScaleData.replicate]] and prints its key strides.
@@ -145,6 +147,12 @@ object Probe {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Generated classes compiled so far in this JVM: one count per
+    * codegen cache miss, on any loader. A delta over a sample that is
+    * far from 0 on a warm query is a compile storm, not a plan change.
+    */
+  private[graft] def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def num(v: Double): String = f"$v%.3f"
   private def arr(vs: Seq[String]): String = vs.mkString("[", ",", "]")
 
@@ -177,7 +185,8 @@ object Probe {
   private[graft] def anchorBad(reading: Double, sessionMin: Double): Boolean =
     reading > math.max(1.5 * sessionMin, sessionMin + 0.25)
 
-  private final case class Split(build: Double, plan: Double, exec: Double, anchor: Double) { def sec = build + plan + exec }
+  private final case class Split(build: Double, plan: Double, exec: Double, anchor: Double,
+      compiles: Long) { def sec = build + plan + exec }
 
   private def time(spark: SparkSession, queries: Seq[String], rounds: Int,
       build: String => DataFrame, out: String => Unit): Unit = {
@@ -196,10 +205,12 @@ object Probe {
     // exec includes the noop write command's own planning of the query
     def sample(q: String): Split = {
       var df: DataFrame = null
+      val c0 = compiles()
       val b = timed { df = build(q) }
       val p = timed(df.queryExecution.executedPlan)
       val e = timed(noop(df))
-      Split(b, p, e, anchorAfter())
+      val c = compiles() - c0
+      Split(b, p, e, anchorAfter(), c)
     }
     val results = queries.map { q =>
       noop(build(q)) // warmup: codegen, JIT, file listings
@@ -207,7 +218,7 @@ object Probe {
         val first = sample(q)
         val s = if (anchorBad(first.anchor, anchors.min)) sample(q) else first
         out(s"[time] $q round $i: build=${num(s.build)} plan=${num(s.plan)} " +
-          s"exec=${num(s.exec)} anchor=${num(s.anchor)}")
+          s"exec=${num(s.exec)} anchor=${num(s.anchor)} compiles=${s.compiles}")
         s
       }
     }
@@ -218,7 +229,7 @@ object Probe {
     val entries = results.map { case (q, ss) =>
       val kept = if (ss.exists(clean)) ss.filter(clean) else ss
       def med(f: Split => Double): String = num(Bench.median(kept.map(f)))
-      val samples = ss.map(s => arr(Seq(num(s.sec), num(s.anchor), clean(s).toString)))
+      val samples = ss.map(s => arr(Seq(num(s.sec), num(s.anchor), clean(s).toString, s.compiles.toString)))
       Bench.median(kept.map(_.sec)) ->
         (s""""$q":{"median":${med(_.sec)},"min":${num(kept.map(_.sec).min)},""" +
           s""""build":${med(_.build)},"plan":${med(_.plan)},"exec":${med(_.exec)},""" +
@@ -279,7 +290,9 @@ object Probe {
       tap.tasks.clear()
       val gc0 = gcBeans.map(_.getCollectionTime).sum
       val jit0 = jitBean.getTotalCompilationTime
+      val c0 = compiles()
       val sec = timed(noop(build(q)))
+      val nCompiles = compiles() - c0
       val gcSec = (gcBeans.map(_.getCollectionTime).sum - gc0) / 1e3
       val jitSec = (jitBean.getTotalCompilationTime - jit0) / 1e3
       drain()
@@ -291,7 +304,7 @@ object Probe {
         f"fetchWait=${sum(_.shuffleReadMetrics.fetchWaitTime) / 1e3}%.1f " +
         f"taskRun=${sum(_.executorRunTime) / 1e3}%.1f taskCpu=${sum(_.executorCpuTime) / 1e9}%.1f " +
         f"deser=${sum(_.executorDeserializeTime) / 1e3}%.1f nTasks=${ts.size} " +
-        f"jit=$jitSec%.1f executions=${execs.size}")
+        f"jit=$jitSec%.1f compiles=$nCompiles executions=${execs.size}")
       // the noop write is the last execution; those before it ran nested
       execs.zipWithIndex.foreach { case (e, k) =>
         val line = s"$q round $i exec ${k + 1}/${execs.size} ${e.funcName} " +

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Loaders for the driver-provided synthetic tables (TESTDATA.md).
@@ -17,15 +18,40 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session configs every graft session needs. `nanosAsLong` stays for
+  /** Session configs every graft session needs, applied to its builder
+    * before the SparkContext starts. `nanosAsLong` stays for
     * back-compat with testdata generations that carried TIMESTAMP(NANOS)
     * (Spark's vectorized reader rejects nanos outright; with the flag it
     * surfaces as a long). Newer generations carry TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) → TIMESTAMP_NTZ; [[load]] normalizes both.
+    *
+    * `codegen.cache.maxEntries` sizes the JVM-wide generated-class cache
+    * (a static conf: it only takes effect at context start). The cache
+    * is keyed by (class loader, source text), and in local mode every
+    * whole-stage class is compiled twice, once while planning and once
+    * under the executor's class loader, so each class costs two keys.
+    * Spark's default of 100 entries is below the working set of one
+    * daily ETL DAG (backfill, increments and the six Athena queries:
+    * ~103 keys), so LRU eviction emptied the cache every cycle and each
+    * warm pass recompiled ~59 identical classes. One pass of the 48
+    * bench queries at sf0.01 holds 1,071 distinct keys; 4096 is ~4x that
+    * census, for a few MB of metaspace.
     */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.codegen.cache.maxEntries" -> "4096")
+
+  /** A `newSession()` clone (shared SparkContext, own runtime conf scope)
+    * with the runtime entries of [[requiredConfs]] re-set, for contexts
+    * built without them. Static entries are skipped: they are fixed at
+    * context start, and setting one on a live session throws.
+    */
+  def cloneSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    requiredConfs.foreach { case (k, v) => if (!SQLConf.isStaticConfigKey(k)) ss.conf.set(k, v) }
+    ss
+  }
 
   /** Epoch-long → µs, the unit inferred per value from its MAGNITUDE:
     * for any instant between 1973 and ~5138, seconds ≈ 1e9-1e11,

@@ -240,9 +240,10 @@ object AsOfJoin {
     // unset → session autoBroadcastJoinThreshold; a SET-but-malformed
     // value (e.g. "10MB") must FAIL, not silently fall back and change
     // the dispatch route (r13 ADVICE) — so only the not-set case is
-    // caught and NumberFormatException propagates to the caller
+    // caught and a malformed value throws, naming the key
     val threshold = spark.conf.getOption("graft.asof.broadcastThreshold") match {
-      case Some(v) => v.trim.toLong
+      case Some(v) => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"graft.asof.broadcastThreshold must be an integer byte count, got '$v'"))
       case None    => spark.sessionState.conf.autoBroadcastJoinThreshold
     }
     lazy val rightBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes

@@ -466,13 +466,10 @@ object Catalog {
     * sizes this to state volume / executor count, not to the batch
     * engine's scan parallelism; 8 gives ~12k state rows per store at
     * bench scale. Isolated in a clone so batch queries in the same
-    * session keep their width. `newSession` shares the SparkContext
-    * (and its SparkConf, so `Tables.requiredConfs` carry over — re-set
-    * here as a belt for contexts built without them).
+    * session keep their width ([[Tables.cloneSession]]).
     */
   private[queries] def streamingSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    Tables.requiredConfs.foreach { case (k, v) => ss.conf.set(k, v) }
+    val ss = Tables.cloneSession(s)
     ss.conf.set("spark.sql.shuffle.partitions", StreamingShufflePartitions)
     ss
   }

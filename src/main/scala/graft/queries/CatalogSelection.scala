@@ -417,7 +417,7 @@ private[queries] object CatalogSelection {
           poStats.getLong(1) >= 0L && poStats.getLong(2) < (1L << 31) &&
           poStats.getLong(3) >= 0L && poStats.getLong(4) < (1L << 31)
         val shjSafe = nInteractions <=
-          4L * 1024 * 1024 * s.conf.get("spark.sql.shuffle.partitions").toLong
+          4L * 1024 * 1024 * s.sessionState.conf.numShufflePartitions
         val sizes = po.groupBy("i").agg(count(lit(1)).as("__n"))
         // po is already DISTINCT (u, i) and checkpointed — skip the
         // operator's internal re-distinct (one full exchange, guide §2.4)

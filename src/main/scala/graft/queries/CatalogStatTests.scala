@@ -1898,8 +1898,7 @@ private[queries] object CatalogStatTests {
     // conf-driven route end-to-end under the correctness gate.)
     "q400_asof_auto_merge_route" -> QueryDef(
       fn = (s, d) => {
-        val ss = s.newSession() // isolated conf scope for the forced route
-        graft.Tables.requiredConfs.foreach { case (k, v) => ss.conf.set(k, v) }
+        val ss = graft.Tables.cloneSession(s) // isolated conf scope for the forced route
         ss.conf.set("graft.asof.broadcastThreshold", "1")
         val ev = t(ss, d, "events")
         val facts = ev.select("event_id", "event_type", "ts")
@@ -1979,8 +1978,7 @@ private[queries] object CatalogStatTests {
     // q403 — two physical routes, one answer, both under the gate.
     "q426_asof_nearest_merge_route" -> QueryDef(
       fn = (s, d) => {
-        val ss = s.newSession() // isolated conf scope for the forced route
-        graft.Tables.requiredConfs.foreach { case (k, v) => ss.conf.set(k, v) }
+        val ss = graft.Tables.cloneSession(s) // isolated conf scope for the forced route
         ss.conf.set("graft.asof.broadcastThreshold", "1")
         val ev = t(ss, d, "events")
         val clicks = ev.filter(col("event_type") === "click")

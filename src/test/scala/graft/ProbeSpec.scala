@@ -115,16 +115,21 @@ class ProbeSpec extends AnyFunSuite {
 
     val time = runLines(Probe.Time(Seq(a), 1))
     assert(time.count(_.startsWith(s"[time] $a round 1: build=")) == 1, time)
+    // the round after the warm-up compiles nothing: its classes are cached
+    assert(time.exists(_.matches(s"\\[time\\] $a round 1: .* compiles=0")), time)
     val t = json(time.last)
     assert(t.get("probe").asText == "time" && t.get("anchor").get("min").asDouble > 0)
     val tq = t.get("queries").get(a)
     Seq("median", "min", "build", "plan", "exec").foreach(f => assert(tq.has(f), f))
     assert(tq.get("samples").size == 1)
+    val sample = tq.get("samples").get(0) // [sec, anchor, clean, compiles]
+    assert(sample.size == 4 && sample.get(3).asText == "0", sample)
 
     // q253 checkpoints its k-core rounds eagerly: each is its own execution
     val q = "q253_kcore"
     val plan = runLines(Probe.Plan(q, 1))
     val head = plan.find(_.startsWith(s"[plan] $q round 1 sec=")).get
+    assert(head.matches(".* compiles=\\d+ executions=\\d+"), head)
     val n = "executions=(\\d+)".r.findFirstMatchIn(head).get.group(1).toInt
     assert(n >= 2, s"expected nested executions: $head")
     val execs = plan.filter(_.startsWith(s"[plan] $q round 1 exec "))

@@ -72,6 +72,16 @@ class AsOfAutoSpec extends AnyFunSuite {
     assert(plan.contains("AsOfMergeJoin"), plan)
   }
 
+  test("a malformed broadcastThreshold fails naming the key and the value") {
+    spark.conf.set("graft.asof.broadcastThreshold", "10MB")
+    try {
+      val e = intercept[IllegalArgumentException](AsOfJoin.asofAuto(clicks, purchases,
+        on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts", rightCols = Seq("p_value")))
+      assert(e.getMessage.contains("graft.asof.broadcastThreshold") &&
+        e.getMessage.contains("'10MB'"), e.getMessage)
+    } finally spark.conf.unset("graft.asof.broadcastThreshold")
+  }
+
   test("dispatch: nearest rides the physical ladder — broadcast small, merge large") {
     // round 14: nearest no longer forces the union+window form on a
     // long-backed axis — small right → zero-shuffle probe, oversize →

@@ -143,6 +143,38 @@ class PipelineSpec extends AnyFunSuite with TimeLimits {
     assert(spark.read.parquet(outDir).count() == 4) // 2 rows × 2 runs
   }
 
+  test("a warm ETL pass compiles no class after 100+ others were compiled in between") {
+    // one daily DAG: run into a fresh mart, then the six Athena queries
+    val inDir = Files.createTempDirectory("graft-in-codegen").toFile
+    Files.write(new java.io.File(inDir, "raw_1.json").toPath,
+      ndjson.mkString("\n").getBytes("UTF-8"))
+    def etlPass(): Unit = {
+      val outDir = Files.createTempDirectory("graft-out-codegen").toFile.getAbsolutePath + "/mart"
+      OpenAqPipeline.run(spark, Schemas.JobConfig(inputPath = inDir.getAbsolutePath,
+        outputPath = outDir), viewName = "v_codegen")
+      graft.queries.AnalyticsQueries.queries("v_codegen").keys.foreach { name =>
+        graft.queries.AnalyticsQueries.run(spark, name, "v_codegen").collect()
+      }
+    }
+    def compiled(body: => Unit): Long = {
+      val c0 = graft.Probe.compiles()
+      body
+      graft.Probe.compiles() - c0
+    }
+    etlPass()
+    // other work in between: the flagship catalog query (cached if an
+    // earlier suite ran it) plus classes no earlier query can have
+    // compiled, so more than Spark's default 100 cache entries are added
+    val between = compiled {
+      graft.SparkEntry.entry(spark).collect()
+      val base = System.nanoTime()
+      (1 to 60).foreach(i => spark.range(16).selectExpr(s"id * 7 + ${base + i}L AS v").collect())
+    }
+    assert(between > 100, s"only $between classes compiled between the passes")
+    val warm = compiled(etlPass())
+    assert(warm == 0L, s"the warm pass recompiled $warm classes")
+  }
+
   test("schema inference mode survives all-null columns (VoidType regression)") {
     // reference tests/test_glue_complete.py:222-265 — all-null JSON columns
     // infer as void; the explicit casts in buildMetadata must still work
