@@ -126,26 +126,13 @@ object Decontaminate {
     * the linear form beats both. See NOTES.md round-8 entry.) Nothing
     * touches the driver.
     */
-  /** @param bloomPrefilter probe a sketch of the eval grams map-side and
-    *        drop definitely-clean occurrences BEFORE the gram exchange
-    *        (exact result either way — no false negatives, sketch false
-    *        positives die in the exact join). Worth it only when the
-    *        train split is MOSTLY CLEAN, the production-decontamination
-    *        common case; on a heavily-contaminated corpus the probes and
-    *        the sketch-build job are pure overhead (measured +60% on the
-    *        synthetic bench corpus, where ~80% of docs are dirty —
-    *        hence default OFF).
-    * @param hashGrams same trade as [[contaminated]]'s flag: join the
+  /** @param hashGrams same trade as [[contaminated]]'s flag: join the
     *        occurrence stream to the eval-gram set on `xxhash64(gram)`
     *        instead of the gram string — 8-byte shuffle keys instead of
     *        full gram text, the right trade at corpus scale. A collision
     *        would mask 0-2 extra CLEAN tokens (never unmask a leaked
     *        one), at ~n^2/2^64 probability — noise at decontamination
     *        tolerances. Keep false for engine-portable exact semantics.
-    * @param expectedItems bloom sketch sizing for the EVAL-gram sketch
-    *        (mirrors [[contaminatedBloom]]); an undersized sketch on a
-    *        large eval split silently degrades to pass-through (fpp→1),
-    *        so size it to the eval split's distinct-gram count.
     * @param reassembly how survivors are rejoined, "linear" (default) or
     *        "shuffle" — SAME result, different physical shape:
     *        - "linear": doc-keyed join of the covered-position arrays
@@ -161,9 +148,7 @@ object Decontaminate {
     */
   def maskContaminated(train: DataFrame, eval: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3,
-      bloomPrefilter: Boolean = false,
       hashGrams: Boolean = false,
-      expectedItems: Long = BloomPrune.DefaultExpectedItems,
       reassembly: String = "linear"): DataFrame = {
     require(reassembly == "linear" || reassembly == "shuffle",
       s"reassembly must be 'linear' or 'shuffle', got '$reassembly'")
@@ -188,15 +173,8 @@ object Decontaminate {
               TF.shingles(col(textCol), shingleSize))
             .otherwise(array().cast("array<string>"))).as(Seq("__p", "__g")))
           .select(col("doc_id"), col("__p"), col("__g").as("gram"))
-    val prefiltered =
-      if (!bloomPrefilter) occurrences
-      else BloomPrune.sketch(evalGrams, xxhash64(col("gram")), expectedItems) match {
-        case Some(bytes) => occurrences.filter(BloomPrune.bloomContains(
-          lit(bytes), xxhash64(col("gram")), Some(train.sparkSession)))
-        case None => occurrences // defensive: never probe a null sketch
-      }
     // the leaked span starts — ONLY matched occurrences survive the join
-    val hits = prefiltered.join(evalGrams, Seq("gram"))
+    val hits = occurrences.join(evalGrams, Seq("gram"))
 
     if (reassembly == "linear") {
       // one row per CONTAMINATED doc: every covered position, expanded

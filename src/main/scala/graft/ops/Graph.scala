@@ -483,6 +483,15 @@ object Graph {
         coalesce(col("support"), lit(0L)).as("support"))
   }
 
+  // stats-DROPPING checkpoint for the per-round frames of the iterative
+  // verbs below (Boruvka, HITS, DAG levels): the plain localCheckpoint
+  // forwards the source plan's Statistics (Spark 4 LogicalRDD.originStats),
+  // and in these loops every self-join SQUARES the estimate -- after a few
+  // rounds the BigInt exponent overflows and planning dies (measured; see
+  // GraftInternal.localCheckpointNoStats)
+  private def cut(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftInternal.localCheckpointNoStats(df)
+
   /** Boruvka minimum-spanning-FOREST over an undirected weighted graph
     * — the classic spanning-structure verb (r11 verdict #4): every
     * round each component picks its minimum outgoing edge under the
@@ -513,13 +522,6 @@ object Graph {
       wCol: String, rounds: Int, jumps: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     require(jumps >= 1, s"jumps must be >= 1: $jumps")
-    // stats-DROPPING checkpoint: the plain localCheckpoint forwards the
-    // source plan's Statistics (Spark 4 LogicalRDD.originStats), and in
-    // this loop every self-join SQUARES the estimate -- after a few
-    // rounds the BigInt exponent overflows and planning dies (measured;
-    // see GraftInternal.localCheckpointNoStats)
-    def cut(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftInternal.localCheckpointNoStats(df)
     val e0 = edges.select(
         least(col(srcCol), col(dstCol)).as("src"),
         greatest(col(srcCol), col(dstCol)).as("dst"),
@@ -594,8 +596,6 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    def cut(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftInternal.localCheckpointNoStats(df)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint(eager = true)
     val nodes = e.select(col("src").as("node"))
@@ -638,8 +638,6 @@ object Graph {
   def dagLevels(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    def cut(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftInternal.localCheckpointNoStats(df)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint(eager = true)
     val nodes = e.select(col("src").as("node"))

@@ -41,8 +41,7 @@ object Pack {
       durable: Boolean = false): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = Ranking.width(df, numPartitions)
     // Pin placement: range partitioning samples the data to pick bounds,
     // and the offsets pass + the cumsum pass MUST agree on which rows
     // landed where. Ranking.pin documents the default localCheckpoint

@@ -30,8 +30,7 @@ object PrefixSum {
       valueCol: Column, out: String = "cum",
       numPartitions: Int = 0): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = Ranking.width(df, numPartitions)
     val parted = Ranking.pin(
       df.withColumn("__v", valueCol.cast("long"))
         .repartitionByRange(n, sortCols: _*)
@@ -80,8 +79,7 @@ object PrefixSum {
       sortCols: Seq[Column], valueCol: Column, out: String = "cum",
       numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = Ranking.width(df, numPartitions)
     val parted = Ranking.pin(
       df.withColumn("__v", valueCol.cast("long"))
         .repartitionByRange(n, (groupCols ++ sortCols): _*)

@@ -23,6 +23,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object Ranking {
 
+  /** The range-partition width of the ops' passes: `numPartitions` when
+    * positive, else the session's shuffle width (read from the parsed
+    * conf, as q306's `shjSafe` does).
+    */
+  private[ops] def width(df: DataFrame, numPartitions: Int): Int =
+    if (numPartitions > 0) numPartitions
+    else df.sparkSession.sessionState.conf.numShufflePartitions
+
   /** Pin a frame's partition placement for multi-pass reuse — both
     * passes of the two-phase scan MUST see rows in identical partitions
     * (re-executing `repartitionByRange` could re-sample its boundaries).
@@ -96,10 +104,7 @@ object Ranking {
     */
   private def rangeParted(df: DataFrame, sortCols: Seq[Column],
       numPartitions: Int, durable: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    pin(df.repartitionByRange(n, sortCols: _*)
+    pin(df.repartitionByRange(width(df, numPartitions), sortCols: _*)
       .withColumn("__bucket", spark_partition_id()), durable)
   }
 
@@ -282,11 +287,8 @@ object Ranking {
     */
   private[ops] def ladderPlan(df: DataFrame, keyCols: Seq[Column],
       numPartitions: Int): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val w = Window.partitionBy("__bucket").orderBy(keyCols: _*)
-    df.repartitionByRange(n, keyCols: _*)
+    df.repartitionByRange(width(df, numPartitions), keyCols: _*)
       .withColumn("__bucket", spark_partition_id())
       .withColumn("__lr", rank().over(w).cast("long"))
       .withColumn("__ld", dense_rank().over(w).cast("long"))

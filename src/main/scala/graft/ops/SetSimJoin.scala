@@ -60,18 +60,19 @@ object SetSimJoin {
     *   changes the (still global, still total) shingle order; a hash
     *   collision could overstate one intersection by 1 — at 2^-64 per
     *   pair, the accepted negligible-probability trade.
-    * @param reuse materialize the rare-first ordered sets once
-    *   (`localCheckpoint`, the Ranking default trade: fastest, but a
-    *   lost executor after the checkpoint fails the job instead of
-    *   recomputing) — the ordered frame feeds FOUR consumers (both
-    *   prefix-join sides and both verify joins), each of which would
-    *   otherwise re-run the scan + df shuffle + reorder chain.
+    *
+    * The rare-first ordered sets are materialized once
+    * (`localCheckpoint`, the Ranking default trade: fastest, but a lost
+    * executor after the checkpoint fails the job instead of recomputing)
+    * — the ordered frame feeds FOUR consumers (both prefix-join sides and
+    * both verify joins), each of which would otherwise re-run the scan +
+    * df shuffle + reorder chain.
     */
   def jaccardSelfJoin(docs: DataFrame, idCol: String, textCol: String,
       tauNum: Int, tauDen: Int, shingleSize: Int = 3,
-      hashShingles: Boolean = false, reuse: Boolean = true): DataFrame = {
+      hashShingles: Boolean = false): DataFrame = {
     val (ordered, cands) = orderedSetsAndCandidates(
-      docs, idCol, textCol, tauNum, tauDen, shingleSize, hashShingles, reuse)
+      docs, idCol, textCol, tauNum, tauDen, shingleSize, hashShingles)
 
     // Exact verification on survivors only.
     cands
@@ -103,7 +104,7 @@ object SetSimJoin {
     */
   def jaccardJoin(left: DataFrame, right: DataFrame, idCol: String,
       textCol: String, tauNum: Int, tauDen: Int, shingleSize: Int = 3,
-      hashShingles: Boolean = false, reuse: Boolean = true): DataFrame = {
+      hashShingles: Boolean = false): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       s"threshold must satisfy 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
 
@@ -124,7 +125,7 @@ object SetSimJoin {
       .agg(first("shArr").as("sh"))
       .select(col("side"), col("id"), col("sh"),
         size(col("sh")).cast("long").as("n"))
-    val ordered = if (reuse) reordered.localCheckpoint() else reordered
+    val ordered = reordered.localCheckpoint()
 
     val ceilTauN = expr(s"(n * $tauNum + ${tauDen - 1}) div $tauDen")
     val pre = ordered
@@ -169,8 +170,7 @@ object SetSimJoin {
     */
   private[graft] def orderedSetsAndCandidates(docs: DataFrame, idCol: String,
       textCol: String, tauNum: Int, tauDen: Int,
-      shingleSize: Int, hashShingles: Boolean = false,
-      reuse: Boolean = false): (DataFrame, DataFrame) = {
+      shingleSize: Int, hashShingles: Boolean = false): (DataFrame, DataFrame) = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       s"threshold must satisfy 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
 
@@ -205,7 +205,7 @@ object SetSimJoin {
       .groupBy("id")
       .agg(first("shArr").as("sh"))
       .select(col("id"), col("sh"), size(col("sh")).cast("long").as("n"))
-    val ordered = if (reuse) reordered.localCheckpoint() else reordered
+    val ordered = reordered.localCheckpoint()
 
     // Prefix length p = n − ⌈τ·n⌉ + 1, all-integer ceiling.
     val ceilTauN = expr(s"(n * $tauNum + ${tauDen - 1}) div $tauDen")

@@ -25,6 +25,13 @@ import scala.collection.immutable.ListMap
   * hash-seeded (MinHash/SimHash/LSH) get either a construction whose output
   * is provable in SQL (injected exact duplicates) or a rows-only check.
   *
+  * A fixture or oracle used by more than one entry is defined once and
+  * referred to by name: the shared fixtures (e.g. [[clickNeedles]],
+  * [[e6]]) and oracle texts (`...OracleSql`) below, or beside their SQL
+  * twin in the slice that owns it (`CatalogGraphMining.copurchaseEdges`
+  * beside `edgesSqlCte`). Entries sharing one oracle text are route
+  * twins: they must return identical rows (CatalogTwinsSpec).
+  *
   * Determinism rules applied throughout:
   *  - every result has a total ORDER BY;
   *  - double aggregates are rounded (2-6 dp) to absorb FP association
@@ -229,6 +236,11 @@ object Catalog {
   // identical integer purely in registers.
   private[queries] def cents(c: Column): Column =
     (c * 100 + signum(c) * 0.5).cast("long")
+  // The integer 1e-6 snap of a double, half up without round() (same
+  // register-only trade as `cents`): the e6 grid every cross-engine double
+  // output is compared on; the oracle side spells it
+  // `CAST(floor(x * 1000000 + 0.5) AS BIGINT)`.
+  private[queries] def e6(c: Column): Column = floor(c * 1000000 + 0.5).cast("long")
   private[queries] def exactSum(c: Column): Column = sum(cents(c)).cast("double") / 100.0
   private[queries] def exactAvg(c: Column): Column =
     sum(cents(c)).cast("double") / 100.0 / count(c)
@@ -328,6 +340,24 @@ object Catalog {
   private[queries] def qualitySelectSql: String =
     s"SELECT doc_id, $qualityExprSql AS quality FROM ($qualityInnerSql)"
 
+  /** The labelled-score fixture of the q186/q187/q357 evaluation family:
+    * per document the 4-dp quality score as an integer (`__s`) and the
+    * en-language label (`__y`); [[qualityLabelledSqlCte]] is its DuckDB
+    * twin, the `sc` CTE over (s, y).
+    */
+  private[queries] def qualityLabelled(s: SparkSession, d: String): DataFrame = {
+    val stops = TF.langMarkers("en")
+    t(s, d, "documents").select(
+      (TF.qualityScore(col("text"), stops) * 10000 + 0.5).cast("long").as("__s"),
+      when(col("lang") === "en", 1L).otherwise(0L).as("__y"))
+  }
+
+  private[queries] def qualityLabelledSqlCte: String =
+    s"""sc AS (SELECT CAST(round(($qualityExprSql) * 10000) AS BIGINT) AS s,
+                           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+                    FROM ($qualityInnerSql) q
+                    JOIN documents USING (doc_id))"""
+
   /** q62/q88's shared oracle — the two entries exercise the plain and the
     * bloom-prefiltered decontamination paths, which must produce the
     * identical (doc_id, n_shared_grams) result.
@@ -347,6 +377,223 @@ object Catalog {
     FROM (SELECT doc_id, gram FROM sh WHERE NOT is_train) e
     JOIN (SELECT DISTINCT gram FROM sh WHERE is_train) t USING (gram)
     GROUP BY e.doc_id ORDER BY e.doc_id"""
+
+  /** The as-of needles: every click's (event_id, user_id, ts), from a
+    * batch or a streaming events frame.
+    */
+  private[queries] def clickNeedles(ev: DataFrame): DataFrame =
+    ev.filter(col("event_type") === "click").select("event_id", "user_id", "ts")
+
+  /** The as-of purchase side: one row per (user_id, p_ts) carrying the max
+    * value — `p_value`, or `p_cents` when `inCents` — so exact-ts ties
+    * cannot make the as-of pick nondeterministic in any engine.
+    */
+  private[queries] def purchasesByUserTs(ev: DataFrame,
+      inCents: Boolean = false): DataFrame = {
+    val top =
+      if (inCents) max(cents(col("value"))).as("p_cents")
+      else max(col("value")).as("p_value")
+    ev.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"), col("ts").as("p_ts"))
+      .agg(top)
+  }
+
+  /** The click-to-purchase stream-stream join of q136/q360/q364/q378:
+    * the clicks ([[clickNeedles]]) and the purchases' (user_id, ts, value)
+    * read as two streams of one staged events copy in one streaming
+    * clone, joined on user_id within 1 hour of the click, and run to the
+    * append-mode memory table `name`.
+    */
+  private[queries] def clickPurchaseStreamJoin(s: SparkSession, d: String,
+      name: String, joinType: String = "inner", watermark: String = "2 hours",
+      rightWatermark: Option[String] = None): DataFrame = {
+    val dir = stageEventsDir(d)
+    val ss = streamingSession(s)
+    try {
+      def src = stagedEventsStream(ss, dir)
+      val clicks = clickNeedles(src)
+      val purchases = src.filter(col("event_type") === "purchase")
+        .select("user_id", "ts", "value")
+      val joined = graft.streaming.StreamingIngest.streamStreamJoin(
+        clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
+        within = "1 hour", watermark = watermark, joinType = joinType,
+        rightWatermark = rightWatermark)
+      runToMemoryTable(joined, name, outputMode = "append")
+    } finally dropStaged(dir)
+  }
+
+  /** The calendar-bounded as-of dimension: per (event_type, day) the max
+    * value in cents, valid from the NEXT day's midnight (`d_ts`) — so an
+    * event is priced by yesterday's max.
+    */
+  private[queries] def dayMaxByType(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), date_trunc("day", col("ts")).as("__d"))
+      .agg(max(cents(col("value"))).as("day_max_cents"))
+      .select(col("event_type"),
+        (col("__d") + expr("INTERVAL 1 DAY")).as("d_ts"),
+        col("day_max_cents"))
+
+  /** Distinct users per event type — shared by q60 (dropDuplicates state)
+    * and q237 (within-watermark dedup): both streaming dedups must
+    * reproduce the batch count(DISTINCT).
+    */
+  private[queries] def distinctUsersOracleSql: String = """
+        SELECT event_type, count(DISTINCT user_id) AS n_users
+        FROM events GROUP BY event_type ORDER BY event_type"""
+
+  /** The ANN quality gate — shared by q30 (LSH) and q44 (IVF): every one
+    * of the first 20 queries clears its index's quality floor
+    * ([[Q30_QUALITY_FLOOR]], [[Q44_QUALITY_FLOOR]]).
+    */
+  private[queries] def annQualityOracleSql: String = """
+        SELECT vec_id AS query_id, TRUE AS quality_ok
+        FROM embeddings WHERE vec_id < 20 ORDER BY query_id"""
+
+  /** Per-priority count and exact revenue of lineitem joined to orders —
+    * shared by q85 (salted join) and q112 (bucketed join): both join
+    * strategies are result-invariant against the plain join.
+    */
+  private[queries] def priorityRevenueOracleSql: String = s"""
+        SELECT o_orderpriority, count(*) AS n,
+               ${revenueSql("l_extendedprice", "l_discount")} AS revenue
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY o_orderpriority ORDER BY o_orderpriority"""
+
+  /** Tokens occurring at least 500 times — shared by q86 (batch
+    * Misra-Gries) and q427 (its streaming form): both must return exactly
+    * the HAVING query.
+    */
+  private[queries] def heavyHittersOracleSql: String = s"""
+        SELECT token, count(*) AS n
+        FROM (SELECT unnest($toksSql) AS token FROM documents)
+        GROUP BY token HAVING count(*) >= 500 ORDER BY token"""
+
+  /** Top-3 events per user by (value cents desc, event_id asc) — shared by
+    * q335 (TopKPerKey) and q336 (its row_number window twin).
+    */
+  private[queries] def topkPerUserOracleSql: String = s"""
+        WITH r AS (SELECT event_id, user_id, ${centsSql("value")} AS value_cents,
+                          row_number() OVER (PARTITION BY user_id
+                                             ORDER BY ${centsSql("value")} DESC,
+                                                      event_id ASC) AS rk
+                   FROM events)
+        SELECT event_id, user_id, value_cents
+        FROM r WHERE rk <= 3
+        ORDER BY user_id, value_cents DESC, event_id ASC"""
+
+  /** Backward as-of of each click to its user's latest deduped purchase —
+    * shared by q339 (merge exec), q340 (union+window form) and q353
+    * (broadcast route) over [[clickNeedles]] and [[purchasesByUserTs]].
+    */
+  private[queries] def asofPurchaseOracleSql: String = """
+        WITH p AS (SELECT user_id, ts, max(value) AS p_value FROM events
+                   WHERE event_type = 'purchase' GROUP BY 1, 2)
+        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_value
+        FROM (SELECT event_id, user_id, ts FROM events
+              WHERE event_type = 'click') l
+        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
+        ORDER BY l.event_id"""
+
+  /** rank() <= 2 per event type over 500-cent value buckets, ascending —
+    * shared by q341 (TopKPerKey RANK mode) and q345 (its window twin).
+    */
+  private[queries] def topkRankOracleSql: String = s"""
+        WITH b AS (SELECT event_id, event_type,
+                          ${centsSql("value")} // 500 AS bucket FROM events),
+        r AS (SELECT event_id, event_type, bucket,
+                     rank() OVER (PARTITION BY event_type
+                                  ORDER BY bucket ASC) AS rk
+              FROM b)
+        SELECT event_id, event_type, bucket FROM r WHERE rk <= 2
+        ORDER BY event_type, bucket, event_id"""
+
+  /** The wide-right-side backward as-of (six derived purchase columns) —
+    * shared by q351 (merge exec) and q352 (union+window twin).
+    */
+  private[queries] def asofWideOracleSql: String = s"""
+        WITH p0 AS (SELECT user_id, ts, max(${centsSql("value")}) AS p_cents
+                    FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+        p AS (SELECT user_id, ts, p_cents, p_cents // 100 AS p_units,
+                     p_cents % 97 AS p_mod, p_cents * p_cents AS p_sq,
+                     -p_cents AS p_neg, p_cents // 500 AS p_bucket
+              FROM p0)
+        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_cents,
+               p.p_units, p.p_mod, p.p_sq, p.p_neg, p.p_bucket
+        FROM (SELECT event_id, user_id, ts FROM events
+              WHERE event_type = 'click') l
+        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
+        ORDER BY l.event_id"""
+
+  /** Backward as-of of every event to its type's day-max dimension
+    * ([[dayMaxByType]]) — shared by q354 (broadcast route), q355 (merge
+    * twin), q383 (auto dispatch) and q400 (auto dispatch, merge route).
+    */
+  private[queries] def asofDayMaxOracleSql: String = s"""
+        WITH dim AS (SELECT event_type,
+                            date_trunc('day', ts) + INTERVAL 1 DAY AS d_ts,
+                            max(${centsSql("value")}) AS day_max_cents
+                     FROM events GROUP BY 1, 2)
+        SELECT l.event_id, l.event_type, l.ts, dim.d_ts AS asof_ts,
+               dim.day_max_cents
+        FROM (SELECT event_id, event_type, ts FROM events) l
+        ASOF LEFT JOIN dim
+          ON l.event_type = dim.event_type AND l.ts >= dim.d_ts
+        ORDER BY l.event_id"""
+
+  /** Per (event type, day) exact cent sums and counts — shared by q401
+    * (manifest sink round trip) and q402 (manifest append).
+    */
+  private[queries] def manifestOracleSql: String = s"""
+        SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
+               CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_cents,
+               count(*) AS n
+        FROM events GROUP BY 1, 2 ORDER BY event_type, day"""
+
+  /** Nearest-in-time purchase within 30 minutes of each click — shared by
+    * q403 (auto route) and q426 (forced merge route).
+    */
+  private[queries] def asofNearestOracleSql: String = s"""
+        WITH p AS (SELECT user_id, ts AS p_ts,
+                          max(${centsSql("value")}) AS p_cents
+                   FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+        c AS (SELECT event_id, user_id, ts FROM events
+              WHERE event_type = 'click'),
+        j AS (SELECT c.event_id, c.user_id, c.ts,
+                (SELECT p.p_ts FROM p WHERE p.user_id = c.user_id
+                   AND abs(epoch_us(p.p_ts) - epoch_us(c.ts)) <= 1800000000
+                 ORDER BY abs(epoch_us(p.p_ts) - epoch_us(c.ts)), p.p_ts
+                 LIMIT 1) AS asof_ts
+              FROM c)
+        SELECT j.event_id, j.user_id, j.ts, j.asof_ts, p.p_cents
+        FROM j LEFT JOIN p ON j.user_id = p.user_id AND j.asof_ts = p.p_ts
+        ORDER BY j.event_id"""
+
+  /** One-sided CUSUM over the daily mean value (e6 integers) — shared by
+    * q419 (batch) and q421 (streaming).
+    */
+  private[queries] def cusumOracleSql: String = s"""
+        WITH daily AS (SELECT date_diff('day', DATE '1970-01-01',
+                                CAST(ts AS DATE)) AS day,
+                              count(*) AS n,
+                              sum(${centsSql("value")}) AS sc
+                       FROM events GROUP BY 1),
+        ref AS (SELECT CAST(floor(CAST(sum(sc) AS DOUBLE)
+                  / CAST(sum(n) AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS mu
+                FROM daily WHERE day <= (SELECT min(day) + 9 FROM daily)),
+        se AS (SELECT day, CAST(floor(CAST(sc AS DOUBLE)
+                 / CAST(n AS DOUBLE) * 1e6 + 0.5) AS BIGINT) - mu AS y,
+                 CAST(floor(CAST(sc AS DOUBLE) / CAST(n AS DOUBLE) * 1e6
+                   + 0.5) AS BIGINT) AS x
+               FROM daily, ref),
+        cu AS (SELECT day, x, sum(y) OVER (ORDER BY day
+                 ROWS UNBOUNDED PRECEDING) AS cum FROM se),
+        st AS (SELECT day, x, cum - least(0, min(cum) OVER (ORDER BY day
+                 ROWS UNBOUNDED PRECEDING)) AS st FROM cu),
+        pk AS (SELECT max(st) AS peak FROM st)
+        SELECT CAST(day AS BIGINT) AS day_idx, x AS mean_e6,
+               CAST(st AS BIGINT) AS cusum_e6,
+               (st > peak // 2) AS alarm
+        FROM st, pk ORDER BY day_idx"""
 
   /** Stage the events table into a temp directory for the file-stream
     * source (which monitors directories), tolerating both the single-file

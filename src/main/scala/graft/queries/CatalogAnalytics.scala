@@ -255,8 +255,7 @@ private[queries] object CatalogAnalytics {
     "q43_asof_join" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
+        val clicks = clickNeedles(ev)
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("ts").as("p_ts"), col("value").as("p_value"))
         graft.ops.AsOfJoin.asofAuto(clicks, purchases,
@@ -342,9 +341,7 @@ private[queries] object CatalogAnalytics {
               >= col("exact_sum") * Q44_QUALITY_FLOOR).as("quality_ok"))
           .orderBy("query_id")
       },
-      oracle = Some("""
-        SELECT vec_id AS query_id, TRUE AS quality_ok
-        FROM embeddings WHERE vec_id < 20 ORDER BY query_id""")),
+      oracle = Some(annQualityOracleSql)),
 
     // Connected components over near-dup PAIRS → duplicate GROUPS with a
     // canonical id (the transitive-closure step after any LSH pass).
@@ -845,9 +842,7 @@ private[queries] object CatalogAnalytics {
         } finally dropStaged(dir)
         table.orderBy("event_type")
       },
-      oracle = Some("""
-        SELECT event_type, count(DISTINCT user_id) AS n_users
-        FROM events GROUP BY event_type ORDER BY event_type""")),
+      oracle = Some(distinctUsersOracleSql)),
 
     // Z-order (Morton) clustering key — the multi-column layout
     // optimization behind Delta/Iceberg Z-ORDER (ops.ZOrder). The bit

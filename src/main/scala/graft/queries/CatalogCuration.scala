@@ -116,10 +116,9 @@ private[queries] object CatalogCuration {
         val uni = pairs.filter(col("__train"))
           .groupBy("__w1").agg(count(lit(1)).as("__c1"))
         val vocab = uni.agg(count(lit(1)).as("__v")) // |history types|, 1 row
-        val nll = -floor(log(
+        val nll = -e6(log(
           (coalesce(col("__c2"), lit(0L)) + 1L).cast("double") /
-            (coalesce(col("__c1"), lit(0L)) + col("__v")).cast("double"))
-          * 1000000.0 + 0.5).cast("long")
+            (coalesce(col("__c1"), lit(0L)) + col("__v")).cast("double")))
         pairs.filter(!col("__train"))
           .join(big, Seq("__bg"), "left")
           .join(uni, Seq("__w1"), "left")
@@ -503,8 +502,7 @@ private[queries] object CatalogCuration {
           (length(lt) - length(regexp_replace(lt, ch, ""))).cast("long"))
         val other = n - cnts.reduce(_ + _)
         def term(c: org.apache.spark.sql.Column) =
-          when(c > 0, c * floor(log(c.cast("double") / n.cast("double"))
-            * 1000000.0 + 0.5).cast("long")).otherwise(0L)
+          when(c > 0, c * e6(log(c.cast("double") / n.cast("double")))).otherwise(0L)
         val sumTerms = (cnts.map(term) :+ term(other)).reduce(_ + _)
         t(s, d, "documents")
           .select(col("doc_id"), n.as("n_chars"), (-sumTerms).as("__s"))
@@ -945,9 +943,7 @@ private[queries] object CatalogCuration {
         } finally dropStaged(dir)
         table.orderBy("event_type")
       },
-      oracle = Some("""
-        SELECT event_type, count(DISTINCT user_id) AS n_users
-        FROM events GROUP BY event_type ORDER BY event_type"""),
+      oracle = Some(distinctUsersOracleSql),
       bench = true, streaming = true), // TTL-dedup state-shape probe (r10 verdict #7)
 
     // Clustering-quality readout: per-label mean silhouette over SQUARED
@@ -1192,9 +1188,9 @@ private[queries] object CatalogCuration {
         byDur.crossJoin(broadcast(total))
           .withColumn("n_risk",
             col("__n") - coalesce(sum(col("__all")).over(wCum), lit(0L)))
-          .withColumn("__term", floor(log(
+          .withColumn("__term", e6(log(
             (col("n_risk") - col("n_deaths")).cast("double")
-              / col("n_risk").cast("double")) * 1000000.0 + 0.5).cast("long"))
+              / col("n_risk").cast("double"))))
           .filter(col("n_deaths") > 0 && col("n_deaths") < col("n_risk"))
           .withColumn("log_surv_e6", sum(col("__term")).over(wRun))
           .select(col("dur"), col("n_risk"), col("n_deaths"),
@@ -1559,8 +1555,8 @@ private[queries] object CatalogCuration {
           .agg(count(lit(1)).as("__c"))
           .withColumn("__n",
             sum(col("__c")).over(Window.partitionBy("user_id")))
-          .withColumn("__t", col("__c") * floor(log(col("__c").cast("double")
-            / col("__n").cast("double")) * 1000000.0 + 0.5).cast("long"))
+          .withColumn("__t", col("__c") * e6(log(col("__c").cast("double")
+            / col("__n").cast("double"))))
           .groupBy("user_id")
           .agg(max(col("__n")).as("__n"), sum(col("__t")).as("__s"))
           .select(col("user_id"), expr("(-__s) div __n").as("hour_entropy_e6"))
@@ -2096,10 +2092,8 @@ private[queries] object CatalogCuration {
           .withColumn("__u", expr(
             "(CAST(conv(substring(md5(event_type), 1, 8), 16, 10) AS DOUBLE)"
               + " + 0.5) / 4294967296.0"))
-          .withColumn("noise_e6", floor(
-            lit(-b) * signum(col("__u") - 0.5)
-              * log(lit(1.0) - lit(2.0) * abs(col("__u") - 0.5))
-              * 1e6 + 0.5).cast("long"))
+          .withColumn("noise_e6", e6(lit(-b) * signum(col("__u") - 0.5)
+              * log(lit(1.0) - lit(2.0) * abs(col("__u") - 0.5))))
           .select(col("event_type"), col("n_true"), col("noise_e6"),
             (col("n_true") * 1000000L + col("noise_e6")).as("released_e6"))
           .orderBy("event_type")

@@ -99,10 +99,7 @@ private[queries] object CatalogGeoWave {
     // vertex-keyed semi-joins, lineage-cut per round.
     "q253_kcore" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PartEdgeSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = CatalogGraphMining.copurchaseEdges(s, d, "l_partkey", PartEdgeSupport)
         Graph.kCorePeel(edges, "src", "dst", CoreK, CorePeelRounds)
           .orderBy("node")
       },
@@ -219,10 +216,7 @@ private[queries] object CatalogGeoWave {
     // degrees still feed the score.
     "q256_common_neighbors" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PartEdgeSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = CatalogGraphMining.copurchaseEdges(s, d, "l_partkey", PartEdgeSupport)
         Graph.commonNeighbors(edges, "src", "dst", CnMaxDeg, CnTopK)
       },
       oracle = Some(s"""
@@ -434,10 +428,7 @@ private[queries] object CatalogGeoWave {
     // folded into the key (state O(landmarks x nodes) by construction).
     "q267_harmonic_centrality" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PartEdgeSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = CatalogGraphMining.copurchaseEdges(s, d, "l_partkey", PartEdgeSupport)
         val nodes = edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node"))).distinct()
         val lms = nodes.orderBy("node").limit(LandmarkK)
@@ -577,10 +568,7 @@ private[queries] object CatalogGeoWave {
     // would lift the moments to DECIMAL(38,0) — documented trade).
     "q273_assortativity" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PartEdgeSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = CatalogGraphMining.copurchaseEdges(s, d, "l_partkey", PartEdgeSupport)
           .localCheckpoint(eager = true) // feeds bi, deg
         val bi = edges.unionAll(
           edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -719,10 +707,7 @@ private[queries] object CatalogGeoWave {
     // Same bounded frontier loop and unrolled oracle as q267.
     "q347_hop_histogram" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PartEdgeSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = CatalogGraphMining.copurchaseEdges(s, d, "l_partkey", PartEdgeSupport)
         val nodes = edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node"))).distinct()
         val lms = nodes.orderBy("node").limit(LandmarkK)

@@ -137,6 +137,25 @@ private[queries] object CatalogGraphMining {
               FROM po a JOIN po b ON a.b = b.b AND a.i < b.i
               GROUP BY 1, 2 HAVING count(*) >= $minSup)"""
 
+  /** The part co-purchase graph's CTEs with `bi`, each edge in both
+    * directions — the prefix of the q176/q391/q180/q185/q213 oracles.
+    */
+  private def partEdgesBiSqlCte: String =
+    s"""${edgesSqlCte("l_partkey", PairMinSupport)},
+        bi AS (SELECT s AS src, d AS dst FROM e
+               UNION ALL SELECT d, s FROM e)"""
+
+  /** The Scala twin of [[edgesSqlCte]]: the canonical (src < dst)
+    * co-purchase edges of lineitem over `itemCol` with support >=
+    * `minSupport`.
+    */
+  private[queries] def copurchaseEdges(s: org.apache.spark.sql.SparkSession,
+      d: String, itemCol: String, minSupport: Long): DataFrame =
+    Baskets.frequentItemPairs(
+        t(s, d, "lineitem").select(col("l_orderkey"), col(itemCol)),
+        "l_orderkey", itemCol, minSupport)
+      .select(col("item_a").as("src"), col("item_b").as("dst"))
+
   def entries: Seq[(String, QueryDef)] = Seq(
 
     // Corpus-global paragraph-level exact dedup (CCNet/RefinedWeb's
@@ -222,10 +241,7 @@ private[queries] object CatalogGraphMining {
     // integers.
     "q175_triangle_census" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-            "l_orderkey", "l_suppkey", SupplierEdgeSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_suppkey", SupplierEdgeSupport)
         Graph.triangleCensus(edges, "src", "dst")
       },
       oracle = Some(s"""
@@ -264,10 +280,7 @@ private[queries] object CatalogGraphMining {
     // constants. Top-50 by rank, id tie-break.
     "q176_pagerank" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
         Graph.pageRank(edges, "src", "dst", PrIters, PrDamping)
           .orderBy(col("pagerank").desc, col("node"))
           .limit(50)
@@ -286,9 +299,7 @@ private[queries] object CatalogGraphMining {
                  GROUP BY bi.dst) c ON n.node = c.node)"""
         }.mkString(",\n")
         s"""
-        WITH ${edgesSqlCte("l_partkey", PairMinSupport)},
-        bi AS (SELECT s AS src, d AS dst FROM e
-               UNION ALL SELECT d, s FROM e),
+        WITH $partEdgesBiSqlCte,
         deg AS (SELECT src, count(*) AS dg FROM bi GROUP BY src),
         nodes AS (SELECT src AS node FROM deg),
         nn AS (SELECT count(*) AS n FROM nodes),
@@ -311,10 +322,7 @@ private[queries] object CatalogGraphMining {
     // score, id tie-break; the seed collect is 5 ids — bounded.
     "q391_personalized_pagerank" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
           .localCheckpoint(eager = true) // seed pick + PPR loop share it
         val seeds = edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node")))
@@ -343,9 +351,7 @@ private[queries] object CatalogGraphMining {
                  GROUP BY bi.dst) c ON n.node = c.node)"""
         }.mkString(",\n")
         s"""
-        WITH ${edgesSqlCte("l_partkey", PairMinSupport)},
-        bi AS (SELECT s AS src, d AS dst FROM e
-               UNION ALL SELECT d, s FROM e),
+        WITH $partEdgesBiSqlCte,
         deg AS (SELECT src, count(*) AS dg FROM bi GROUP BY src),
         nodes AS (SELECT src AS node FROM deg),
         seeds AS (SELECT node FROM nodes ORDER BY node LIMIT $PprSeeds),
@@ -483,10 +489,7 @@ private[queries] object CatalogGraphMining {
     // nothing to round.
     "q180_bfs_hops" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
         val nodes = edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node"))).distinct()
         val seeds = nodes.filter(col("node") % 97 === 0)
@@ -502,9 +505,7 @@ private[queries] object CatalogGraphMining {
                       UNION ALL SELECT node, $k FROM f$k)"""
         }.mkString(",\n")
         s"""
-        WITH ${edgesSqlCte("l_partkey", PairMinSupport)},
-        bi AS (SELECT s AS src, d AS dst FROM e
-               UNION ALL SELECT d, s FROM e),
+        WITH $partEdgesBiSqlCte,
         nodes AS (SELECT DISTINCT src AS node FROM bi),
         f0 AS (SELECT node FROM nodes WHERE node % 97 = 0),
         v0 AS (SELECT node, 0 AS dist FROM f0),
@@ -708,10 +709,7 @@ private[queries] object CatalogGraphMining {
     // the adjacency (cannot happen on an undirected expansion).
     "q185_random_walks" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
         val nodes = edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node"))).distinct()
         val seeds = nodes.filter(col("node") % 97 === 0)
@@ -730,9 +728,7 @@ private[queries] object CatalogGraphMining {
                FROM w${k - 1} w)"""
         }.mkString(",\n")
         s"""
-        WITH ${edgesSqlCte("l_partkey", PairMinSupport)},
-        bi AS (SELECT s AS src, d AS dst FROM e
-               UNION ALL SELECT d, s FROM e),
+        WITH $partEdgesBiSqlCte,
         adj AS (SELECT src, dst,
                        row_number() OVER (PARTITION BY src ORDER BY dst) AS idx
                 FROM bi),
@@ -757,10 +753,7 @@ private[queries] object CatalogGraphMining {
     // + neg_s), all integer until one final division.
     "q186_auc" -> QueryDef(
       fn = (s, d) => {
-        val stops = TF.langMarkers("en")
-        val scored = t(s, d, "documents").select(
-          (TF.qualityScore(col("text"), stops) * 10000 + 0.5).cast("long").as("__s"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("__y"))
+        val scored = qualityLabelled(s, d)
         val grp = scored.groupBy("__s")
           .agg(sum(col("__y")).as("__pos"),
             (count(lit(1)) - sum(col("__y"))).as("__neg"))
@@ -775,10 +768,7 @@ private[queries] object CatalogGraphMining {
             / (lit(2L) * col("n_pos") * col("n_neg")).cast("double"), 6).as("auc"))
       },
       oracle = Some(s"""
-        WITH sc AS (SELECT CAST(round(($qualityExprSql) * 10000) AS BIGINT) AS s,
-                           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-                    FROM ($qualityInnerSql) q
-                    JOIN documents USING (doc_id)),
+        WITH ${qualityLabelledSqlCte},
         g AS (SELECT s, CAST(sum(y) AS BIGINT) AS pos,
                      CAST(count(*) - sum(y) AS BIGINT) AS neg
               FROM sc GROUP BY s),
@@ -802,10 +792,7 @@ private[queries] object CatalogGraphMining {
     // weighted bin gaps never arises.
     "q187_calibration" -> QueryDef(
       fn = (s, d) => {
-        val stops = TF.langMarkers("en")
-        val scored = t(s, d, "documents").select(
-          (TF.qualityScore(col("text"), stops) * 10000 + 0.5).cast("long").as("__s"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("__y"))
+        val scored = qualityLabelled(s, d)
         val binned = scored
           .withColumn("bin", least(col("__s") / 1000, lit(9L)).cast("long"))
           .groupBy("bin")
@@ -823,10 +810,7 @@ private[queries] object CatalogGraphMining {
           .orderBy("bin")
       },
       oracle = Some(s"""
-        WITH sc AS (SELECT CAST(round(($qualityExprSql) * 10000) AS BIGINT) AS s,
-                           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-                    FROM ($qualityInnerSql) q
-                    JOIN documents USING (doc_id)),
+        WITH ${qualityLabelledSqlCte},
         b AS (SELECT least(s // 1000, 9) AS bin, count(*) AS n,
                      CAST(sum(s) AS BIGINT) AS ssum,
                      CAST(sum(y) AS BIGINT) AS pos
@@ -919,10 +903,7 @@ private[queries] object CatalogGraphMining {
     // output is O(labels).
     "q213_label_propagation" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
         Graph.labelPropagation(edges, "src", "dst", rounds = 3)
           .groupBy("label").agg(count(lit(1)).as("n_members"))
           .orderBy("label")
@@ -939,9 +920,7 @@ private[queries] object CatalogGraphMining {
                  FROM c$k) WHERE rn = 1)"""
         }.mkString(",\n")
         s"""
-        WITH ${edgesSqlCte("l_partkey", PairMinSupport)},
-        bi AS (SELECT s AS src, d AS dst FROM e
-               UNION ALL SELECT d, s FROM e),
+        WITH $partEdgesBiSqlCte,
         l0 AS (SELECT node, node AS label
                FROM (SELECT DISTINCT src AS node FROM bi)),
         $rounds
@@ -961,10 +940,7 @@ private[queries] object CatalogGraphMining {
     // association). Top-10 components by size + the global Q.
     "q189_component_modularity" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
           .localCheckpoint(eager = true) // feeds labels, degrees, m
         val comp = graft.ops.ConnectedComponents
           .components(edges, "src", "dst")
@@ -1153,10 +1129,7 @@ private[queries] object CatalogGraphMining {
     // the level histogram, exact longs.
     "q348_dag_levels" -> QueryDef(
       fn = (s, d) => {
-        val edges = Baskets.frequentItemPairs(
-            t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-            "l_orderkey", "l_partkey", PairMinSupport)
-          .select(col("item_a").as("src"), col("item_b").as("dst"))
+        val edges = copurchaseEdges(s, d, "l_partkey", PairMinSupport)
         Graph.dagLevels(edges, "src", "dst", DagLevelRounds)
           .groupBy("level").agg(count(lit(1)).as("n_nodes"))
           .orderBy("level")

@@ -170,11 +170,7 @@ private[queries] object CatalogInfra {
           s.sql("DROP TABLE IF EXISTS q112_ord_b")
         }
       },
-      oracle = Some(s"""
-        SELECT o_orderpriority, count(*) AS n,
-               ${revenueSql("l_extendedprice", "l_discount")} AS revenue
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
+      oracle = Some(priorityRevenueOracleSql)),
 
     // Last-touch attribution: each purchase credits the most recent
     // PRECEDING non-purchase event of the same user (frame ends at 1
@@ -940,20 +936,7 @@ private[queries] object CatalogInfra {
     // would flip boundary-exact pairs.
     "q136_stream_stream_join" -> QueryDef(
       fn = (s, d) => {
-        val dir = stageEventsDir(d)
-        val ss = streamingSession(s)
-        val table = try {
-          def src = stagedEventsStream(ss, dir)
-          val clicks = src.filter(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          val purchases = src.filter(col("event_type") === "purchase")
-            .select("user_id", "ts", "value")
-          val joined = graft.streaming.StreamingIngest.streamStreamJoin(
-            clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
-            within = "1 hour", watermark = "2 hours")
-          runToMemoryTable(joined, "q136_mem", outputMode = "append")
-        } finally dropStaged(dir)
-        table
+        clickPurchaseStreamJoin(s, d, "q136_mem")
           .groupBy((col("user_id") % 10).as("bucket"))
           .agg(count(lit(1)).as("n"), exactSum(col("r_value")).as("sum_value"))
           .orderBy("bucket")
@@ -1069,11 +1052,7 @@ private[queries] object CatalogInfra {
     "q401_manifest_sink_roundtrip" -> QueryDef(
       fn = (s, d) => {
         val dir = manifestDir("q401", d)
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(sum(cents(col("value"))).as("sum_cents"),
-            count(lit(1)).as("n"))
+        val daily = manifestDaily(s, d)
         graft.sources.ManifestTable.commit(
           daily.filter(dayofmonth(to_date(col("day"))) <= 15), dir, "half")
         graft.sources.ManifestTable.commit(daily, dir, "full")
@@ -1082,11 +1061,7 @@ private[queries] object CatalogInfra {
         graft.sources.ManifestTable.read(s, dir)
           .orderBy("event_type", "day")
       },
-      oracle = Some(s"""
-        SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-               CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_cents,
-               count(*) AS n
-        FROM events GROUP BY 1, 2 ORDER BY event_type, day""")),
+      oracle = Some(manifestOracleSql)),
 
     // Append-mode composition of the manifest sink: three disjoint
     // day-range slices land as three append commits (each snapshot =
@@ -1097,11 +1072,7 @@ private[queries] object CatalogInfra {
     "q402_manifest_append" -> QueryDef(
       fn = (s, d) => {
         val dir = manifestDir("q402", d)
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(sum(cents(col("value"))).as("sum_cents"),
-            count(lit(1)).as("n"))
+        val daily = manifestDaily(s, d)
         def slice(lo: Int, hi: Int) = daily
           .filter(dayofmonth(to_date(col("day"))).between(lo, hi))
         graft.sources.ManifestTable.commit(slice(1, 10), dir, "d01-10", mode = "append")
@@ -1112,11 +1083,7 @@ private[queries] object CatalogInfra {
         graft.sources.ManifestTable.read(s, dir)
           .orderBy("event_type", "day")
       },
-      oracle = Some(s"""
-        SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-               CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_cents,
-               count(*) AS n
-        FROM events GROUP BY 1, 2 ORDER BY event_type, day""")),
+      oracle = Some(manifestOracleSql)),
 
     // EXACTLY-ONCE streaming sink via the manifest table (round 14) —
     // the composition the two pieces exist for: each micro-batch lands
@@ -1166,6 +1133,14 @@ private[queries] object CatalogInfra {
         FROM events GROUP BY event_type ORDER BY event_type"""),
       streaming = true),
   )
+
+  /** q401/q402's committed table: per (event_type, day) exact cent sums and
+    * counts — the rows [[manifestOracleSql]] recomputes.
+    */
+  private def manifestDaily(s: SparkSession, d: String): DataFrame =
+    t(s, d, "events")
+      .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      .agg(sum(cents(col("value"))).as("sum_cents"), count(lit(1)).as("n"))
 
   /** Fresh manifest-table dir per (query, sf) run — reruns must exercise
     * the commit protocol from empty, not append to a previous run's log.

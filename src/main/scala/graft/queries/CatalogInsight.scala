@@ -155,7 +155,38 @@ private[graft] object CatalogInsight {
     (tr, rs)
   }
 
-  // ---- q310 shared SQL: the block-interaction edge list ----------------
+  /** q341/q342/q345's fixture: every event's 500-cent value bucket,
+    * (event_id, event_type, bucket) — coarse enough that rank ties are
+    * the common case.
+    */
+  private def valueBuckets(s: SparkSession, d: String): DataFrame =
+    t(s, d, "events")
+      .select(col("event_id"), col("event_type"), cents(col("value")).as("__c"))
+      .select(col("event_id"), col("event_type"), expr("__c div 500").as("bucket"))
+
+  /** Events per (event_type, calendar day `__day`) as `n` — the daily
+    * series q315, q325, q329 and q365 fit.
+    */
+  private def dailyTypeCounts(s: SparkSession, d: String): DataFrame =
+    t(s, d, "events")
+      .groupBy(col("event_type"), to_date(col("ts")).as("__day"))
+      .agg(count(lit(1)).as("n"))
+
+  // ---- q310 shared fixture: the block-interaction edge list -------------
+  // Each order links its customer to a partner in the same TrussBlock-wide
+  // id block; canonical (src < dst), self-loops dropped, deduped. Shared by
+  // q310/q343/q346; trussEdgesSql is its DuckDB twin.
+  private def trussEdges(s: SparkSession, d: String): DataFrame = {
+    val partner = (col("o_custkey") - pmod(col("o_custkey"), lit(TrussBlock))
+      + pmod(col("o_orderkey"), lit(TrussBlock)))
+    t(s, d, "orders")
+      .select(col("o_custkey").as("u"), partner.as("v"))
+      .filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("src"),
+        greatest(col("u"), col("v")).as("dst"))
+      .distinct()
+  }
+
   private def trussEdgesSql: String =
     s"""e0 AS MATERIALIZED (
           SELECT DISTINCT
@@ -536,14 +567,7 @@ private[graft] object CatalogInsight {
     // span 1..17 with a real cascade at every sf.
     "q310_ktruss" -> QueryDef(
       fn = (s, d) => {
-        val partner = (col("o_custkey") - pmod(col("o_custkey"), lit(TrussBlock))
-          + pmod(col("o_orderkey"), lit(TrussBlock)))
-        val edges = t(s, d, "orders")
-          .select(col("o_custkey").as("u"), partner.as("v"))
-          .filter(col("u") =!= col("v"))
-          .select(least(col("u"), col("v")).as("src"),
-            greatest(col("u"), col("v")).as("dst"))
-          .distinct()
+        val edges = trussEdges(s, d)
         Graph.kTrussPeel(edges, "src", "dst", TrussK, TrussRounds)
           .select(col("src"), col("dst"), col("support"))
           .orderBy("src", "dst")
@@ -660,7 +684,7 @@ private[graft] object CatalogInsight {
               .as("cos_full"),
             (floor(VF.cosine(proj(col("__ea")), proj(col("__eb"))) * 1000000 + 0.5) / 1000000.0)
               .as("cos_proj"),
-            floor(err * 1000000 + 0.5).cast("long").as("abs_err_e6"))
+            e6(err).as("abs_err_e6"))
           .orderBy("pair_id")
       },
       oracle = Some {
@@ -797,9 +821,7 @@ private[graft] object CatalogInsight {
     // One scan, one bounded window, one small agg.
     "q315_seasonal_decompose" -> QueryDef(
       fn = (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("__day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailyTypeCounts(s, d)
         val w = Window.partitionBy("event_type").orderBy("__day")
           .rowsBetween(-TrendHalf, TrendHalf)
         val dev = daily
@@ -1018,7 +1040,7 @@ private[graft] object CatalogInsight {
             / ((col("nn") - col("na")).cast("double") * col("ta").cast("double"))))
           .otherwise(lit(0.0))
         val scored = cells.select(col("source"), col("tok"), col("a"),
-          floor((termA + termB) * lit(2.0) * 1000000 + 0.5).cast("long").as("g2_e6"))
+          e6((termA + termB) * lit(2.0)).as("g2_e6"))
         scored
           .withColumn("rnk", row_number().over(Window.partitionBy("source")
             .orderBy(col("g2_e6").desc, col("tok").asc)).cast("long"))
@@ -1367,9 +1389,7 @@ private[graft] object CatalogInsight {
     // C(days, 2) per type — bounded by the calendar, not the row count.
     "q325_mann_kendall" -> QueryDef(
       fn = (s, d) => {
-        val real = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("__day"))
-          .agg(count(lit(1)).as("n"))
+        val real = dailyTypeCounts(s, d)
           .select(col("event_type"), datediff(col("__day"), lit("2024-01-01")).as("__i"),
             col("n"))
         // injected ramp series: the organic traffic is stationary by
@@ -1636,8 +1656,7 @@ private[graft] object CatalogInsight {
           zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
         val scat = vecs.join(broadcast(cent), col("label") === col("clabel"))
           .select(col("label"),
-            floor(sqrt(d2(col("__sx"), col("__cv")).cast("double")) * 1000000 + 0.5)
-              .cast("long").as("__dist_e6"))
+            e6(sqrt(d2(col("__sx"), col("__cv")).cast("double"))).as("__dist_e6"))
           .groupBy("label")
           .agg(count(lit(1)).as("n_members"),
             expr("sum(__dist_e6) div count(1)").as("s_e6"))
@@ -1646,8 +1665,7 @@ private[graft] object CatalogInsight {
           .join(cent.select(col("clabel").as("__lb"), col("__cv").as("__cb")),
             col("__la") =!= col("__lb"))
           .select(col("__la"), col("__lb"),
-            floor(sqrt(d2(col("__ca"), col("__cb")).cast("double")) * 1000000 + 0.5)
-              .cast("long").as("__m_e6"))
+            e6(sqrt(d2(col("__ca"), col("__cb")).cast("double"))).as("__m_e6"))
         val r = pairs
           .join(broadcast(scat.select(col("label").as("__la"), col("s_e6").as("__si"))), "__la")
           .join(broadcast(scat.select(col("label").as("__lb"), col("s_e6").as("__sj"))), "__lb")
@@ -1713,9 +1731,7 @@ private[graft] object CatalogInsight {
     // convention applied to state-space smoothing.
     "q329_holt_linear" -> QueryDef(
       fn = (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("__day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailyTypeCounts(s, d)
           .withColumn("rn", row_number().over(Window.partitionBy("event_type")
             .orderBy("__day")))
           .select(col("event_type"), col("rn"), col("n"))
@@ -2098,15 +2114,7 @@ private[graft] object CatalogInsight {
           Seq((col("value_cents"), false), (col("event_id"), true)), 3)
           .orderBy(col("user_id"), col("value_cents").desc, col("event_id").asc)
       },
-      oracle = Some(s"""
-        WITH r AS (SELECT event_id, user_id, ${centsSql("value")} AS value_cents,
-                          row_number() OVER (PARTITION BY user_id
-                                             ORDER BY ${centsSql("value")} DESC,
-                                                      event_id ASC) AS rk
-                   FROM events)
-        SELECT event_id, user_id, value_cents
-        FROM r WHERE rk <= 3
-        ORDER BY user_id, value_cents DESC, event_id ASC""")),
+      oracle = Some(topkPerUserOracleSql)),
 
     // The stock window form of q335, cell-identical BY ORACLE — kept as
     // a first-class entry so Probe ab can interleave the two in one JVM
@@ -2121,15 +2129,7 @@ private[graft] object CatalogInsight {
           .filter(col("__rk") <= 3).drop("__rk")
           .orderBy(col("user_id"), col("value_cents").desc, col("event_id").asc)
       },
-      oracle = Some(s"""
-        WITH r AS (SELECT event_id, user_id, ${centsSql("value")} AS value_cents,
-                          row_number() OVER (PARTITION BY user_id
-                                             ORDER BY ${centsSql("value")} DESC,
-                                                      event_id ASC) AS rk
-                   FROM events)
-        SELECT event_id, user_id, value_cents
-        FROM r WHERE rk <= 3
-        ORDER BY user_id, value_cents DESC, event_id ASC""")),
+      oracle = Some(topkPerUserOracleSql)),
 
     // Streaming UPDATE-mode semantics — the third output mode isolated
     // (complete: q48-family; append + watermark: q324): a per-type
@@ -2239,25 +2239,15 @@ private[graft] object CatalogInsight {
     "q339_asof_merge_operator" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(col("value")).as("p_value"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev)
         graft.plans.AsOfMergeJoin.asofMerge(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_value"))
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some("""
-        WITH p AS (SELECT user_id, ts, max(value) AS p_value FROM events
-                   WHERE event_type = 'purchase' GROUP BY 1, 2)
-        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_value
-        FROM (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click') l
-        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofPurchaseOracleSql)),
 
     // The union+window form of q339, cell-identical BY ORACLE — kept
     // first-class so Probe ab can interleave the two paths in one JVM
@@ -2266,11 +2256,8 @@ private[graft] object CatalogInsight {
     "q340_asof_window_twin" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(col("value")).as("p_value"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev)
         graft.ops.AsOfJoin.asof(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_value"))
@@ -2279,14 +2266,7 @@ private[graft] object CatalogInsight {
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some("""
-        WITH p AS (SELECT user_id, ts, max(value) AS p_value FROM events
-                   WHERE event_type = 'purchase' GROUP BY 1, 2)
-        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_value
-        FROM (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click') l
-        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofPurchaseOracleSql)),
 
     // TopKPerKey in RANK mode (r11 verdict #3): rows whose rank() over
     // a COARSE value bucket is <= 2 per type, ASCENDING — the low
@@ -2299,24 +2279,12 @@ private[graft] object CatalogInsight {
     // DuckDB's rank() window is the oracle.
     "q341_topk_rank_mode" -> QueryDef(
       fn = (s, d) => {
-        val ev = t(s, d, "events")
-          .select(col("event_id"), col("event_type"),
-            cents(col("value")).as("__c"))
-          .select(col("event_id"), col("event_type"),
-            expr("__c div 500").as("bucket"))
+        val ev = valueBuckets(s, d)
         graft.plans.TopKPerKey.topKPerKey(ev, Seq(col("event_type")),
           Seq((col("bucket"), true)), 2, graft.plans.RankMode)
           .orderBy(col("event_type"), col("bucket"), col("event_id"))
       },
-      oracle = Some(s"""
-        WITH b AS (SELECT event_id, event_type,
-                          ${centsSql("value")} // 500 AS bucket FROM events),
-        r AS (SELECT event_id, event_type, bucket,
-                     rank() OVER (PARTITION BY event_type
-                                  ORDER BY bucket ASC) AS rk
-              FROM b)
-        SELECT event_id, event_type, bucket FROM r WHERE rk <= 2
-        ORDER BY event_type, bucket, event_id""")),
+      oracle = Some(topkRankOracleSql)),
 
     // TopKPerKey in DENSE_RANK mode: the rows carrying the 3 smallest
     // DISTINCT buckets per type — the "k best price levels" shape
@@ -2324,11 +2292,7 @@ private[graft] object CatalogInsight {
     // DuckDB's dense_rank() window is the oracle.
     "q342_topk_dense_rank_mode" -> QueryDef(
       fn = (s, d) => {
-        val ev = t(s, d, "events")
-          .select(col("event_id"), col("event_type"),
-            cents(col("value")).as("__c"))
-          .select(col("event_id"), col("event_type"),
-            expr("__c div 500").as("bucket"))
+        val ev = valueBuckets(s, d)
         graft.plans.TopKPerKey.topKPerKey(ev, Seq(col("event_type")),
           Seq((col("bucket"), true)), 3, graft.plans.DenseRankMode)
           .orderBy(col("event_type"), col("bucket"), col("event_id"))
@@ -2356,25 +2320,13 @@ private[graft] object CatalogInsight {
     // discipline applied to the tie-semantics variant).
     "q345_topk_rank_window_twin" -> QueryDef(
       fn = (s, d) => {
-        val ev = t(s, d, "events")
-          .select(col("event_id"), col("event_type"),
-            cents(col("value")).as("__c"))
-          .select(col("event_id"), col("event_type"),
-            expr("__c div 500").as("bucket"))
+        val ev = valueBuckets(s, d)
         ev.withColumn("__rk", rank().over(Window.partitionBy("event_type")
             .orderBy(col("bucket").asc)))
           .filter(col("__rk") <= 2).drop("__rk")
           .orderBy(col("event_type"), col("bucket"), col("event_id"))
       },
-      oracle = Some(s"""
-        WITH b AS (SELECT event_id, event_type,
-                          ${centsSql("value")} // 500 AS bucket FROM events),
-        r AS (SELECT event_id, event_type, bucket,
-                     rank() OVER (PARTITION BY event_type
-                                  ORDER BY bucket ASC) AS rk
-              FROM b)
-        SELECT event_id, event_type, bucket FROM r WHERE rk <= 2
-        ORDER BY event_type, bucket, event_id""")),
+      oracle = Some(topkRankOracleSql)),
 
     // FORWARD direction of the merge exec — full direction parity with
     // the union+window form (q218's semantics on the q339 fixture): for
@@ -2386,11 +2338,8 @@ private[graft] object CatalogInsight {
     "q344_asof_merge_forward" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(col("value")).as("p_value"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev)
         graft.plans.AsOfMergeJoin.asofMerge(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_value"), direction = "forward")
@@ -2407,14 +2356,7 @@ private[graft] object CatalogInsight {
 
     "q343_boruvka_mst" -> QueryDef(
       fn = (s, d) => {
-        val partner = (col("o_custkey") - pmod(col("o_custkey"), lit(TrussBlock))
-          + pmod(col("o_orderkey"), lit(TrussBlock)))
-        val edges = t(s, d, "orders")
-          .select(col("o_custkey").as("u"), partner.as("v"))
-          .filter(col("u") =!= col("v"))
-          .select(least(col("u"), col("v")).as("src"),
-            greatest(col("u"), col("v")).as("dst"))
-          .distinct()
+        val edges = trussEdges(s, d)
           .select(col("src"), col("dst"),
             expr("(src * 31 + dst * 17) % 1000").as("w"))
         Graph.boruvkaMst(edges, "src", "dst", "w", MstRounds, MstJumps)
@@ -2432,14 +2374,7 @@ private[graft] object CatalogInsight {
     // directions keep exact zeros via full-node-set coalesce.
     "q346_hits" -> QueryDef(
       fn = (s, d) => {
-        val partner = (col("o_custkey") - pmod(col("o_custkey"), lit(TrussBlock))
-          + pmod(col("o_orderkey"), lit(TrussBlock)))
-        val edges = t(s, d, "orders")
-          .select(col("o_custkey").as("u"), partner.as("v"))
-          .filter(col("u") =!= col("v"))
-          .select(least(col("u"), col("v")).as("src"),
-            greatest(col("u"), col("v")).as("dst"))
-          .distinct()
+        val edges = trussEdges(s, d)
         Graph.hits(edges, "src", "dst", HitsIters)
           .orderBy("node")
       },
@@ -2517,11 +2452,8 @@ private[graft] object CatalogInsight {
     "q351_asof_merge_wide" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(cents(col("value"))).as("p_cents"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev, inCents = true)
           .select(col("user_id"), col("p_ts"), col("p_cents"),
             expr("p_cents div 100").as("p_units"),
             expr("p_cents % 97").as("p_mod"),
@@ -2535,19 +2467,7 @@ private[graft] object CatalogInsight {
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some(s"""
-        WITH p0 AS (SELECT user_id, ts, max(${centsSql("value")}) AS p_cents
-                    FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        p AS (SELECT user_id, ts, p_cents, p_cents // 100 AS p_units,
-                     p_cents % 97 AS p_mod, p_cents * p_cents AS p_sq,
-                     -p_cents AS p_neg, p_cents // 500 AS p_bucket
-              FROM p0)
-        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_cents,
-               p.p_units, p.p_mod, p.p_sq, p.p_neg, p.p_bucket
-        FROM (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click') l
-        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofWideOracleSql)),
 
     // The union+window twin of q351 — same six carried columns through
     // ops.AsOfJoin, cell-identical BY ORACLE; Probe ab interleaves the
@@ -2555,11 +2475,8 @@ private[graft] object CatalogInsight {
     "q352_asof_window_wide_twin" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(cents(col("value"))).as("p_cents"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev, inCents = true)
           .select(col("user_id"), col("p_ts"), col("p_cents"),
             expr("p_cents div 100").as("p_units"),
             expr("p_cents % 97").as("p_mod"),
@@ -2576,19 +2493,7 @@ private[graft] object CatalogInsight {
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some(s"""
-        WITH p0 AS (SELECT user_id, ts, max(${centsSql("value")}) AS p_cents
-                    FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        p AS (SELECT user_id, ts, p_cents, p_cents // 100 AS p_units,
-                     p_cents % 97 AS p_mod, p_cents * p_cents AS p_sq,
-                     -p_cents AS p_neg, p_cents // 500 AS p_bucket
-              FROM p0)
-        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_cents,
-               p.p_units, p.p_mod, p.p_sq, p.p_neg, p.p_bucket
-        FROM (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click') l
-        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofWideOracleSql)),
 
     // The THIRD as-of surface (round 12, sixth wave): the BROADCAST
     // probe — ops.AsOfJoin.asofBroadcast collects the small right side
@@ -2604,11 +2509,8 @@ private[graft] object CatalogInsight {
     "q353_asof_broadcast" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(col("value")).as("p_value"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev)
         graft.ops.AsOfJoin.asofBroadcast(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_value"))
@@ -2617,14 +2519,7 @@ private[graft] object CatalogInsight {
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some("""
-        WITH p AS (SELECT user_id, ts, max(value) AS p_value FROM events
-                   WHERE event_type = 'purchase' GROUP BY 1, 2)
-        SELECT l.event_id, l.user_id, l.ts, p.ts AS asof_ts, p.p_value
-        FROM (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click') l
-        ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofPurchaseOracleSql)),
 
     // The broadcast rung on its HOME shape: the full fact table enriched
     // against a TINY reference timeline (per-type daily max, shifted one
@@ -2640,29 +2535,14 @@ private[graft] object CatalogInsight {
       fn = (s, d) => {
         val ev = t(s, d, "events")
         val facts = ev.select("event_id", "event_type", "ts")
-        val dim = ev
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("__d"))
-          .agg(max(cents(col("value"))).as("day_max_cents"))
-          .select(col("event_type"),
-            (col("__d") + expr("INTERVAL 1 DAY")).as("d_ts"),
-            col("day_max_cents"))
+        val dim = dayMaxByType(ev)
         graft.ops.AsOfJoin.asofBroadcast(facts, dim,
             on = Seq("event_type"), leftTs = "ts", rightTs = "d_ts",
             rightCols = Seq("day_max_cents"))
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some(s"""
-        WITH dim AS (SELECT event_type,
-                            date_trunc('day', ts) + INTERVAL 1 DAY AS d_ts,
-                            max(${centsSql("value")}) AS day_max_cents
-                     FROM events GROUP BY 1, 2)
-        SELECT l.event_id, l.event_type, l.ts, dim.d_ts AS asof_ts,
-               dim.day_max_cents
-        FROM (SELECT event_id, event_type, ts FROM events) l
-        ASOF LEFT JOIN dim
-          ON l.event_type = dim.event_type AND l.ts >= dim.d_ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofDayMaxOracleSql)),
 
     // The merge-exec twin of q354 — same semantics, same oracle text;
     // its plan shuffles BOTH sides (the fact side included), which is
@@ -2671,29 +2551,14 @@ private[graft] object CatalogInsight {
       fn = (s, d) => {
         val ev = t(s, d, "events")
         val facts = ev.select("event_id", "event_type", "ts")
-        val dim = ev
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("__d"))
-          .agg(max(cents(col("value"))).as("day_max_cents"))
-          .select(col("event_type"),
-            (col("__d") + expr("INTERVAL 1 DAY")).as("d_ts"),
-            col("day_max_cents"))
+        val dim = dayMaxByType(ev)
         graft.plans.AsOfMergeJoin.asofMerge(facts, dim,
             on = Seq("event_type"), leftTs = "ts", rightTs = "d_ts",
             rightCols = Seq("day_max_cents"))
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some(s"""
-        WITH dim AS (SELECT event_type,
-                            date_trunc('day', ts) + INTERVAL 1 DAY AS d_ts,
-                            max(${centsSql("value")}) AS day_max_cents
-                     FROM events GROUP BY 1, 2)
-        SELECT l.event_id, l.event_type, l.ts, dim.d_ts AS asof_ts,
-               dim.day_max_cents
-        FROM (SELECT event_id, event_type, ts FROM events) l
-        ASOF LEFT JOIN dim
-          ON l.event_type = dim.event_type AND l.ts >= dim.d_ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofDayMaxOracleSql)),
 
     // Exact 1-D Wasserstein-1 (earth-mover) drift (round 12, seventh
     // wave) — the TRANSPORT-metric member of the drift family: q150's JS
@@ -2788,10 +2653,7 @@ private[graft] object CatalogInsight {
     // identically in both engines — zero FP in the whole query.
     "q357_brier_decomposition" -> QueryDef(
       fn = (s, d) => {
-        val stops = TF.langMarkers("en")
-        val scored = t(s, d, "documents").select(
-          (TF.qualityScore(col("text"), stops) * 10000 + 0.5).cast("long").as("__s"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("__y"))
+        val scored = qualityLabelled(s, d)
         val binned = scored
           .withColumn("bin", least(col("__s") / 1000, lit(9L)).cast("long"))
           .groupBy("bin")
@@ -2828,10 +2690,7 @@ private[graft] object CatalogInsight {
               .as("brier_e6"))
       },
       oracle = Some(s"""
-        WITH sc AS (SELECT CAST(round(($qualityExprSql) * 10000) AS BIGINT) AS s,
-                           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-                    FROM ($qualityInnerSql) q
-                    JOIN documents USING (doc_id)),
+        WITH ${qualityLabelledSqlCte},
         b AS (SELECT least(s // 1000, 9) AS bin, count(*) AS n,
                      CAST(sum(s) AS BIGINT) AS ssum,
                      CAST(sum(y) AS BIGINT) AS pos
@@ -2969,20 +2828,7 @@ private[graft] object CatalogInsight {
     // memory bound, which is why its exact semantics deserve an oracle.
     "q360_stream_outer_join" -> QueryDef(
       fn = (s, d) => {
-        val dir = stageEventsDir(d)
-        val ss = streamingSession(s)
-        val table = try {
-          def src = stagedEventsStream(ss, dir)
-          val clicks = src.filter(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          val purchases = src.filter(col("event_type") === "purchase")
-            .select("user_id", "ts", "value")
-          val joined = graft.streaming.StreamingIngest.streamStreamJoin(
-            clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
-            within = "1 hour", watermark = "2 hours", joinType = "left_outer")
-          runToMemoryTable(joined, "q360_mem", outputMode = "append")
-        } finally dropStaged(dir)
-        table
+        clickPurchaseStreamJoin(s, d, "q360_mem", joinType = "left_outer")
           .groupBy((col("user_id") % 10).as("bucket"))
           .agg(sum(when(col("r_ts").isNotNull, 1L).otherwise(0L)).as("n_matched"),
             sum(when(col("r_ts").isNull, 1L).otherwise(0L)).as("n_outer"),
@@ -3130,20 +2976,7 @@ private[graft] object CatalogInsight {
     // latest possible match time passing the final global watermark).
     "q364_stream_full_outer" -> QueryDef(
       fn = (s, d) => {
-        val dir = stageEventsDir(d)
-        val ss = streamingSession(s)
-        val table = try {
-          def src = stagedEventsStream(ss, dir)
-          val clicks = src.filter(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          val purchases = src.filter(col("event_type") === "purchase")
-            .select("user_id", "ts", "value")
-          val joined = graft.streaming.StreamingIngest.streamStreamJoin(
-            clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
-            within = "1 hour", watermark = "2 hours", joinType = "full_outer")
-          runToMemoryTable(joined, "q364_mem", outputMode = "append")
-        } finally dropStaged(dir)
-        table
+        clickPurchaseStreamJoin(s, d, "q364_mem", joinType = "full_outer")
           .groupBy((coalesce(col("user_id"), col("r_user_id")) % 10).as("bucket"))
           .agg(
             sum(when(col("ts").isNotNull && col("r_ts").isNotNull, 1L)
@@ -3199,9 +3032,7 @@ private[graft] object CatalogInsight {
     // on slot 2 (t=37), spelled identically in both engines.
     "q365_holt_winters" -> QueryDef(
       fn = (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("__day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailyTypeCounts(s, d)
           .withColumn("rn", row_number().over(Window.partitionBy("event_type")
             .orderBy("__day")))
           .select(col("event_type"), col("rn"), col("n"))
@@ -3420,7 +3251,7 @@ private[graft] object CatalogInsight {
           .agg(max(when(col("seg") === 0L, col("__sse"))).as("__sa"),
             max(when(col("seg") === 1L, col("__sse"))).as("__sb"))
           .select(col("event_type"), col("s"),
-            floor((col("__sa") + col("__sb")) * 1000000 + 0.5).cast("long")
+            e6(col("__sa") + col("__sb"))
               .as("sse_split_e6"))
         val best = bySplit
           .withColumn("__rk", row_number().over(Window.partitionBy("event_type")
@@ -3428,7 +3259,7 @@ private[graft] object CatalogInsight {
           .filter(col("__rk") === 1).drop("__rk")
         val single = moments(daily.groupBy("event_type"))
           .select(col("event_type"),
-            floor(sseExpr * 1000000 + 0.5).cast("long").as("sse_single_e6"))
+            e6(sseExpr).as("sse_single_e6"))
         best.join(single, "event_type")
           .select(col("event_type"), col("s").as("split_day"),
             col("sse_split_e6"), col("sse_single_e6"),
@@ -3691,16 +3522,15 @@ private[graft] object CatalogInsight {
             // var numerator on the e12 grid, exact: K*sum(p^2)-(sum p)^2
             expr("(__k * __spp - __sp * __sp) div (__k * __k)").as("__v_e12"))
           .select(col("__m_e6"), col("__v_e12"),
-            floor((col("__m_e6").cast("double") * (lit(1000000L) - col("__m_e6"))
-              / col("__v_e12") - 1.0) * 1000000 + 0.5).cast("long")
+            e6(col("__m_e6").cast("double") * (lit(1000000L) - col("__m_e6"))
+              / col("__v_e12") - 1.0)
               .as("__s_e6"))
         bySrc.crossJoin(broadcast(prior))
           .select(col("source"), col("n"), col("x"), col("raw_e6"),
             col("__m_e6").as("prior_mean_e6"), col("__s_e6").as("strength_e6"),
-            floor((col("x").cast("double")
+            e6((col("x").cast("double")
               + col("__s_e6").cast("double") * col("__m_e6") / 1e12)
-              / (col("n").cast("double") + col("__s_e6") / lit(1000000.0))
-              * 1000000 + 0.5).cast("long").as("shrunk_e6"))
+              / (col("n").cast("double") + col("__s_e6") / lit(1000000.0))).as("shrunk_e6"))
           .orderBy("source")
       },
       oracle = Some(s"""
@@ -3743,11 +3573,8 @@ private[graft] object CatalogInsight {
     "q373_asof_merge_tolerance" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(col("value")).as("p_value"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev)
         graft.plans.AsOfMergeJoin.asofMerge(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_value"),
@@ -3839,15 +3666,15 @@ private[graft] object CatalogInsight {
         val tot = g.agg(sum(col("__n")).as("__tn"), sum(col("__s1")).as("__ts1"))
         val terms = g.crossJoin(broadcast(tot))
           .select(col("__n"), col("__s1"), col("__s2"), col("__tn"), col("__ts1"),
-            floor((col("__s2").cast("double")
+            e6((col("__s2").cast("double")
               - col("__s1").cast("double") * col("__s1") / col("__n"))
-              / 10000.0 * 1000000 + 0.5).cast("long").as("ssw_e6"),
-            floor(col("__n").cast("double")
+              / 10000.0).as("ssw_e6"),
+            e6(col("__n").cast("double")
               * (col("__s1").cast("double") / col("__n")
                  - col("__ts1").cast("double") / col("__tn"))
               * (col("__s1").cast("double") / col("__n")
                  - col("__ts1").cast("double") / col("__tn"))
-              / 10000.0 * 1000000 + 0.5).cast("long").as("ssb_e6"))
+              / 10000.0).as("ssb_e6"))
         terms.groupBy("__tn")
           .agg(count(lit(1)).as("k"), sum(col("ssb_e6")).as("ssb_e6"),
             sum(col("ssw_e6")).as("ssw_e6"))
@@ -4015,21 +3842,8 @@ private[graft] object CatalogInsight {
     // applied per side.
     "q378_stream_asym_watermark" -> QueryDef(
       fn = (s, d) => {
-        val dir = stageEventsDir(d)
-        val ss = streamingSession(s)
-        val table = try {
-          def src = stagedEventsStream(ss, dir)
-          val clicks = src.filter(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          val purchases = src.filter(col("event_type") === "purchase")
-            .select("user_id", "ts", "value")
-          val joined = graft.streaming.StreamingIngest.streamStreamJoin(
-            clicks, purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
-            within = "1 hour", watermark = "1 hour", joinType = "left_outer",
-            rightWatermark = Some("3 hours"))
-          runToMemoryTable(joined, "q378_mem", outputMode = "append")
-        } finally dropStaged(dir)
-        table
+        clickPurchaseStreamJoin(s, d, "q378_mem", joinType = "left_outer",
+            watermark = "1 hour", rightWatermark = Some("3 hours"))
           .groupBy((col("user_id") % 10).as("bucket"))
           .agg(sum(when(col("r_ts").isNotNull, 1L).otherwise(0L)).as("n_matched"),
             sum(when(col("r_ts").isNull, 1L).otherwise(0L)).as("n_outer"))
@@ -4142,10 +3956,9 @@ private[graft] object CatalogInsight {
             sum(col("__y") * col("__y")).as("__syy"),
             sum(col("__x") * col("__y")).as("__sxy"))
         val r = mom.select(col("event_type"), col("lag"), col("n_days"),
-          floor((col("n_days").cast("double") * col("__sxy") - col("__sx") * col("__sy"))
+          e6((col("n_days").cast("double") * col("__sxy") - col("__sx") * col("__sy"))
             / sqrt((col("n_days").cast("double") * col("__sxx") - col("__sx") * col("__sx"))
-              * (col("n_days").cast("double") * col("__syy") - col("__sy") * col("__sy")))
-            * 1000000 + 0.5).cast("long").as("r_e6"))
+              * (col("n_days").cast("double") * col("__syy") - col("__sy") * col("__sy")))).as("r_e6"))
         r.withColumn("__rk", row_number().over(Window.partitionBy("event_type")
             .orderBy(abs(col("r_e6")).desc, col("lag").asc)))
           .filter(col("__rk") === 1)
@@ -4321,29 +4134,14 @@ private[graft] object CatalogInsight {
       fn = (s, d) => {
         val ev = t(s, d, "events")
         val facts = ev.select("event_id", "event_type", "ts")
-        val dim = ev
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("__d"))
-          .agg(max(cents(col("value"))).as("day_max_cents"))
-          .select(col("event_type"),
-            (col("__d") + expr("INTERVAL 1 DAY")).as("d_ts"),
-            col("day_max_cents"))
+        val dim = dayMaxByType(ev)
         graft.ops.AsOfJoin.asofAuto(facts, dim,
             on = Seq("event_type"), leftTs = "ts", rightTs = "d_ts",
             rightCols = Seq("day_max_cents"))
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some(s"""
-        WITH dim AS (SELECT event_type,
-                            date_trunc('day', ts) + INTERVAL 1 DAY AS d_ts,
-                            max(${centsSql("value")}) AS day_max_cents
-                     FROM events GROUP BY 1, 2)
-        SELECT l.event_id, l.event_type, l.ts, dim.d_ts AS asof_ts,
-               dim.day_max_cents
-        FROM (SELECT event_id, event_type, ts FROM events) l
-        ASOF LEFT JOIN dim
-          ON l.event_type = dim.event_type AND l.ts >= dim.d_ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofDayMaxOracleSql)),
 
     // Fano factor + burstiness per event type over hourly arrival counts
     // (round 13) — the overdispersion readout of traffic shape:
@@ -4365,13 +4163,12 @@ private[graft] object CatalogInsight {
           .select(col("event_type"), col("n_hours"), col("n_events"),
             expr("""(n_hours * __ss - n_events * n_events) * 1000000
                     div (n_hours * n_events)""").as("fano_e6"),
-            floor((sqrt((col("n_hours") * col("__ss")
+            e6((sqrt((col("n_hours") * col("__ss")
                 - col("n_events") * col("n_events")).cast("double"))
                 - col("n_events").cast("double"))
               / (sqrt((col("n_hours") * col("__ss")
                 - col("n_events") * col("n_events")).cast("double"))
-                + col("n_events").cast("double")) * 1000000 + 0.5)
-              .cast("long").as("burstiness_e6"))
+                + col("n_events").cast("double"))).as("burstiness_e6"))
           .orderBy("event_type")
       },
       oracle = Some("""
@@ -4743,12 +4540,7 @@ private[graft] object CatalogInsight {
         val dir = stageEventsDir(d)
         val ss = streamingSession(s)
         val table = try {
-          val dim = t(ss, d, "events")
-            .groupBy(col("event_type"), date_trunc("day", col("ts")).as("__d"))
-            .agg(max(cents(col("value"))).as("day_max_cents"))
-            .select(col("event_type"),
-              (col("__d") + expr("INTERVAL 1 DAY")).as("d_ts"),
-              col("day_max_cents"))
+          val dim = dayMaxByType(t(ss, d, "events"))
           val stream = stagedEventsStream(ss, dir)
             .select("event_id", "event_type", "ts", "value")
           val enriched = graft.ops.AsOfJoin.asofBroadcast(stream, dim,
@@ -4819,10 +4611,9 @@ private[graft] object CatalogInsight {
           count(lit(1)).as("__ns"))
         val rated = buckets.crossJoin(broadcast(totals))
           .select(col("__b"),
-            floor(log(((col("__ct") + 1L) * (col("__ns") + 256L))
+            e6(log(((col("__ct") + 1L) * (col("__ns") + 256L))
                 .cast("double")
-              / ((col("__cs") + 1L) * (col("__nt") + 256L)).cast("double"))
-              * 1000000.0 + 0.5).cast("long").as("__lr"))
+              / ((col("__cs") + 1L) * (col("__nt") + 256L)).cast("double"))).as("__lr"))
         grams.join(broadcast(rated), Seq("__b"))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_bigrams"), sum(col("__lr")).as("weight_e6"))
@@ -4875,8 +4666,7 @@ private[graft] object CatalogInsight {
           .agg(count(lit(1)).as("n_docs"),
             sum(size(TF.tokens(col("text"))).cast("long")).as("n_tokens"))
           .withColumn("__sq",
-            floor(sqrt(col("n_tokens").cast("double")) * 1000000.0 + 0.5)
-              .cast("long"))
+            e6(sqrt(col("n_tokens").cast("double"))))
         perSource
           .crossJoin(broadcast(perSource.agg(sum(col("__sq")).as("__tot"))))
           .select(col("source"), col("n_docs"), col("n_tokens"),

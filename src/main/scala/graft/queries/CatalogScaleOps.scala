@@ -181,11 +181,7 @@ private[queries] object CatalogScaleOps {
                exactRevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
           .orderBy("o_orderpriority")
       },
-      oracle = Some(s"""
-        SELECT o_orderpriority, count(*) AS n,
-               ${revenueSql("l_extendedprice", "l_discount")} AS revenue
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
+      oracle = Some(priorityRevenueOracleSql)),
 
     // Exact heavy hitters via a bounded Misra-Gries summary + exact
     // verification pass: the exchange carries O(partitions x k) counters
@@ -199,10 +195,7 @@ private[queries] object CatalogScaleOps {
           .select(col("item").as("token"), col("n"))
           .orderBy("token")
       },
-      oracle = Some(s"""
-        SELECT token, count(*) AS n
-        FROM (SELECT unnest($toksSql) AS token FROM documents)
-        GROUP BY token HAVING count(*) >= 500 ORDER BY token""")),
+      oracle = Some(heavyHittersOracleSql)),
 
     // Interval×interval overlap join (attribution shape: which purchase
     // windows overlap which click windows, per user). A naive theta join

@@ -1484,13 +1484,12 @@ private[queries] object CatalogStatTests {
           when(col("n_users") > 1L
               && col("n_users") * col("__sxx") > col("__sx") * col("__sx")
               && col("n_users") * col("__syy") > col("__sy") * col("__sy"),
-            floor((col("n_users") * col("__sxy") - col("__sx") * col("__sy"))
+            e6((col("n_users") * col("__sxy") - col("__sx") * col("__sy"))
               .cast("double")
               / (sqrt((col("n_users") * col("__sxx")
                   - col("__sx") * col("__sx")).cast("double"))
                 * sqrt((col("n_users") * col("__syy")
-                  - col("__sy") * col("__sy")).cast("double")))
-              * 1000000 + 0.5).cast("long"))
+                  - col("__sy") * col("__sy")).cast("double")))))
             .as("rho_e6"))
           .orderBy("event_type")
       },
@@ -1568,10 +1567,9 @@ private[queries] object CatalogStatTests {
         joined.select(col("event_type"), col("n_days"),
           col("concordant"), col("discordant"),
           when(col("__n0") > col("__n1") && col("__n0") > col("__n2"),
-            floor((col("concordant") - col("discordant")).cast("double")
+            e6((col("concordant") - col("discordant")).cast("double")
               / (sqrt((col("__n0") - col("__n1")).cast("double"))
-                * sqrt((col("__n0") - col("__n2")).cast("double")))
-              * 1000000 + 0.5).cast("long"))
+                * sqrt((col("__n0") - col("__n2")).cast("double")))))
             .as("tau_b_e6"))
           .orderBy("event_type")
       },
@@ -1629,8 +1627,6 @@ private[queries] object CatalogStatTests {
         val margin = lit(WilsonZ) * sqrt(
           p * (lit(1.0) - p) / nD + lit(WilsonZ2) / (lit(4.0) * nD * nD))
         val denom = lit(1.0) + lit(WilsonZ2) / nD
-        def e6(c: org.apache.spark.sql.Column) =
-          floor(c * 1000000 + 0.5).cast("long")
         agg.select(col("source"), col("n"), col("k"),
           e6(p).as("rate_e6"),
           e6((centre - margin) / denom).as("lo_e6"),
@@ -1692,8 +1688,7 @@ private[queries] object CatalogStatTests {
           .join(den, Seq("event_type"))
           .filter(col("den") > 0L)
           .select(col("event_type"), col("lag"),
-            floor(col("num").cast("double") / col("den").cast("double")
-              * 1000000 + 0.5).cast("long").as("r_e6"))
+            e6(col("num").cast("double") / col("den").cast("double")).as("r_e6"))
         val rAggs = (1 to PacfMaxLag).map(k =>
           (max(when(col("lag") === k.toLong, col("r_e6")))
             .cast("double") / 1000000.0).as(s"r$k"))
@@ -1773,8 +1768,7 @@ private[queries] object CatalogStatTests {
           .groupBy("event_type").agg(sum(col("y") * col("y2")).as("num"))
           .join(den, Seq("event_type")).filter(col("den") > 0L)
           .select(col("event_type"),
-            floor(col("num").cast("double") / col("den").cast("double")
-              * 1000000 + 0.5).cast("long").as("phi_e6"))
+            e6(col("num").cast("double") / col("den").cast("double")).as("phi_e6"))
         val pairs = y.join(nxt, Seq("event_type", "day"))
           .join(broadcast(phi), Seq("event_type"))
         val xbar = col("s").cast("double") / col("nd").cast("double")
@@ -1859,8 +1853,8 @@ private[queries] object CatalogStatTests {
         val total = ni.agg(sum(col("__ni")).as("__nn"))
         val terms = counts.join(broadcast(ni), Seq("prev"))
           .select(col("prev"), col("__ni"),
-            (col("__nij") * floor(log(col("__nij").cast("double")
-              / col("__ni").cast("double")) * 1000000.0 + 0.5).cast("long"))
+            (col("__nij") * e6(log(col("__nij").cast("double")
+              / col("__ni").cast("double"))))
               .as("__t"))
         terms.groupBy("prev", "__ni").agg(sum(col("__t")).as("__ts"))
           .crossJoin(broadcast(total))
@@ -1902,28 +1896,13 @@ private[queries] object CatalogStatTests {
         ss.conf.set("graft.asof.broadcastThreshold", "1")
         val ev = t(ss, d, "events")
         val facts = ev.select("event_id", "event_type", "ts")
-        val dim = ev
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("__d"))
-          .agg(max(cents(col("value"))).as("day_max_cents"))
-          .select(col("event_type"),
-            (col("__d") + expr("INTERVAL 1 DAY")).as("d_ts"),
-            col("day_max_cents"))
+        val dim = dayMaxByType(ev)
         graft.ops.AsOfJoin.asofAuto(facts, dim,
             on = Seq("event_type"), leftTs = "ts", rightTs = "d_ts",
             rightCols = Seq("day_max_cents"))
           .orderBy("event_id")
       },
-      oracle = Some(s"""
-        WITH dim AS (SELECT event_type,
-                            date_trunc('day', ts) + INTERVAL 1 DAY AS d_ts,
-                            max(${centsSql("value")}) AS day_max_cents
-                     FROM events GROUP BY 1, 2)
-        SELECT l.event_id, l.event_type, l.ts, dim.d_ts AS asof_ts,
-               dim.day_max_cents
-        FROM (SELECT event_id, event_type, ts FROM events) l
-        ASOF LEFT JOIN dim
-          ON l.event_type = dim.event_type AND l.ts >= dim.d_ts
-        ORDER BY l.event_id""")),
+      oracle = Some(asofDayMaxOracleSql)),
 
     // NEAREST as-of under the oracle gate (round 14) — the third
     // direction, newly lifted off the union+window-only path: asofAuto
@@ -1939,11 +1918,8 @@ private[queries] object CatalogStatTests {
     "q403_asof_nearest" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(cents(col("value"))).as("p_cents"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev, inCents = true)
         graft.ops.AsOfJoin.asofAuto(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_cents"), direction = "nearest",
@@ -1951,21 +1927,7 @@ private[queries] object CatalogStatTests {
           .orderBy("event_id")
       },
       bench = true,
-      oracle = Some(s"""
-        WITH p AS (SELECT user_id, ts AS p_ts,
-                          max(${centsSql("value")}) AS p_cents
-                   FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        c AS (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click'),
-        j AS (SELECT c.event_id, c.user_id, c.ts,
-                (SELECT p.p_ts FROM p WHERE p.user_id = c.user_id
-                   AND abs(epoch_us(p.p_ts) - epoch_us(c.ts)) <= 1800000000
-                 ORDER BY abs(epoch_us(p.p_ts) - epoch_us(c.ts)), p.p_ts
-                 LIMIT 1) AS asof_ts
-              FROM c)
-        SELECT j.event_id, j.user_id, j.ts, j.asof_ts, p.p_cents
-        FROM j LEFT JOIN p ON j.user_id = p.user_id AND j.asof_ts = p.p_ts
-        ORDER BY j.event_id""")),
+      oracle = Some(asofNearestOracleSql)),
 
     // NEAREST on the MERGE route under the oracle gate (round 15, r14
     // verdict #7) — q403 pins broadcast-nearest; here the broadcast
@@ -1981,32 +1943,15 @@ private[queries] object CatalogStatTests {
         val ss = graft.Tables.cloneSession(s) // isolated conf scope for the forced route
         ss.conf.set("graft.asof.broadcastThreshold", "1")
         val ev = t(ss, d, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(cents(col("value"))).as("p_cents"))
+        val clicks = clickNeedles(ev)
+        val purchases = purchasesByUserTs(ev, inCents = true)
         graft.ops.AsOfJoin.asofAuto(clicks, purchases,
             on = Seq("user_id"), leftTs = "ts", rightTs = "p_ts",
             rightCols = Seq("p_cents"), direction = "nearest",
             toleranceMicros = Some(1800L * 1000000L))
           .orderBy("event_id")
       },
-      oracle = Some(s"""
-        WITH p AS (SELECT user_id, ts AS p_ts,
-                          max(${centsSql("value")}) AS p_cents
-                   FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        c AS (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click'),
-        j AS (SELECT c.event_id, c.user_id, c.ts,
-                (SELECT p.p_ts FROM p WHERE p.user_id = c.user_id
-                   AND abs(epoch_us(p.p_ts) - epoch_us(c.ts)) <= 1800000000
-                 ORDER BY abs(epoch_us(p.p_ts) - epoch_us(c.ts)), p.p_ts
-                 LIMIT 1) AS asof_ts
-              FROM c)
-        SELECT j.event_id, j.user_id, j.ts, j.asof_ts, p.p_cents
-        FROM j LEFT JOIN p ON j.user_id = p.user_id AND j.asof_ts = p.p_ts
-        ORDER BY j.event_id""")),
+      oracle = Some(asofNearestOracleSql)),
 
     // STREAMING heavy hitters (round 15) — q86's Misra-Gries summary on
     // an unbounded token stream: the corpus is staged as two slices split
@@ -2067,10 +2012,7 @@ private[queries] object CatalogStatTests {
           .select(col("item").as("token"), col("n"))
           .orderBy("token")
       },
-      oracle = Some(s"""
-        SELECT token, count(*) AS n
-        FROM (SELECT unnest($toksSql) AS token FROM documents)
-        GROUP BY token HAVING count(*) >= 500 ORDER BY token"""),
+      oracle = Some(heavyHittersOracleSql),
       streaming = true),
 
     // Rank-biased overlap (round 15) — the top-weighted ranking-
@@ -2192,8 +2134,7 @@ private[queries] object CatalogStatTests {
           .select(col("__dur").as("dur_days"), col("__d").as("n_churned"),
             col("__n_risk").as("n_risk"),
             when(col("__mnd") === 0L, 0L)
-              .otherwise(floor(exp(col("__cl")) * 1000000.0 + 0.5)
-                .cast("long")).as("survival_e6"))
+              .otherwise(e6(exp(col("__cl")))).as("survival_e6"))
           .orderBy("dur_days")
       },
       oracle = Some(s"""
@@ -2261,13 +2202,12 @@ private[queries] object CatalogStatTests {
           when(col("n_days") > 1L
               && col("n_days") * col("__sxx") > col("__sx") * col("__sx")
               && col("n_days") * col("__syy") > col("__sy") * col("__sy"),
-            floor((col("n_days") * col("__sxy") - col("__sx") * col("__sy"))
+            e6((col("n_days") * col("__sxy") - col("__sx") * col("__sy"))
               .cast("double")
               / (sqrt((col("n_days") * col("__sxx")
                   - col("__sx") * col("__sx")).cast("double"))
                 * sqrt((col("n_days") * col("__syy")
-                  - col("__sy") * col("__sy")).cast("double")))
-              * 1000000 + 0.5).cast("long")).as("r_e6"))
+                  - col("__sy") * col("__sy")).cast("double"))))).as("r_e6"))
           .orderBy("lag")
       },
       oracle = Some("""
@@ -2320,9 +2260,8 @@ private[queries] object CatalogStatTests {
           .join(broadcast(ny), Seq("__dow"))
           .crossJoin(broadcast(nn))
           .select(col("event_type"), col("__nx"),
-            (col("__nxy") * floor(log((col("__nxy") * col("__nn"))
-                .cast("double") / (col("__nx") * col("__ny")).cast("double"))
-              * 1000000.0 + 0.5).cast("long")).as("__t"))
+            (col("__nxy") * e6(log((col("__nxy") * col("__nn"))
+                .cast("double") / (col("__nx") * col("__ny")).cast("double")))).as("__t"))
           .groupBy(col("event_type"), col("__nx").as("n_type"))
           .agg(sum(col("__t")).as("mi_contrib"))
           .orderBy("event_type")
@@ -2674,14 +2613,14 @@ private[queries] object CatalogStatTests {
         val ref = daily
           .crossJoin(broadcast(daily.agg(min(col("__day")).as("__d0"))))
           .filter(col("__day") <= col("__d0") + 9L)
-          .agg(floor(sum(col("__sc")).cast("double")
-            / sum(col("__n")).cast("double") * 1e6 + 0.5).cast("long")
+          .agg(e6(sum(col("__sc")).cast("double")
+            / sum(col("__n")).cast("double"))
             .as("__mu"))
         val wCum = Window.orderBy(col("__day"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val series = daily.crossJoin(broadcast(ref))
-          .withColumn("__x", floor(col("__sc").cast("double")
-            / col("__n").cast("double") * 1e6 + 0.5).cast("long"))
+          .withColumn("__x", e6(col("__sc").cast("double")
+            / col("__n").cast("double")))
           .withColumn("__y", col("__x") - col("__mu"))
           .withColumn("__cum", sum(col("__y")).over(wCum))
           .withColumn("__s", col("__cum")
@@ -2693,29 +2632,7 @@ private[queries] object CatalogStatTests {
             (col("__s") > expr("__peak div 2")).as("alarm"))
           .orderBy("day_idx")
       },
-      oracle = Some(s"""
-        WITH daily AS (SELECT date_diff('day', DATE '1970-01-01',
-                                CAST(ts AS DATE)) AS day,
-                              count(*) AS n,
-                              sum(${centsSql("value")}) AS sc
-                       FROM events GROUP BY 1),
-        ref AS (SELECT CAST(floor(CAST(sum(sc) AS DOUBLE)
-                  / CAST(sum(n) AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS mu
-                FROM daily WHERE day <= (SELECT min(day) + 9 FROM daily)),
-        se AS (SELECT day, CAST(floor(CAST(sc AS DOUBLE)
-                 / CAST(n AS DOUBLE) * 1e6 + 0.5) AS BIGINT) - mu AS y,
-                 CAST(floor(CAST(sc AS DOUBLE) / CAST(n AS DOUBLE) * 1e6
-                   + 0.5) AS BIGINT) AS x
-               FROM daily, ref),
-        cu AS (SELECT day, x, sum(y) OVER (ORDER BY day
-                 ROWS UNBOUNDED PRECEDING) AS cum FROM se),
-        st AS (SELECT day, x, cum - least(0, min(cum) OVER (ORDER BY day
-                 ROWS UNBOUNDED PRECEDING)) AS st FROM cu),
-        pk AS (SELECT max(st) AS peak FROM st)
-        SELECT CAST(day AS BIGINT) AS day_idx, x AS mean_e6,
-               CAST(st AS BIGINT) AS cusum_e6,
-               (st > peak // 2) AS alarm
-        FROM st, pk ORDER BY day_idx""")),
+      oracle = Some(cusumOracleSql)),
 
     // STREAMING CUSUM drift (round 14) — q419's detector fed by a
     // stream: the daily (n, sum) frame comes from a watermarked 1-day
@@ -2742,14 +2659,14 @@ private[queries] object CatalogStatTests {
         val ref = daily
           .crossJoin(broadcast(daily.agg(min(col("__day")).as("__d0"))))
           .filter(col("__day") <= col("__d0") + 9L)
-          .agg(floor(sum(col("__sc")).cast("double")
-            / sum(col("__n")).cast("double") * 1e6 + 0.5).cast("long")
+          .agg(e6(sum(col("__sc")).cast("double")
+            / sum(col("__n")).cast("double"))
             .as("__mu"))
         val wCum = Window.orderBy(col("__day"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val series = daily.crossJoin(broadcast(ref))
-          .withColumn("__x", floor(col("__sc").cast("double")
-            / col("__n").cast("double") * 1e6 + 0.5).cast("long"))
+          .withColumn("__x", e6(col("__sc").cast("double")
+            / col("__n").cast("double")))
           .withColumn("__y", col("__x") - col("__mu"))
           .withColumn("__cum", sum(col("__y")).over(wCum))
           .withColumn("__s", col("__cum")
@@ -2761,29 +2678,7 @@ private[queries] object CatalogStatTests {
             (col("__s") > expr("__peak div 2")).as("alarm"))
           .orderBy("day_idx")
       },
-      oracle = Some(s"""
-        WITH daily AS (SELECT date_diff('day', DATE '1970-01-01',
-                                CAST(ts AS DATE)) AS day,
-                              count(*) AS n,
-                              sum(${centsSql("value")}) AS sc
-                       FROM events GROUP BY 1),
-        ref AS (SELECT CAST(floor(CAST(sum(sc) AS DOUBLE)
-                  / CAST(sum(n) AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS mu
-                FROM daily WHERE day <= (SELECT min(day) + 9 FROM daily)),
-        se AS (SELECT day, CAST(floor(CAST(sc AS DOUBLE)
-                 / CAST(n AS DOUBLE) * 1e6 + 0.5) AS BIGINT) - mu AS y,
-                 CAST(floor(CAST(sc AS DOUBLE) / CAST(n AS DOUBLE) * 1e6
-                   + 0.5) AS BIGINT) AS x
-               FROM daily, ref),
-        cu AS (SELECT day, x, sum(y) OVER (ORDER BY day
-                 ROWS UNBOUNDED PRECEDING) AS cum FROM se),
-        st AS (SELECT day, x, cum - least(0, min(cum) OVER (ORDER BY day
-                 ROWS UNBOUNDED PRECEDING)) AS st FROM cu),
-        pk AS (SELECT max(st) AS peak FROM st)
-        SELECT CAST(day AS BIGINT) AS day_idx, x AS mean_e6,
-               CAST(st AS BIGINT) AS cusum_e6,
-               (st > peak // 2) AS alarm
-        FROM st, pk ORDER BY day_idx"""),
+      oracle = Some(cusumOracleSql),
       streaming = true),
 
     // Benford first-digit audit (round 14) — the fraud/data-entry
@@ -2921,8 +2816,6 @@ private[queries] object CatalogStatTests {
           sum(col("y")).as("__sy"), sum(col("y") * col("y")).as("__syy"),
           sum(col("__yg")).as("__sa"),
           sum(col("__yg") * col("__yg")).as("__saa"))
-        def e6(c: org.apache.spark.sql.Column) =
-          floor(c * 1000000 + 0.5).cast("long")
         val nD = col("n_users").cast("double")
         val varY = (col("__syy").cast("double")
           - col("__sy").cast("double") * col("__sy").cast("double") / nD) / nD
@@ -3040,8 +2933,7 @@ private[queries] object CatalogStatTests {
           abs(col(s"za_$w") - col(s"zb_$w"))).reduce(_ + _)
         a.join(b, col("source_a") < col("source_b"))
           .select(col("source_a"), col("source_b"),
-            floor(deltaSum / lit(words.size.toDouble) * 1000000.0 + 0.5)
-              .cast("long").as("delta_e6"))
+            e6(deltaSum / lit(words.size.toDouble)).as("delta_e6"))
           .orderBy(col("source_a"), col("source_b"))
       },
       oracle = Some(s"""
@@ -3263,7 +3155,7 @@ private[queries] object CatalogStatTests {
             .otherwise(0L)).as("n_inliers"))
         scored
           .select(col("xi"), col("xj"), col("n_inliers"),
-            floor(col("__slope") * 1000000.0 + 0.5).cast("long")
+            e6(col("__slope"))
               .as("slope_e6c"),
             floor((col("yi").cast("double")
               - col("__slope") * col("xi").cast("double")) * 100.0 + 0.5)

@@ -268,9 +268,7 @@ private[queries] object CatalogTextVec {
               >= col("exact_sum") * Q30_QUALITY_FLOOR).as("quality_ok"))
           .orderBy("query_id")
       },
-      oracle = Some("""
-        SELECT vec_id AS query_id, TRUE AS quality_ok
-        FROM embeddings WHERE vec_id < 20 ORDER BY query_id""")),
+      oracle = Some(annQualityOracleSql)),
 
     // Within-document repetition ratio — the corpus-curation rule
     // (popularized by the Gopher quality filters) that catches
@@ -504,8 +502,8 @@ private[queries] object CatalogTextVec {
           .groupBy(col("source"), col("__n").as("n_tokens"),
             col("n_langs"))
           .agg(
-            sum(col("__c") * floor(log(col("__n").cast("double")
-              / col("__c").cast("double")) * 1000000.0 + 0.5).cast("long"))
+            sum(col("__c") * e6(log(col("__n").cast("double")
+              / col("__c").cast("double"))))
               .as("__hsum"),
             sum((lit(2L) * col("__rk") - col("n_langs") - 1L) * col("__c"))
               .as("__gsum"))
@@ -635,10 +633,8 @@ private[queries] object CatalogTextVec {
           .groupBy("k").agg(count(lit(1)).as("n_docs"))
         val w = Window.orderBy(col("k")) // 10-row frame — bounded
         vocabAt.join(docsAt, Seq("k"))
-          .withColumn("__lnv", floor(log(col("vocab").cast("double"))
-            * 1000000.0 + 0.5).cast("long"))
-          .withColumn("__lnn", floor(log(col("n_docs").cast("double"))
-            * 1000000.0 + 0.5).cast("long"))
+          .withColumn("__lnv", e6(log(col("vocab").cast("double"))))
+          .withColumn("__lnn", e6(log(col("n_docs").cast("double"))))
           .withColumn("__dv", col("__lnv") - lag(col("__lnv"), 1).over(w))
           .withColumn("__dn", col("__lnn") - lag(col("__lnn"), 1).over(w))
           .select(col("k"), col("n_docs"), col("vocab"),
@@ -717,8 +713,7 @@ private[queries] object CatalogTextVec {
         a.join(broadcast(b), Seq("__blk"))
           .where(col("name_a") < col("name_b"))
           .withColumn("sim_e6",
-            floor(JW.column(col("name_a"), col("name_b"), Some(s))
-              * 1000000.0 + 0.5).cast("long"))
+            e6(JW.column(col("name_a"), col("name_b"), Some(s))))
           .where(col("sim_e6") >= 900000L)
           .select(col("name_a"), col("name_b"), col("sim_e6"),
             (col("cnt_a") * col("cnt_b")).as("n_row_pairs"),
@@ -788,7 +783,7 @@ private[queries] object CatalogTextVec {
         val scoreCol = terms.map(contrib).reduce(_ + _)
         val scoredAll = withStats
           .withColumn("score_e6",
-            floor(scoreCol * 1000000.0 + 0.5).cast("long"))
+            e6(scoreCol))
           .where(col("score_e6") > 0L)
         val maxDfRow = long.groupBy(col("term")).agg(count(lit(1)).as("n"))
           .agg(max(col("n"))).collect()(0) // T rows -> 1, bounded
@@ -951,7 +946,7 @@ private[queries] object CatalogTextVec {
                 / col("c1").cast("double")
                 * (col("n1l").cast("double") / col("btot").cast("double")))
           .select(col("w1"), col("w2"),
-            floor(log(col("__p")) * 1000000.0 + 0.5).cast("long")
+            e6(log(col("__p")))
               .as("__term_e6"))
         pairs.join(model, Seq("w1", "w2"))
           .groupBy(col("doc_id"))

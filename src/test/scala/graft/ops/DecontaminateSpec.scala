@@ -123,14 +123,13 @@ class DecontaminateSpec extends AnyFunSuite {
     }
   }
 
-  test("hashed grams compose with the bloom prefilter and the shuffle form") {
+  test("hashed grams compose with the shuffle form") {
     val tr = randomCorpus(41, 40)
     val ev = randomCorpus(141, 15)
     val base = Decontaminate.maskContaminated(tr, ev, "doc_id", "text")
       .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
     val combo = Decontaminate.maskContaminated(tr, ev, "doc_id", "text",
-        bloomPrefilter = true, hashGrams = true, expectedItems = 1000L,
-        reassembly = "shuffle")
+        hashGrams = true, reassembly = "shuffle")
       .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
     assert(combo === base)
   }
@@ -140,14 +139,5 @@ class DecontaminateSpec extends AnyFunSuite {
       Decontaminate.maskContaminated(train, eval, "doc_id", "text",
         reassembly = "bogus")
     }
-  }
-
-  test("bloom-prefiltered masking is row-identical to the exact path") {
-    val plain = Decontaminate.maskContaminated(train, eval, "doc_id", "text")
-      .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
-    val bloomed = Decontaminate.maskContaminated(train, eval, "doc_id", "text",
-        bloomPrefilter = true)
-      .orderBy("doc_id").as[(Long, String, Long, Long)].collect()
-    assert(bloomed === plain)
   }
 }
