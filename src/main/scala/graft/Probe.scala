@@ -7,14 +7,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions.{col, max, xxhash64}
-import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.queries.Catalog
 
 /** Measurement probe over the SHIPPED catalog queries: every mode reaches
   * them through [[SparkEntry.queries]] only, never a hand copy.
@@ -26,10 +28,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    compiled per sample, with Bench's pure-CPU anchor after every sample.
   *    No queries = the heavy tier, so the scale side-board is
   *    `Probe scale 4 <dir>`, then `SPARK_GRAFT_SF_DIR=<dir> Probe time`.
-  *  - `plan <q> [rounds]`: task totals and classes compiled per round, then
-  *    one line per execution (eager checkpoints run as their own) with its
-  *    durationNs and final-plan digest; the last round's plans go to
-  *    target/probe_plan/.
+  *  - `plan <q> [rounds]`: task totals and classes compiled per round, one
+  *    line per stream micro-batch with its trigger phases in ms, then one
+  *    line per execution of any session (eager checkpoints and a stream's
+  *    micro-batches run as their own) with its durationNs and final-plan
+  *    digest; the last round's plans go to target/probe_plan/.
   *  - `explain [queries...]`: formatted physical plans (default: bench subset).
   *  - `scale <k> <outDir>`: writes the sf-dir replicated k times under
   *    outDir through [[ScaleData.replicate]] and prints its key strides.
@@ -268,13 +271,20 @@ object Probe {
 
   private final case class Execution(funcName: String, durationNs: Long, plan: SparkPlan)
 
-  /** Collects executions and task metrics; read after [[GraftBus]] drains. */
-  private final class Tap extends SparkListener with QueryExecutionListener {
+  /** Collects executions and task metrics from the context's bus, so it
+    * hears every session: the parent's, and the clones a streaming query
+    * runs its micro-batches in. Read after [[GraftBus]] drains.
+    */
+  private final class Tap extends SparkListener {
     val executions = new ConcurrentLinkedQueue[Execution]()
     val tasks = new ConcurrentLinkedQueue[TaskMetrics]()
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      executions.add(Execution(funcName, durationNs, qe.executedPlan))
-    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case end: SparkListenerSQLExecutionEnd =>
+        GraftInternal.executionEnd(end).foreach { case (name, qe, ns) =>
+          executions.add(Execution(name, ns, qe.executedPlan))
+        }
+      case _ =>
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach(tasks.add)
   }
 
@@ -290,6 +300,7 @@ object Probe {
       tap.tasks.clear()
       val gc0 = gcBeans.map(_.getCollectionTime).sum
       val jit0 = jitBean.getTotalCompilationTime
+      Catalog.ProgressLog.drain()
       val c0 = compiles()
       val sec = timed(noop(build(q)))
       val nCompiles = compiles() - c0
@@ -299,12 +310,20 @@ object Probe {
       val ts = tap.tasks.asScala.toSeq
       def sum(f: TaskMetrics => Long): Long = ts.map(f).sum
       val execs = tap.executions.asScala.toSeq
+      val batches = Catalog.ProgressLog.drain()
       out(f"[plan] $q round $i sec=$sec%.2f gc=$gcSec%.2f " +
         f"spill=${sum(m => m.memoryBytesSpilled + m.diskBytesSpilled) / 1e6}%.0fMB " +
         f"fetchWait=${sum(_.shuffleReadMetrics.fetchWaitTime) / 1e3}%.1f " +
         f"taskRun=${sum(_.executorRunTime) / 1e3}%.1f taskCpu=${sum(_.executorCpuTime) / 1e9}%.1f " +
         f"deser=${sum(_.executorDeserializeTime) / 1e3}%.1f nTasks=${ts.size} " +
         f"jit=$jitSec%.1f compiles=$nCompiles executions=${execs.size}")
+      // a stream's micro-batches: the trigger and its phases, in ms
+      batches.zipWithIndex.foreach { case (b, k) =>
+        out(s"[plan] $q round $i batch ${k + 1}/${batches.size} ${b.query} id=${b.batchId} " +
+          s"trigger=${b.triggerMs} addBatch=${b.addBatchMs} latestOffset=${b.latestOffsetMs} " +
+          s"queryPlanning=${b.queryPlanningMs} walCommit=${b.walCommitMs} " +
+          s"commitOffsets=${b.commitOffsetsMs} inputRows=${b.inputRows} stateRows=${b.stateRows}")
+      }
       // the noop write is the last execution; those before it ran nested
       execs.zipWithIndex.foreach { case (e, k) =>
         val line = s"$q round $i exec ${k + 1}/${execs.size} ${e.funcName} " +
@@ -316,14 +335,10 @@ object Probe {
         }
       }
     }
-    spark.listenerManager.register(tap)
     sc.addSparkListener(tap)
     try {
       drain()
       (1 to rounds).foreach(round)
-    } finally {
-      spark.listenerManager.unregister(tap)
-      sc.removeSparkListener(tap)
-    }
+    } finally sc.removeSparkListener(tap)
   }
 }

@@ -36,16 +36,30 @@ object Tables {
     * warm pass recompiled ~59 identical classes. One pass of the 48
     * bench queries at sf0.01 holds 1,071 distinct keys; 4096 is ~4x that
     * census, for a few MB of metaspace.
+    *
+    * `artifact.isolation.enabled` is off because this engine adds no
+    * artifact (no jar, file or class) to any session. With isolation on,
+    * each session UUID (every [[cloneSession]], and the clone each
+    * streaming query execution makes) gets a fresh class loader on the
+    * executor; since the cache above is keyed by class loader, each clone
+    * then recompiled every whole-stage class of byte-identical source
+    * (148 classes per warm pass of the six bench streams). Spark reads
+    * the flag once per session, lazily, so it belongs on the builder:
+    * every `newSession()` and stream clone inherits it from the context
+    * conf.
     */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.codegen.cache.maxEntries" -> "4096")
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** A `newSession()` clone (shared SparkContext, own runtime conf scope)
     * with the runtime entries of [[requiredConfs]] re-set, for contexts
     * built without them. Static entries are skipped: they are fixed at
-    * context start, and setting one on a live session throws.
+    * context start, and setting one on a live session throws. The clone
+    * shares its parent's executor class loader (artifact isolation is
+    * off), so a query it runs reuses the classes the parent compiled.
     */
   def cloneSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()

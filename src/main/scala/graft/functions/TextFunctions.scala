@@ -72,12 +72,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(array_join(tokens(text), " "))
 
-  /** 64-bit rolling-hash fingerprint (xxhash64 over normalized text) for
-    * engine-internal use — cheaper joins than the 128-bit md5 string.
-    */
-  def fingerprint64(text: Column): Column =
-    xxhash64(array_join(tokens(text), " "))
-
   /** Word k-shingles as an array column: ["a b c", "b c d", ...]. The
     * building block for n-gram Jaccard and MinHash.
     */

@@ -250,7 +250,11 @@ object VectorExpressions {
     * builder would capture it per-name anyway. `norms2` is computed here
     * with the exact driver-side arithmetic the literal form used
     * (`c.map(x => x*x).sum / 2.0`, left-to-right), so scores are
-    * bit-identical.
+    * bit-identical. That includes a zero score: the accumulator starts at
+    * +0.0 on both sides, so a score is never -0.0, and `array_max` /
+    * `array_position` treat 0.0 and -0.0 as equal anyway; a zero tie
+    * goes to the first index on both sides, interpreted and codegen
+    * (pinned in IvfIndexSpec).
     */
   def nearestCentroid(v: Column, centroids: Seq[Array[Double]]): Column = {
     require(centroids.nonEmpty, "centroids must be non-empty")

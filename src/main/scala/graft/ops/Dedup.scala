@@ -148,20 +148,6 @@ object Dedup {
     transform(TF.shingleHashes(text, shingleSize),
       h => h.bitwiseAND(lit(0xFFFFFFFFL)))
 
-  /** Per-row MinHash signature: array<long> of length `numHashes`. Shingle
-    * hashing is higher-order array ops, the permutations run in the native
-    * one-pass expression — zero shuffles, embarrassingly parallel.
-    * Single-expression convenience form; prefer the staged form (see
-    * [[minhashCandidates]]) in hot paths.
-    */
-  def minhashSignature(
-      text: Column,
-      numHashes: Int = graft.functions.expressions.MinHashExpressions.DefaultNumHashes,
-      shingleSize: Int = 3,
-      seed: Long = graft.functions.expressions.MinHashExpressions.DefaultSeed): Column =
-    minhashSignatureFromHashes(
-      maskedShingleHashes(text, shingleSize), numHashes, seed)
-
   /** Candidate duplicate pairs via LSH banding: split the signature into
     * `bands` bands of `numHashes / bands` rows, hash each band, and join
     * documents that share any (band, bandHash) bucket. Probability two docs

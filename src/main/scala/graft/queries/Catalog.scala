@@ -713,7 +713,10 @@ object Catalog {
     * sizes this to state volume / executor count, not to the batch
     * engine's scan parallelism; 8 gives ~12k state rows per store at
     * bench scale. Isolated in a clone so batch queries in the same
-    * session keep their width ([[Tables.cloneSession]]).
+    * session keep their width ([[Tables.cloneSession]]). The clone, and
+    * the clone each streaming query execution makes of it, inherit
+    * `spark.sql.artifact.isolation.enabled=false` from the context
+    * ([[Tables.requiredConfs]]), so a warm replay compiles no class.
     */
   private[queries] def streamingSession(s: SparkSession): SparkSession = {
     val ss = Tables.cloneSession(s)
@@ -723,8 +726,9 @@ object Catalog {
 
   /** Per-batch StreamingQueryProgress capture (r11 verdict #5): every
     * streaming runner records each micro-batch's (query, batchId,
-    * triggerExecution ms, input rows) here exactly once, before stopping
-    * its query ([[runToMemoryTable]] does it for the memory-sink runners);
+    * triggerExecution ms, input rows, state shape, and the phases of
+    * the trigger) here exactly once, before stopping its query
+    * ([[runToMemoryTable]] does it for the memory-sink runners);
     * Bench drains the buffer per SAMPLE into the side file, so a
     * q239/q160-class bench anomaly can be attributed to batch 0 vs
     * steady state from the artifact alone, without a rerun.
@@ -732,22 +736,32 @@ object Catalog {
     * retention (spark.sql.streaming.numRecentProgressUpdates, 100).
     */
   object ProgressLog {
+    /** One micro-batch. The trailing fields split `triggerMs` into
+      * Spark's `durationMs` phases: executing the batch (`addBatchMs`),
+      * asking the source for new offsets (`latestOffsetMs`), planning
+      * (`queryPlanningMs`) and the two checkpoint-log writes
+      * (`walCommitMs` for the offset log, `commitOffsetsMs` for the
+      * commit log). Each is -1 when the batch did not report it.
+      */
     final case class BatchProgress(query: String, batchId: Long,
-      triggerMs: Long, inputRows: Long, stateRows: Long, stateBytes: Long)
+      triggerMs: Long, inputRows: Long, stateRows: Long, stateBytes: Long,
+      addBatchMs: Long, latestOffsetMs: Long, queryPlanningMs: Long,
+      walCommitMs: Long, commitOffsetsMs: Long)
     private val buf = scala.collection.mutable.ArrayBuffer.empty[BatchProgress]
     def record(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
       synchronized {
         q.recentProgress.foreach { p =>
+          def ms(phase: String): Long =
+            Option(p.durationMs.get(phase)).map(_.longValue).getOrElse(-1L)
           // state-store shape per batch (r11 verdict #6): rows + bytes
           // summed over the batch's state operators — the 64x streaming
           // probe reads the PEAK of these
           val ops = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
           buf += BatchProgress(Option(p.name).getOrElse("?"), p.batchId,
-            Option(p.durationMs.get("triggerExecution"))
-              .map(_.longValue).getOrElse(-1L),
-            p.numInputRows,
-            ops.map(_.numRowsTotal).sum,
-            ops.map(_.memoryUsedBytes).sum)
+            ms("triggerExecution"), p.numInputRows,
+            ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum,
+            ms("addBatch"), ms("latestOffset"), ms("queryPlanning"),
+            ms("walCommit"), ms("commitOffsets"))
         }
       }
     def drain(): Seq[BatchProgress] =

@@ -2,6 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** The one `private[sql]` door the custom-operator layer needs: wrap a
   * hand-built [[LogicalPlan]] into a DataFrame. Lives in the
@@ -59,4 +61,16 @@ object GraftInternal {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The SQL execution an end event reports, from any session of the
+    * context: its name (a Dataset action's or a write command's;
+    * "unnamed" for the executions Spark leaves unnamed, such as a
+    * streaming micro-batch), its query execution and its duration in ns.
+    * Spark keeps these fields sql-private; they are set only on the
+    * event's in-process copy. None when the execution failed or carries
+    * no query execution.
+    */
+  def executionEnd(e: SparkListenerSQLExecutionEnd): Option[(String, QueryExecution, Long)] =
+    if (e.qe == null || e.executionFailure.isDefined) None
+    else Some((e.executionName.getOrElse("unnamed"), e.qe, e.duration))
 }

@@ -136,6 +136,17 @@ class ProbeSpec extends AnyFunSuite {
     assert(execs.size == n, plan)
     execs.foreach(l => assert(l.matches(".* durationNs=\\d+ BHJ=\\d+ SMJ=\\d+ .*"), l))
 
+    // a stream runs its micro-batches in clones of the session: the tap
+    // hears them, and each batch prints its trigger phases
+    val sq = "q184_stream_hll"
+    val splan = runLines(Probe.Plan(sq, 1))
+    val shead = splan.find(_.startsWith(s"[plan] $sq round 1 sec=")).get
+    assert("executions=(\\d+)".r.findFirstMatchIn(shead).get.group(1).toInt > 0, shead)
+    val batches = splan.filter(_.startsWith(s"[plan] $sq round 1 batch "))
+    assert(batches.nonEmpty, splan)
+    batches.foreach(l => assert(l.matches(".* trigger=\\d+ addBatch=\\d+ latestOffset=\\d+ " +
+      "queryPlanning=\\d+ walCommit=\\d+ commitOffsets=\\d+ .*"), l))
+
     val explain = runLines(Probe.Explain(Seq(b)))
     assert(explain.head.contains(s"== $b ==") && explain(1).contains("== Physical Plan =="))
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{GraftSpark, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,6 +61,44 @@ class IvfIndexSpec extends AnyFunSuite {
         literalAssign.as("literal"))
       .filter(col("native") =!= col("literal")).count()
     assert(mismatches == 0L)
+  }
+
+  test("nearest_centroid breaks a signed-zero tie like the literal form, interpreted and codegen") {
+    // centroid [-0.0, -0.0] scores a sum of -0.0 products, but the score
+    // accumulator starts at +0.0, so both forms compute +0.0 and tie
+    // with centroid [0.0, 0.0]; array_max/array_position compare doubles
+    // with 0.0 == -0.0 too, so the first index wins on both sides
+    val zero = Array(0.0, 0.0)
+    val negZero = Array(-0.0, -0.0)
+    val far = Array(-1.0, -1.0)
+    val v = array((col("id") + 1).cast("float"), (col("id") + 2).cast("float"))
+    def litScores(cs: Seq[Array[Double]]) = array(cs.map(c =>
+      graft.functions.VectorFunctions.dot(v, array(c.map(lit): _*))
+        - lit(c.map(x => x * x).sum / 2.0)): _*)
+    def literal(s: Column) = (array_position(s, array_max(s)) - 1).cast("int")
+    val paths = Seq(
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+    val keys = paths.head._2.map(_._1)
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try for ((path, confs) <- paths; cs <- Seq(Seq(zero, negZero, far), Seq(negZero, zero, far))) {
+      confs.foreach { case (k, x) => spark.conf.set(k, x) }
+      val row = spark.range(2).select(
+          graft.functions.expressions.VectorExpressions.nearestCentroid(v, cs).as("native"),
+          literal(litScores(cs)).as("literal"),
+          litScores(cs).getItem(1).as("s1"),
+          // the literal rule over a true signed-zero pair, both orders
+          literal(array(col("id") * 0.0, col("id") * -0.0)).as("pz_nz"),
+          literal(array(col("id") * -0.0, col("id") * 0.0)).as("nz_pz"))
+        .collect()
+      row.foreach { r =>
+        assert(r.getInt(0) == 0 && r.getInt(1) == 0, s"$path ${cs.map(_.toSeq)}: $r")
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(2)) == 0L, s"$path: score is not +0.0: $r")
+        assert(r.getInt(3) == 0 && r.getInt(4) == 0, s"$path: $r")
+      }
+    } finally saved.foreach { case (k, x) => x.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("nearest_centroid generated code COMPILES (no silent WSCG fallback)") {

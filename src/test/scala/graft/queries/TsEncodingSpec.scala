@@ -127,6 +127,11 @@ class TsEncodingSpec extends AnyFunSuite {
     val batches = Catalog.ProgressLog.drain().filter(_.query == "slice_contract")
     assert(batches.map(_.batchId) == Seq(0L, 1L, 2L), s"batches: $batches")
     assert(batches.map(_.inputRows) == slices.map(_.count()), s"batches: $batches")
+    // every batch reports each phase of its trigger
+    batches.foreach { b =>
+      Seq(b.addBatchMs, b.latestOffsetMs, b.queryPlanningMs, b.walCommitMs, b.commitOffsetsMs)
+        .foreach(ms => assert(ms >= 0L, s"batch ${b.batchId}: $b"))
+    }
     assert(table.orderBy("slice").as[(Long, Long)].collect().toSeq ==
       Seq((0L, 3L), (1L, 1L), (2L, 2L)))
   }
