@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.Files
+import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedQueue
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 
 import scala.jdk.CollectionConverters._
 
@@ -24,15 +29,17 @@ import graft.queries.Catalog
   *  - `ab <qA> <qB> [rounds]`: both queries in one JVM, interleaved, first
   *    slot alternating per round; the median PAIRED delta (a - b) isolates
   *    the code effect from host drift, which hits both slots alike.
-  *  - `time [queries...] [rounds]`: build / plan / execute and the classes
-  *    compiled per sample, with Bench's pure-CPU anchor after every sample.
+  *  - `time [queries...] [rounds]`: build / plan / execute, the classes
+  *    compiled and the processes started ([[Forks]]) per sample, with
+  *    Bench's pure-CPU anchor after every sample.
   *    No queries = the heavy tier, so the scale side-board is
   *    `Probe scale 4 <dir>`, then `SPARK_GRAFT_SF_DIR=<dir> Probe time`.
-  *  - `plan <q> [rounds]`: task totals and classes compiled per round, one
-  *    line per stream micro-batch with its trigger phases in ms, then one
-  *    line per execution of any session (eager checkpoints and a stream's
-  *    micro-batches run as their own) with its durationNs and final-plan
-  *    digest; the last round's plans go to target/probe_plan/.
+  *  - `plan <q> [rounds]`: task totals, classes compiled and processes
+  *    started per round, one line per stream micro-batch with its trigger
+  *    phases in ms, then one line per execution of any session (eager
+  *    checkpoints and a stream's micro-batches run as their own) with its
+  *    durationNs and final-plan digest; the last round's plans go to
+  *    target/probe_plan/.
   *  - `explain [queries...]`: formatted physical plans (default: bench subset).
   *  - `scale <k> <outDir>`: writes the sf-dir replicated k times under
   *    outDir through [[ScaleData.replicate]] and prints its key strides.
@@ -129,8 +136,8 @@ object Probe {
     def build(q: String): DataFrame = catalog(q)(spark, sfDir)
     cmd match {
       case Ab(a, b, rounds) => ab(a, b, rounds, build, out)
-      case Time(qs, rounds) => time(spark, qs, rounds, build, out)
-      case Plan(q, rounds) => plan(spark, q, rounds, build, out)
+      case Time(qs, rounds) => withForks(time(spark, qs, rounds, build, out, _))
+      case Plan(q, rounds) => withForks(plan(spark, q, rounds, build, out, _))
       case Explain(qs) => qs.foreach { q =>
         out(s"\n========== $q ==========")
         out(build(q).queryExecution.explainString(ExplainMode.fromString("formatted")))
@@ -140,6 +147,12 @@ object Probe {
           .map { case (d, s) => "\"" + d + "\":" + s }.mkString(",")
         out(s"""{"probe":"scale","k":$k,"src":"$sfDir","out":"$outDir","strides":{$strides}}""")
     }
+  }
+
+  /** One [[Forks]] recording for one probe run. */
+  private def withForks(body: Forks => Unit): Unit = {
+    val forks = new Forks
+    try body(forks) finally forks.close()
   }
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
@@ -155,6 +168,47 @@ object Probe {
     * far from 0 on a warm query is a compile storm, not a plan change.
     */
   private[graft] def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Processes this JVM starts, from one JFR recording of
+    * `jdk.ProcessStart` that is open until [[close]]. Without Hadoop's
+    * native library the local file system forks a shell command for some
+    * file operations (`chmod` to set a permission, `readlink` in a
+    * `FileContext` rename), so a warm query that forks is paying process
+    * starts, not engine work. A start belongs to the window its start
+    * time falls in.
+    */
+  private[graft] final class Forks extends AutoCloseable {
+    private val recording = new Recording()
+    recording.enable("jdk.ProcessStart").withoutStackTrace()
+    recording.start()
+
+    /** `body`'s value and the process starts while it ran, by command
+      * name (argv[0]'s file name).
+      */
+    def during[T](body: => T): (T, Map[String, Int]) = {
+      val from = Instant.now()
+      val value = body
+      val to = Instant.now()
+      // a dump of a running disk recording holds every event since start
+      val file = Files.createTempFile("graft-forks", ".jfr")
+      try {
+        recording.dump(file)
+        (value, RecordingFile.readAllEvents(file).asScala.toSeq.collect {
+          case e if e.getEventType.getName == "jdk.ProcessStart" &&
+              !e.getStartTime.isBefore(from) && !e.getStartTime.isAfter(to) =>
+            e.getString("command").takeWhile(_ != ' ').split('/').last
+        }.groupMapReduce(identity)(_ => 1)(_ + _))
+      } finally Files.delete(file)
+    }
+
+    override def close(): Unit = recording.close()
+  }
+
+  /** `forks=N`, then the count per command when N > 0: `forks=3(chmod:2,readlink:1)`. */
+  private[graft] def forksField(byCommand: Map[String, Int]): String =
+    if (byCommand.isEmpty) "forks=0"
+    else byCommand.toSeq.sorted.map { case (c, n) => s"$c:$n" }
+      .mkString(s"forks=${byCommand.values.sum}(", ",", ")")
 
   private def num(v: Double): String = f"$v%.3f"
   private def arr(vs: Seq[String]): String = vs.mkString("[", ",", "]")
@@ -189,10 +243,10 @@ object Probe {
     reading > math.max(1.5 * sessionMin, sessionMin + 0.25)
 
   private final case class Split(build: Double, plan: Double, exec: Double, anchor: Double,
-      compiles: Long) { def sec = build + plan + exec }
+      compiles: Long, started: Map[String, Int]) { def sec = build + plan + exec }
 
   private def time(spark: SparkSession, queries: Seq[String], rounds: Int,
-      build: String => DataFrame, out: String => Unit): Unit = {
+      build: String => DataFrame, out: String => Unit, forks: Forks): Unit = {
     // Bench's anchor: pure CPU, no IO, no shuffle, plans identically
     val anchors = collection.mutable.ArrayBuffer.empty[Double]
     def anchor(): Double = {
@@ -209,11 +263,12 @@ object Probe {
     def sample(q: String): Split = {
       var df: DataFrame = null
       val c0 = compiles()
-      val b = timed { df = build(q) }
-      val p = timed(df.queryExecution.executedPlan)
-      val e = timed(noop(df))
+      val ((b, p, e), started) = forks.during {
+        val b = timed { df = build(q) }
+        (b, timed(df.queryExecution.executedPlan), timed(noop(df)))
+      }
       val c = compiles() - c0
-      Split(b, p, e, anchorAfter(), c)
+      Split(b, p, e, anchorAfter(), c, started)
     }
     val results = queries.map { q =>
       noop(build(q)) // warmup: codegen, JIT, file listings
@@ -221,7 +276,7 @@ object Probe {
         val first = sample(q)
         val s = if (anchorBad(first.anchor, anchors.min)) sample(q) else first
         out(s"[time] $q round $i: build=${num(s.build)} plan=${num(s.plan)} " +
-          s"exec=${num(s.exec)} anchor=${num(s.anchor)} compiles=${s.compiles}")
+          s"exec=${num(s.exec)} anchor=${num(s.anchor)} ${forksField(s.started)} compiles=${s.compiles}")
         s
       }
     }
@@ -289,7 +344,7 @@ object Probe {
   }
 
   private def plan(spark: SparkSession, q: String, rounds: Int,
-      build: String => DataFrame, out: String => Unit): Unit = {
+      build: String => DataFrame, out: String => Unit, forks: Forks): Unit = {
     val sc = spark.sparkContext
     val tap = new Tap
     def drain(): Unit = GraftBus.waitUntilEmpty(sc, 60000L)
@@ -302,7 +357,7 @@ object Probe {
       val jit0 = jitBean.getTotalCompilationTime
       Catalog.ProgressLog.drain()
       val c0 = compiles()
-      val sec = timed(noop(build(q)))
+      val (sec, started) = forks.during(timed(noop(build(q))))
       val nCompiles = compiles() - c0
       val gcSec = (gcBeans.map(_.getCollectionTime).sum - gc0) / 1e3
       val jitSec = (jitBean.getTotalCompilationTime - jit0) / 1e3
@@ -316,7 +371,7 @@ object Probe {
         f"fetchWait=${sum(_.shuffleReadMetrics.fetchWaitTime) / 1e3}%.1f " +
         f"taskRun=${sum(_.executorRunTime) / 1e3}%.1f taskCpu=${sum(_.executorCpuTime) / 1e9}%.1f " +
         f"deser=${sum(_.executorDeserializeTime) / 1e3}%.1f nTasks=${ts.size} " +
-        f"jit=$jitSec%.1f compiles=$nCompiles executions=${execs.size}")
+        f"jit=$jitSec%.1f ${forksField(started)} compiles=$nCompiles executions=${execs.size}")
       // a stream's micro-batches: the trigger and its phases, in ms
       batches.zipWithIndex.foreach { case (b, k) =>
         out(s"[plan] $q round $i batch ${k + 1}/${batches.size} ${b.query} id=${b.batchId} " +

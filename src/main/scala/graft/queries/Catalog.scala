@@ -5,6 +5,7 @@ import graft.functions.{Aqi, TextFunctions => TF, VectorFunctions => VF}
 import graft.ops.{Dedup, Inference, Pack, Redact, Sampling, Similarity}
 import graft.pipeline.Transforms
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -702,25 +703,45 @@ object Catalog {
 
   private val StreamingShufflePartitions = 8L
 
-  /** Cloned session for a streaming harness query, with
-    * `spark.sql.shuffle.partitions` scoped DOWN to a fixed 8
+  /** Cloned session for a streaming harness query, with two confs of
+    * its own. Isolated in a clone so batch queries in the same session
+    * keep theirs ([[Tables.cloneSession]]).
+    *
+    * `spark.sql.shuffle.partitions` is scoped DOWN to a fixed 8
     * ([[StreamingShufflePartitions]]). Streaming state-store cost is
     * per-partition PER MICRO-BATCH — every batch opens, updates,
     * snapshots, and commits one store per shuffle partition, so a
     * 4-batch replay at the batch engine's 32 partitions pays 128 store
-    * commits for ~100k rows of state (r12 bench: ~2.2 s
-    * of fixed cost per batch, the whole q160 floor). A real deployment
-    * sizes this to state volume / executor count, not to the batch
-    * engine's scan parallelism; 8 gives ~12k state rows per store at
-    * bench scale. Isolated in a clone so batch queries in the same
-    * session keep their width ([[Tables.cloneSession]]). The clone, and
-    * the clone each streaming query execution makes of it, inherit
-    * `spark.sql.artifact.isolation.enabled=false` from the context
-    * ([[Tables.requiredConfs]]), so a warm replay compiles no class.
+    * commits for ~100k rows of state. A real deployment sizes this to
+    * state volume / executor count, not to the batch engine's scan
+    * parallelism; 8 gives ~12k state rows per store at bench scale.
+    *
+    * Checkpoint and state files go through Hadoop `FileSystem`
+    * (`FileSystemBasedCheckpointFileManager`), not Spark's default
+    * `FileContext` manager. Without Hadoop's native library, each local
+    * `FileContext` rename forks a `readlink` process: 616 per warm q160
+    * run, 176 per q184 run. On a local disk `FileSystem.rename` is the
+    * same atomic rename(2), without the fork. This is safe here because
+    * no catalog stream sets `checkpointLocation`: each one checkpoints to
+    * its own fresh local temp dir, with one writer, and Spark's
+    * state-file checksums stay on. It is not in [[Tables.requiredConfs]]
+    * because [[graft.streaming.StreamingIngest.writeMart]] takes a
+    * caller's checkpoint URI (HDFS, S3), where Spark's default stays.
+    * `Probe plan q160_stream_session_window 7` at sf0.01 on 4 cores,
+    * median warm addBatch per micro-batch (10k rows, then 0, 1, 0 rows),
+    * before -> after: 541/422/444/382 -> 362/251/258/215 ms; walCommit
+    * and commitOffsets went from ~30 to ~8 ms each.
+    *
+    * The clone, and the clone each streaming query execution makes of
+    * it, inherit `spark.sql.artifact.isolation.enabled=false` from the
+    * context ([[Tables.requiredConfs]]), so a warm replay compiles no
+    * class.
     */
   private[queries] def streamingSession(s: SparkSession): SparkSession = {
     val ss = Tables.cloneSession(s)
     ss.conf.set("spark.sql.shuffle.partitions", StreamingShufflePartitions)
+    ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileSystemBasedCheckpointFileManager].getName)
     ss
   }
 

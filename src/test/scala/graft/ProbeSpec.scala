@@ -24,6 +24,9 @@ class ProbeSpec extends AnyFunSuite {
 
   private def json(line: String): JsonNode = new ObjectMapper().readTree(line)
 
+  /** `forks=N`, with the count per command when N > 0. */
+  private val forksField = "forks=(0|\\d+\\([^:,()\\s]+:\\d+(,[^:,()\\s]+:\\d+)*\\))"
+
   test("parse rejects a bad mode, query or round count with a usage line") {
     val cases = Seq(
       Seq() -> "missing mode",
@@ -117,6 +120,7 @@ class ProbeSpec extends AnyFunSuite {
     assert(time.count(_.startsWith(s"[time] $a round 1: build=")) == 1, time)
     // the round after the warm-up compiles nothing: its classes are cached
     assert(time.exists(_.matches(s"\\[time\\] $a round 1: .* compiles=0")), time)
+    assert(time.exists(_.matches(s"\\[time\\] $a round 1: .* $forksField compiles=0")), time)
     val t = json(time.last)
     assert(t.get("probe").asText == "time" && t.get("anchor").get("min").asDouble > 0)
     val tq = t.get("queries").get(a)
@@ -130,6 +134,7 @@ class ProbeSpec extends AnyFunSuite {
     val plan = runLines(Probe.Plan(q, 1))
     val head = plan.find(_.startsWith(s"[plan] $q round 1 sec=")).get
     assert(head.matches(".* compiles=\\d+ executions=\\d+"), head)
+    assert(head.matches(s".* $forksField compiles=.*"), head)
     val n = "executions=(\\d+)".r.findFirstMatchIn(head).get.group(1).toInt
     assert(n >= 2, s"expected nested executions: $head")
     val execs = plan.filter(_.startsWith(s"[plan] $q round 1 exec "))
@@ -142,6 +147,7 @@ class ProbeSpec extends AnyFunSuite {
     val splan = runLines(Probe.Plan(sq, 1))
     val shead = splan.find(_.startsWith(s"[plan] $sq round 1 sec=")).get
     assert("executions=(\\d+)".r.findFirstMatchIn(shead).get.group(1).toInt > 0, shead)
+    assert(shead.matches(s".* $forksField compiles=.*"), shead)
     val batches = splan.filter(_.startsWith(s"[plan] $sq round 1 batch "))
     assert(batches.nonEmpty, splan)
     batches.foreach(l => assert(l.matches(".* trigger=\\d+ addBatch=\\d+ latestOffset=\\d+ " +

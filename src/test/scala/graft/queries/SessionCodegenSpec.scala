@@ -9,6 +9,7 @@ import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSpark, Probe, SparkEntry, Tables}
@@ -19,12 +20,18 @@ import graft.{GraftSpark, Probe, SparkEntry, Tables}
   * so every [[Tables.cloneSession]] and every stream's own clone
   * recompiled byte-identical classes. [[Tables.requiredConfs]] turns the
   * isolation off; these tests pin that a warm clone compiles nothing.
+  *
+  * The streaming clone also checkpoints through Hadoop's `FileSystem`
+  * rather than `FileContext`, whose local rename forks a `readlink`
+  * process per checkpoint and state file; only that clone does.
   */
 class SessionCodegenSpec extends AnyFunSuite {
   private lazy val spark = GraftSpark.spark
   private val sf = "/root/testdata/sf0.001"
   private val isolation = "spark.sql.artifact.isolation.enabled"
   private val provider = "spark.sql.streaming.stateStore.providerClass"
+  private val manager = "spark.sql.streaming.checkpointFileManagerClass"
+  private val fsManager = classOf[FileSystemBasedCheckpointFileManager].getName
 
   private def compiled(body: => Unit): Long = {
     val c0 = Probe.compiles()
@@ -84,5 +91,29 @@ class SessionCodegenSpec extends AnyFunSuite {
     Seq(spark, spark.newSession()).foreach { s =>
       assert(!s.conf.getOption(provider).exists(_.contains("RocksDB")), s.conf.getOption(provider))
     }
+  }
+
+  test("only the streaming clone checkpoints through FileSystem, and it keeps checksums") {
+    val (ss, warned) = withWarnings(Catalog.streamingSession(spark))
+    assert(warned.isEmpty, warned)
+    assert(ss.conf.get(manager) == fsManager)
+    assert(ss.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true")
+    Seq(spark, Tables.cloneSession(spark), spark.newSession()).foreach { s =>
+      assert(!s.conf.getOption(manager).contains(fsManager), s.conf.getOption(manager))
+    }
+  }
+
+  test("a warm run of each bench stream starts no readlink process") {
+    val forks = new Probe.Forks
+    try {
+      // the census hears a start, so an empty count means none happened
+      assert(forks.during(new ProcessBuilder("true").start().waitFor())._2 == Map("true" -> 1))
+      val warm = Catalog.benchStreamingNames.map { q =>
+        def once(): Unit = run(SparkEntry.queries(q)(spark, sf))
+        once()
+        q -> forks.during(once())._2
+      }
+      assert(warm.forall(!_._2.contains("readlink")), s"process starts per stream: $warm")
+    } finally forks.close()
   }
 }
