@@ -171,9 +171,11 @@ object Probe {
 
   /** Processes this JVM starts, from one JFR recording of
     * `jdk.ProcessStart` that is open until [[close]]. Without Hadoop's
-    * native library the local file system forks a shell command for some
-    * file operations (`chmod` to set a permission, `readlink` in a
-    * `FileContext` rename), so a warm query that forks is paying process
+    * native library Hadoop's stock local file systems fork a shell
+    * command for some file operations: `chmod` to set a permission
+    * (which [[NioLocalFileSystem]] does in-process for the `file:`
+    * `FileSystem`), and `chmod` or `readlink` in `FileContext`'s local
+    * create and rename. So a warm query that forks is paying process
     * starts, not engine work. A start belongs to the window its start
     * time falls in.
     */
@@ -204,7 +206,7 @@ object Probe {
     override def close(): Unit = recording.close()
   }
 
-  /** `forks=N`, then the count per command when N > 0: `forks=3(chmod:2,readlink:1)`. */
+  /** `forks=N`, then the count per command when N > 0: `forks=3(readlink:2,rm:1)`. */
   private[graft] def forksField(byCommand: Map[String, Int]): String =
     if (byCommand.isEmpty) "forks=0"
     else byCommand.toSeq.sorted.map { case (c, n) => s"$c:$n" }

@@ -47,12 +47,26 @@ object Tables {
     * the flag once per session, lazily, so it belongs on the builder:
     * every `newSession()` and stream clone inherits it from the context
     * conf.
+    *
+    * `fs.file.impl` swaps the `file:` scheme's file system for
+    * [[NioLocalFileSystem]]. Without Hadoop's native library the stock
+    * one forks a `chmod` process for every file (each part file and its
+    * `.crc`) and directory it creates: 896 in one `perfbench/run.py
+    * --seconds 0` run of `stream_replay`, 347 in one of `etl_dag`. The
+    * replacement sets the same nine `rwx` bits through `java.nio` (the
+    * same chmod(2), no process start) and falls back to the stock fork
+    * for any other mode, so on-disk permissions are identical
+    * (`LocalFsSpec`). Only `file:` paths use it; S3 or HDFS sinks keep
+    * their own file systems. Hadoop caches a file system per scheme and
+    * user, not per conf, so the entry is set before the SparkContext
+    * starts, before anything resolves `file:`.
     */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.codegen.cache.maxEntries" -> "4096",
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName)
 
   /** A `newSession()` clone (shared SparkContext, own runtime conf scope)
     * with the runtime entries of [[requiredConfs]] re-set, for contexts

@@ -171,8 +171,16 @@ class PipelineSpec extends AnyFunSuite with TimeLimits {
       (1 to 60).foreach(i => spark.range(16).selectExpr(s"id * 7 + ${base + i}L AS v").collect())
     }
     assert(between > 100, s"only $between classes compiled between the passes")
-    val warm = compiled(etlPass())
-    assert(warm == 0L, s"the warm pass recompiled $warm classes")
+    val forks = new graft.Probe.Forks
+    try {
+      // the census hears a start, so an empty count means none happened
+      assert(forks.during(new ProcessBuilder("true").start().waitFor())._2 == Map("true" -> 1))
+      val (warm, started) = forks.during(compiled(etlPass()))
+      assert(warm == 0L, s"the warm pass recompiled $warm classes")
+      // the partitioned Parquet write sets each file's and directory's
+      // permission without a chmod process
+      assert(!started.contains("chmod"), s"process starts in the warm pass: $started")
+    } finally forks.close()
   }
 
   test("schema inference mode survives all-null columns (VoidType regression)") {

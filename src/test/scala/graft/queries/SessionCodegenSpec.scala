@@ -8,11 +8,13 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSpark, Probe, SparkEntry, Tables}
+import graft.{GraftSpark, NioLocalFileSystem, Probe, SparkEntry, Tables}
 
 /** A cloned session reuses its parent's generated classes. Spark keys
   * its codegen cache by (class loader, source), and with per-session
@@ -23,7 +25,9 @@ import graft.{GraftSpark, Probe, SparkEntry, Tables}
   *
   * The streaming clone also checkpoints through Hadoop's `FileSystem`
   * rather than `FileContext`, whose local rename forks a `readlink`
-  * process per checkpoint and state file; only that clone does.
+  * process per checkpoint and state file; only that clone does. And
+  * every session writes local files through [[NioLocalFileSystem]],
+  * which sets a file's permission without forking `chmod`.
   */
 class SessionCodegenSpec extends AnyFunSuite {
   private lazy val spark = GraftSpark.spark
@@ -32,6 +36,15 @@ class SessionCodegenSpec extends AnyFunSuite {
   private val provider = "spark.sql.streaming.stateStore.providerClass"
   private val manager = "spark.sql.streaming.checkpointFileManagerClass"
   private val fsManager = classOf[FileSystemBasedCheckpointFileManager].getName
+  private val fileImpl = "spark.hadoop.fs.file.impl"
+
+  /** The Hadoop conf a session's reads and writes get (Spark's
+    * `sessionState.newHadoopConf()`, package-private, hence reflection).
+    */
+  private def hadoopConf(s: SparkSession): Configuration = {
+    val state = s.getClass.getMethod("sessionState").invoke(s)
+    state.getClass.getMethod("newHadoopConf").invoke(state).asInstanceOf[Configuration]
+  }
 
   private def compiled(body: => Unit): Long = {
     val c0 = Probe.compiles()
@@ -103,7 +116,20 @@ class SessionCodegenSpec extends AnyFunSuite {
     }
   }
 
-  test("a warm run of each bench stream starts no readlink process") {
+  test("every session resolves file: to the java.nio file system; cloneSession re-sets it quietly") {
+    val (cloned, warned) = withWarnings(Tables.cloneSession(spark))
+    assert(warned.isEmpty, warned)
+    assert(cloned.conf.get(fileImpl) == classOf[NioLocalFileSystem].getName)
+    // Hadoop caches one file system per scheme and user, whatever the
+    // conf, so a stock instance resolved first would stay pinned
+    val confs = spark.sparkContext.hadoopConfiguration +:
+      Seq(spark, cloned, Catalog.streamingSession(spark)).map(hadoopConf)
+    confs.foreach { c =>
+      assert(new Path("file:///tmp").getFileSystem(c).getClass == classOf[NioLocalFileSystem])
+    }
+  }
+
+  test("a warm run of each bench stream starts no readlink or chmod process") {
     val forks = new Probe.Forks
     try {
       // the census hears a start, so an empty count means none happened
@@ -113,7 +139,8 @@ class SessionCodegenSpec extends AnyFunSuite {
         once()
         q -> forks.during(once())._2
       }
-      assert(warm.forall(!_._2.contains("readlink")), s"process starts per stream: $warm")
+      assert(warm.forall(w => !w._2.contains("readlink") && !w._2.contains("chmod")),
+        s"process starts per stream: $warm")
     } finally forks.close()
   }
 }
