@@ -63,7 +63,7 @@ object ScaleData {
   def replicate(spark: SparkSession, srcDir: String, k: Int, outDir: String): Seq[(String, Long)] = {
     require(k >= 1, s"scale factor K must be at least 1: $k")
     val src = Tables.names.map(t => t -> Tables.load(spark, srcDir, t))
-    val dim = src.toMap.apply("embeddings").agg(min(size(col("embedding")))).head.getInt(0)
+    val dim = src.toMap.apply("embeddings").agg(min(size(col("embedding")))).head().getInt(0)
     require(k <= dim, s"embedding: K=$k exceeds the dimension $dim, so Hadamard rows would repeat")
     val domainOf = domains.flatMap { case (d, cs) => cs.map(_ -> d) }.toMap
     val bounds: Map[String, (Long, Long)] = src.flatMap { case (_, df) =>
@@ -71,7 +71,7 @@ object ScaleData {
       if (keys.isEmpty) Nil
       else {
         val aggs = keys.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val row = df.agg(aggs.head, aggs.tail: _*).head
+        val row = df.agg(aggs.head, aggs.tail: _*).head()
         keys.zipWithIndex.map { case (c, i) => c -> (row.getLong(2 * i), row.getLong(2 * i + 1)) }
       }
     }.toMap

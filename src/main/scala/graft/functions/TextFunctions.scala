@@ -29,14 +29,6 @@ object TextFunctions {
   /** Token count; long to keep integer types uniform across engines. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
-  /** A BPE-ish subword proxy: split on whitespace AND on transitions
-    * between word chars and non-word chars, the way byte-pair tokenizers
-    * fragment punctuation-heavy text. Counts sub-tokens.
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "\\s+|(?<=\\W)(?=\\w)|(?<=\\w)(?=\\W)"), t => length(t) > 0))
-      .cast("long")
-
   /** Mean token length (characters per token), null-safe for empty text. */
   def meanTokenLength(text: Column): Column = {
     val ts = tokens(text)

@@ -72,7 +72,7 @@ object VectorFunctions {
   def hyperplaneSignature(v: Column, planes: Seq[Array[Double]]): Column = {
     require(planes.size <= 63, "signature must fit in a long")
     planes.zipWithIndex.map { case (p, j) =>
-      val planeCol = array(p.map(lit): _*)
+      val planeCol = array(p.toSeq.map(lit): _*)
       when(dot(v, planeCol) >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
   }

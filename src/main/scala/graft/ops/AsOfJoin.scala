@@ -488,7 +488,7 @@ object AsOfJoin {
       "built-in")
     val lookup = call_function(fname, on.map(col) :+ col(leftTs): _*)
     left.withColumn("__asof", lookup)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toSeq.map(col) ++
         ("asof_ts" +: rightCols).map(f => col("__asof").getField(f).as(f)): _*)
   }
 }

@@ -119,7 +119,7 @@ object BloomPrune {
     val dt = dim.select(dimKey).schema.head.dataType
     Option(dim.select(bloomAgg(asLongKey(dimKey, dt), expectedItems,
         Some(dim.sparkSession)).as("bloom"))
-      .head.getAs[Array[Byte]]("bloom"))
+      .head().getAs[Array[Byte]]("bloom"))
   }
 
   /** Exact semi join with map-side bloom pruning: `fact` rows whose

@@ -116,12 +116,4 @@ object ConnectedComponents {
           "labels may be incomplete — raise maxIterations")
     labels.select(col("id"), col("label").as("component"))
   }
-
-  /** Dedup mapping from LSH pairs with full transitivity: every non-
-    * canonical member maps to its component's min id.
-    */
-  def dedupMapping(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b"): DataFrame =
-    components(pairs, aCol, bCol)
-      .filter(col("id") =!= col("component"))
-      .select(col("id"), col("component").as("canonical_id"))
 }

@@ -202,25 +202,6 @@ object Dedup {
       .drop("sig_a", "sig_b")
   }
 
-  /** Full MinHash dedup: candidates above `threshold`, then connected docs
-    * collapse to the min-id canonical (single-link over one hop — the
-    * standard one-pass approximation; full transitive closure would be an
-    * iterative connected-components job, overkill for near-dup removal).
-    * Returns (id, canonical_id) for every duplicated id.
-    */
-  def minhashDedupMapping(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.8,
-      numHashes: Int = graft.functions.expressions.MinHashExpressions.DefaultNumHashes,
-      bands: Int = 16,
-      shingleSize: Int = 3): DataFrame =
-    minhashCandidates(df, idCol, textCol, numHashes, bands, shingleSize)
-      .filter(col("est_jaccard") >= threshold)
-      .groupBy(col("id_b").as("id"))
-      .agg(min(col("id_a")).as("canonical_id"))
-
   // ------------------------------------------------------------- SimHash
 
   /** 64-bit SimHash per row via the native one-pass expression

@@ -124,7 +124,7 @@ object ExactSubstr {
     docs.join(spans, Seq(idCol), "left")
       .select(col(idCol),
         when(col("__spans").isNull, col(toksCol))
-          .otherwise(filter(col(toksCol), (t, i) =>
+          .otherwise(filter(col(toksCol), (_, i) =>
             !exists(col("__spans"), sp =>
               i >= sp.getField("span_start") && i < sp.getField("span_end"))))
           .as("clean_toks"))

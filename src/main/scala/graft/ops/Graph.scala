@@ -32,15 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Canonicalize + dedup an arbitrary undirected edge list: drops
-    * self-loops, orders endpoints (min, max), dedups parallel edges.
-    */
-  def canonicalEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges.filter(col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("src"),
-        greatest(col(srcCol), col(dstCol)).as("dst"))
-      .distinct()
-
   /** Global triangle census of a canonical undirected edge list:
     * one row — (n_nodes, n_edges, n_wedges, n_triangles,
     * global_clustering) where global_clustering = 3*triangles / wedges

@@ -28,7 +28,7 @@ object IvfIndex {
     def k: Int = centroids.size
   }
 
-  private def litVec(c: Array[Double]): Column = array(c.map(lit): _*)
+  private def litVec(c: Array[Double]): Column = array(c.toSeq.map(lit): _*)
 
   /** Scores against every centroid (higher = closer). */
   private def scores(v: Column, m: Model): Column =
@@ -97,12 +97,12 @@ object IvfIndex {
       assignCluster(VF.checkedDim(col(vecCol), m.centroids.head.length), m))
 
   /** Top-k cosine search probing the `nprobe` nearest clusters per query.
-    * `excludeSelf` as in [[Similarity.bruteForceTopK]].
+    * Drops the query's own id, as [[Similarity.bruteForceTopK]] does.
     */
   def search(queries: DataFrame, indexed: DataFrame, m: Model,
       k: Int, nprobe: Int = 2,
       queryId: String = "vec_id", corpusId: String = "vec_id",
-      vecCol: String = "embedding", excludeSelf: Boolean = true): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val s = scores(VF.checkedDim(col(vecCol), m.centroids.head.length), m)
     // nprobe nearest clusters: sort (score, idx) pairs descending by score
     val ranked = array_sort(
@@ -117,7 +117,7 @@ object IvfIndex {
     val c = indexed.select(col(corpusId).as("neighbor_id"), col(vecCol).as("c_vec"),
       col("cluster"))
     val scored = c.join(broadcast(q), Seq("cluster"))
-      .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
+      .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", VF.cosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))

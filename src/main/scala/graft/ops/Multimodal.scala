@@ -273,33 +273,6 @@ object Multimodal {
     }
   }
 
-  /** Frame sampling plan for video: every `stride`-th frame index, capped.
-    * Pure column math over the decoded metadata — the expensive per-frame
-    * decode happens downstream only for the selected indices.
-    */
-  def sampleFrameIndices(features: DataFrame, stride: Int, maxFrames: Int): DataFrame =
-    features
-      .filter(col("kind") === "video")
-      .withColumn("frame_indices",
-        slice(sequence(lit(0), col("n_frames") - 1, lit(stride)), 1, maxFrames))
-
-  /** Ingest real media files as binary payloads via Spark's binaryFile
-    * source — path/length/modTime metadata plus content, with
-    * pathGlobFilter narrowing at the listing level (no decode needed to
-    * skip non-matching files).
-    */
-  def readBinaryFiles(spark: SparkSession, path: String, glob: String = "*"): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(path)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        lower(regexp_extract(col("path"), "\\.([A-Za-z0-9]+)$", 1)).as("kind"),
-        col("content").as("payload"))
-      .as[MediaRow]
-  }
-
   /** Build a deterministic synthetic media table from the documents table
     * (payload = utf-8 text bytes) — the fixture generator for tests and the
     * smoke path; real data arrives via `spark.read.format("binaryFile")`.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,18 +37,17 @@ object Pack {
       idCol: String,
       tokensCol: String,
       budget: Long,
-      numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame = {
+      numPartitions: Int = 0): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     val spark = df.sparkSession
     val n = Ranking.width(df, numPartitions)
     // Pin placement: range partitioning samples the data to pick bounds,
     // and the offsets pass + the cumsum pass MUST agree on which rows
-    // landed where. Ranking.pin documents the default localCheckpoint
-    // vs durable persist(DISK_ONLY) executor-loss trade.
-    val parted = Ranking.pin(df
+    // landed where.
+    val parted = df
       .repartitionByRange(n, col(idCol))
-      .withColumn("__bucket", spark_partition_id()), durable)
+      .withColumn("__bucket", spark_partition_id())
+      .localCheckpoint()
 
     // Phase 2: per-bucket totals -> driver prefix sum (n rows, bounded).
     val totals = parted.groupBy("__bucket")

@@ -23,19 +23,18 @@ object PrefixSum {
   /** Exclusive prefix sum of `valueCol` (cast to long) over the global
     * `sortCols` order, plus the grand total: first row gets 0, each next
     * row the sum of all STRICTLY EARLIER rows. Output: input columns +
-    * `out` (long); the returned frame is placement-pinned
-    * ([[Ranking.pin]]) so downstream passes see consistent buckets.
+    * `out` (long); the returned frame is placement-pinned (a
+    * `localCheckpoint`) so downstream passes see consistent buckets.
     */
   def exclusiveWithTotal(df: DataFrame, sortCols: Seq[Column],
       valueCol: Column, out: String = "cum",
       numPartitions: Int = 0): (DataFrame, Long) = {
     val spark = df.sparkSession
     val n = Ranking.width(df, numPartitions)
-    val parted = Ranking.pin(
-      df.withColumn("__v", valueCol.cast("long"))
-        .repartitionByRange(n, sortCols: _*)
-        .withColumn("__bucket", spark_partition_id()),
-      durable = false)
+    val parted = df.withColumn("__v", valueCol.cast("long"))
+      .repartitionByRange(n, sortCols: _*)
+      .withColumn("__bucket", spark_partition_id())
+      .localCheckpoint()
     val bucketSums = parted.groupBy("__bucket")
       .agg(sum(col("__v")).as("__s")).collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -80,11 +79,11 @@ object PrefixSum {
       numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val n = Ranking.width(df, numPartitions)
-    val parted = Ranking.pin(
-      df.withColumn("__v", valueCol.cast("long"))
-        .repartitionByRange(n, (groupCols ++ sortCols): _*)
-        .withColumn("__bucket", spark_partition_id()),
-      durable = false)
+    // pinned: the sums pass and the window pass must see identical buckets
+    val parted = df.withColumn("__v", valueCol.cast("long"))
+      .repartitionByRange(n, (groupCols ++ sortCols): _*)
+      .withColumn("__bucket", spark_partition_id())
+      .localCheckpoint()
     val gk = struct(groupCols: _*)
     val sums = parted.groupBy(gk.as("__g"), col("__bucket"))
       .agg(sum(col("__v")).as("__s")).collect()

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed global ranking. A bare `row_number() OVER (ORDER BY ...)`
   * or `ntile(b) OVER (ORDER BY ...)` has an empty PARTITION BY, so Spark
@@ -31,83 +30,6 @@ object Ranking {
     if (numPartitions > 0) numPartitions
     else df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Pin a frame's partition placement for multi-pass reuse — both
-    * passes of the two-phase scan MUST see rows in identical partitions
-    * (re-executing `repartitionByRange` could re-sample its boundaries).
-    *
-    * Default (`durable = false`): `localCheckpoint` — materializes to
-    * executor-LOCAL storage and truncates lineage. Fastest, but on a
-    * real cluster an executor lost after the checkpoint FAILS THE JOB
-    * (no lineage left to recompute its blocks from); a single-JVM run
-    * never sees that failure mode.
-    *
-    * Durable (`durable = true`): `persist(DISK_ONLY)` with lineage
-    * kept — a lost executor's partitions are recomputed instead of
-    * killing the job. Placement stays pass-consistent because every
-    * pass reads the SAME cached plan: its RDD graph holds one
-    * RangePartitioner whose boundaries were sampled once at first
-    * materialization, so a recompute reuses those exact boundaries.
-    * Two costs the caller accepts:
-    *  - the recompute path additionally requires the SOURCE frame to be
-    *    deterministic (stable reads, no `rand`, no unstable sampling):
-    *    recomputed rows that differ from those counted in the offsets
-    *    pass would silently corrupt ranks — a failure mode
-    *    `localCheckpoint` (no recompute, job fails instead) cannot have;
-    *  - the DISK_ONLY cache is on the INTERNAL range-partitioned frame,
-    *    not the frame returned to the caller (which is a projection over
-    *    it), so `unpersist()` on the returned frame will NOT release it.
-    *    Every durable pin is therefore tracked in a JVM-global registry;
-    *    call [[releaseDurablePins]] when the ranked outputs have been
-    *    consumed (or `spark.catalog.clearCache()` / session end).
-    */
-  private[ops] def pin(df: DataFrame, durable: Boolean): DataFrame =
-    if (durable) {
-      val p = df.persist(StorageLevel.DISK_ONLY)
-      durablePinned.synchronized { durablePinned += p }
-      p
-    } else df.localCheckpoint()
-
-  /** Internal frames currently pinned by `durable = true` calls — the
-    * release handle [[pin]]'s scaladoc promises. Registry, not
-    * per-call return value, so the public ops keep returning a bare
-    * DataFrame; the price is coarseness: release frees EVERY live
-    * durable pin in the JVM, so concurrent durable rankings should
-    * each consume their output before anyone releases. (Releasing
-    * early is safe for correctness — lineage is kept and the cached
-    * plan's RangePartitioner re-applies the same sampled boundaries on
-    * recompute — it just costs the recompute.)
-    */
-  private val durablePinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Number of durable pins currently registered (diagnostics/specs). */
-  def durablePinCount: Int = durablePinned.synchronized { durablePinned.size }
-
-  private[ops] def durablePinnedFrames: Seq[DataFrame] =
-    durablePinned.synchronized { durablePinned.toSeq }
-
-  /** Unpersist every frame pinned by a `durable = true` ranking call in
-    * this JVM and empty the registry; returns how many were released.
-    * @param blocking wait for the blocks to actually drop (specs want
-    *        this; production callers usually don't need to).
-    */
-  def releaseDurablePins(blocking: Boolean = false): Int =
-    durablePinned.synchronized {
-      val n = durablePinned.size
-      durablePinned.foreach(_.unpersist(blocking))
-      durablePinned.clear()
-      n
-    }
-
-  /** Range-partition on the sort key and pin row placement ([[pin]]) so
-    * the per-bucket measure pass and the rank pass see identical
-    * partitioning.
-    */
-  private def rangeParted(df: DataFrame, sortCols: Seq[Column],
-      numPartitions: Int, durable: Boolean): DataFrame = {
-    pin(df.repartitionByRange(width(df, numPartitions), sortCols: _*)
-      .withColumn("__bucket", spark_partition_id()), durable)
-  }
-
   /** Turn per-bucket measures (row counts, distinct-key counts, ...) into
     * exclusive running bases, broadcast them back, and return the joined
     * frame + the measure total. Driver holds O(numPartitions) longs.
@@ -130,8 +52,13 @@ object Ranking {
     * frame-count ops (cume_dist).
     */
   private def withBases(df: DataFrame, sortCols: Seq[Column],
-      numPartitions: Int, durable: Boolean): (DataFrame, Long) = {
-    val parted = rangeParted(df, sortCols, numPartitions, durable)
+      numPartitions: Int): (DataFrame, Long) = {
+    // pin placement: the measure pass and the rank pass must see rows in
+    // identical partitions, and re-executing `repartitionByRange` could
+    // re-sample its boundaries
+    val parted = df.repartitionByRange(width(df, numPartitions), sortCols: _*)
+      .withColumn("__bucket", spark_partition_id())
+      .localCheckpoint()
     val counts = parted.groupBy("__bucket")
       .agg(count(lit(1)).as("__n")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))
@@ -142,9 +69,8 @@ object Ranking {
     * parallel. Output: input columns + `out`.
     */
   def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
-      out: String = "rn", numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame =
-    globalRowNumberWithTotal(df, sortCols, out, numPartitions, durable)._1
+      out: String = "rn", numPartitions: Int = 0): DataFrame =
+    globalRowNumberWithTotal(df, sortCols, out, numPartitions)._1
 
   /** [[globalRowNumber]] plus the TOTAL row count, which the two-phase
     * scan computes anyway (sum of the per-bucket measures) — callers
@@ -152,10 +78,9 @@ object Ranking {
     * would otherwise pay a separate full scan for `df.count()`.
     */
   def globalRowNumberWithTotal(df: DataFrame, sortCols: Seq[Column],
-      out: String = "rn", numPartitions: Int = 0,
-      durable: Boolean = false): (DataFrame, Long) = {
+      out: String = "rn", numPartitions: Int = 0): (DataFrame, Long) = {
     val w = Window.partitionBy("__bucket").orderBy(sortCols: _*)
-    val (based, total) = withBases(df, sortCols, numPartitions, durable)
+    val (based, total) = withBases(df, sortCols, numPartitions)
     (based
       .withColumn(out, col("__base") + row_number().over(w).cast("long"))
       .drop("__bucket", "__base"), total)
@@ -167,11 +92,10 @@ object Ranking {
     * (long, 1-based).
     */
   def ntileExact(df: DataFrame, buckets: Int, sortCols: Seq[Column],
-      out: String = "bucket", numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame = {
+      out: String = "bucket", numPartitions: Int = 0): DataFrame = {
     require(buckets > 0, s"buckets must be positive: $buckets")
     val w = Window.partitionBy("__bucket").orderBy(sortCols: _*)
-    val (based, total) = withBases(df, sortCols, numPartitions, durable)
+    val (based, total) = withBases(df, sortCols, numPartitions)
     // SQL ntile: with q = n div b, r = n mod b, the first r buckets have
     // q+1 rows. Rows 1..r*(q+1) map by div(q+1); the rest by div(q) after
     // shifting past the large buckets.
@@ -198,10 +122,9 @@ object Ranking {
     * Output: input columns + `out` (double).
     */
   def cumeDistExact(df: DataFrame, keyCols: Seq[Column],
-      out: String = "cume_dist", numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame = {
+      out: String = "cume_dist", numPartitions: Int = 0): DataFrame = {
     val w = Window.partitionBy("__bucket").orderBy(keyCols: _*)
-    val (based, total) = withBases(df, keyCols, numPartitions, durable)
+    val (based, total) = withBases(df, keyCols, numPartitions)
     val cnt = col("__base") + count(lit(1)).over(w)
     val cd =
       if (total == 0L) lit(0.0) // no rows survive anyway
@@ -210,36 +133,6 @@ object Ranking {
       .withColumn(out, cd)
       .drop("__bucket", "__base")
   }
-
-  /** Exact global `rank` over `keyCols` — SQL RANK semantics: 1 + the
-    * number of rows with a strictly smaller key, tied keys share a rank,
-    * gaps after ties — without the single-reducer window. Correctness of
-    * the split: equal keys always land in the same range partition, so a
-    * tie group never straddles workers, every earlier partition holds
-    * only strictly smaller keys, and local `rank() + base` IS the global
-    * rank. Output: input columns + `out` (long, 1-based).
-    */
-  def globalRankExact(df: DataFrame, keyCols: Seq[Column],
-      out: String = "rnk", numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame = {
-    val w = Window.partitionBy("__bucket").orderBy(keyCols: _*)
-    val (based, _) = withBases(df, keyCols, numPartitions, durable)
-    based
-      .withColumn(out, col("__base") + rank().over(w).cast("long"))
-      .drop("__bucket", "__base")
-  }
-
-  /** Exact global `dense_rank` over `keyCols` — 1 + the number of
-    * DISTINCT smaller keys, no gaps after ties — without the
-    * single-reducer window. Output: input columns + `out` (long,
-    * 1-based). Delegates to [[rankAndDenseRank]] (the dense base needs
-    * the local ladder anyway — see there).
-    */
-  def denseRankExact(df: DataFrame, keyCols: Seq[Column],
-      out: String = "drnk", numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame =
-    rankAndDenseRank(df, keyCols, "__rnk_drop", out, numPartitions, durable)
-      .drop("__rnk_drop")
 
   /** Exact global `rank` AND `dense_rank` from ONE range-partitioned
     * pass: one shuffle, one local window sort, one pinned frame. The
@@ -255,14 +148,13 @@ object Ranking {
     */
   def rankAndDenseRank(df: DataFrame, keyCols: Seq[Column],
       rankOut: String = "rnk", denseOut: String = "drnk",
-      numPartitions: Int = 0, durable: Boolean = false): DataFrame = {
+      numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
     // pin AFTER the window (unlike withBases, which pins before it):
     // both the base pass and the final projection read the ladder, so
-    // pinning the laddered frame makes the window sort run exactly once
-    // and keeps the two passes placement-consistent ([[pin]] documents
-    // the localCheckpoint-vs-durable executor-loss trade)
-    val laddered = pin(ladderPlan(df, keyCols, numPartitions), durable)
+    // checkpointing the laddered frame makes the window sort run exactly
+    // once and keeps the two passes placement-consistent
+    val laddered = ladderPlan(df, keyCols, numPartitions).localCheckpoint()
     val measures = laddered.groupBy("__bucket")
       .agg(count(lit(1)).as("__n"), max(col("__ld")).as("__d")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
@@ -302,10 +194,9 @@ object Ranking {
     * rank. Output: input columns + `out` (double).
     */
   def percentRankExact(df: DataFrame, keyCols: Seq[Column],
-      out: String = "pct_rank", numPartitions: Int = 0,
-      durable: Boolean = false): DataFrame = {
+      out: String = "pct_rank", numPartitions: Int = 0): DataFrame = {
     val w = Window.partitionBy("__bucket").orderBy(keyCols: _*)
-    val (based, total) = withBases(df, keyCols, numPartitions, durable)
+    val (based, total) = withBases(df, keyCols, numPartitions)
     val globalRank = col("__base") + rank().over(w).cast("long")
     val pct =
       if (total <= 1L) lit(0.0)

@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Exact top-k by cosine: for each row of `queries`, the `k` nearest
-    * corpus rows. Output: (query_id, neighbor_id, cosine, rank).
+    * corpus rows. Output: (query_id, neighbor_id, cosine, rank). A
+    * candidate whose id equals the query id is dropped: the queries are
+    * drawn from the corpus.
     *
     * Implementation notes for scale: `broadcast(queries)` keeps the corpus
     * un-shuffled; the only shuffle is the final per-query top-k aggregate,
@@ -28,18 +30,13 @@ object Similarity {
     * the window over partial results — expressed here as a window over the
     * joined stream, which Catalyst executes as partial top-k under AQE.
     */
-  /** @param excludeSelf drop candidates whose id equals the query id —
-    *  correct when queries are drawn from the corpus (the default here);
-    *  set false when the two id spaces are independent, or a coincidental
-    *  id collision silently drops a legitimate neighbor.
-    */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       queryId: String = "vec_id", corpusId: String = "vec_id",
-      vecCol: String = "embedding", excludeSelf: Boolean = true): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val q = queries.select(col(queryId).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(corpusId).as("neighbor_id"), col(vecCol).as("c_vec"))
     val scored = c.crossJoin(broadcast(q))
-      .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
+      .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", VF.cosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
@@ -85,7 +82,7 @@ object Similarity {
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numPlanes: Int = 12, dim: Int = 64, seed: Long = 42L,
       queryId: String = "vec_id", corpusId: String = "vec_id",
-      vecCol: String = "embedding", excludeSelf: Boolean = true): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val planes = VF.makePlanes(numPlanes, dim, seed)
     // checkedDim: a dim mismatch against the literal planes would bucket
     // everything to 0 and degenerate to a cross join — fail on row one
@@ -100,7 +97,7 @@ object Similarity {
       .withColumn("bucket", explode(array((lit(0L) +: flips).map(f => col("sig").bitwiseXOR(f)): _*)))
       .drop("sig")
     val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
+      .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", VF.cosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))

@@ -68,7 +68,7 @@ object TimeSeries {
     // both frames in ONE projection: chained withColumns leave two Window
     // nodes in the plan (CollapseWindow can't see through the interleaved
     // Projects) — same answer, one extra pass over every sorted partition
-    df.select(df.columns.map(col) :+
+    df.select(df.columns.toSeq.map(col) :+
       sum(exact).over(w).as("win_sum") :+
       count(exact).over(w).as("win_n"): _*)
   }

@@ -60,9 +60,12 @@ object OpenAqPipeline {
     * separately from [[run]] so tests and queries can apply it to any
     * long-format frame.
     *
+    * @param cfg unread; it stays until the benchmark harness, which
+    *        passes it, drops the argument
     * @return (deduped, pivoted, mart)
     */
-  def transform(raw: DataFrame, cfg: Schemas.JobConfig): (DataFrame, DataFrame, DataFrame) =
+  def transform(raw: DataFrame, @annotation.unused cfg: Schemas.JobConfig)
+      : (DataFrame, DataFrame, DataFrame) =
     chain(raw, raw, identity, identity)
 
   /** parse → dedup → pivot → enrich → fill. The location dimension is
@@ -284,7 +287,7 @@ object Sink {
   def writeWrapped(df: DataFrame, path: String, sourceName: String,
       extractedAt: java.sql.Timestamp): Unit = {
     import org.apache.spark.sql.functions._
-    df.agg(collect_list(struct(df.columns.map(col): _*)).as("results"))
+    df.agg(collect_list(struct(df.columns.toSeq.map(col): _*)).as("results"))
       .select(to_json(struct(
         struct(
           lit(sourceName).as("name"),

@@ -1,14 +1,11 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Aqi, TextFunctions => TF, VectorFunctions => VF}
-import graft.ops.{Dedup, Inference, Pack, Redact, Sampling, Similarity}
-import graft.pipeline.Transforms
+import graft.functions.{Aqi, TextFunctions => TF}
+import graft.ops.Sampling
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import scala.collection.immutable.ListMap
 
@@ -662,7 +659,7 @@ object Catalog {
     */
   private[queries] def timeThird(ev: DataFrame): Column = {
     val ms = unix_millis(col("ts"))
-    val b = ev.agg(min(ms), max(ms)).head
+    val b = ev.agg(min(ms), max(ms)).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     when(ms <= lo + (hi - lo) / 3, 0).when(ms <= lo + 2 * (hi - lo) / 3, 1)
       .otherwise(2)

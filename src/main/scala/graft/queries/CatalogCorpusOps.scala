@@ -1,15 +1,10 @@
 package graft.queries
 
-import graft.Tables
-import graft.functions.{Aqi, TextFunctions => TF, VectorFunctions => VF}
-import graft.ops.{Dedup, Inference, Pack, Redact, Sampling, Similarity}
-import graft.pipeline.Transforms
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{TextFunctions => TF}
+import graft.ops.{Dedup, Sampling}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import scala.collection.immutable.ListMap
 
 import Catalog._
 

@@ -715,7 +715,7 @@ private[queries] object CatalogGeoWave {
             LandmarkHops)
           .groupBy(col("dist")).agg(count(lit(1)).as("n_pairs"))
           .localCheckpoint(eager = true) // cum window + total share it
-        val total = hist.agg(sum(col("n_pairs"))).head.getLong(0)
+        val total = hist.agg(sum(col("n_pairs"))).head().getLong(0)
         hist
           .withColumn("cum_pairs", sum(col("n_pairs")).over(
             Window.orderBy("dist").rowsBetween(Window.unboundedPreceding, 0)))
@@ -792,7 +792,7 @@ private[queries] object CatalogGeoWave {
           .localCheckpoint(eager = true) // neighbor + core + border share it
         // density-derived core threshold: 2x the uniform-expectation 3x3
         // mass (9 cells / 100-cell grid), floor 3 — one bounded scalar
-        val total = cells.agg(sum(col("n_pts"))).head.getLong(0)
+        val total = cells.agg(sum(col("n_pts"))).head().getLong(0)
         val minPts = math.max(3L, total * 18L / 100L)
         val offsets = array((-1 to 1).flatMap(dy => (-1 to 1).map(dx =>
           struct(lit(dy.toLong).as("dy"), lit(dx.toLong).as("dx")))): _*)

@@ -1,15 +1,11 @@
 package graft.queries
 
-import graft.Tables
-import graft.functions.{Aqi, TextFunctions => TF, VectorFunctions => VF}
-import graft.ops.{Dedup, Inference, Pack, Redact, Sampling, Similarity}
-import graft.pipeline.Transforms
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{TextFunctions => TF}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import scala.collection.immutable.ListMap
 
 import Catalog._
 
@@ -751,7 +747,7 @@ private[queries] object CatalogInfra {
         import graft.ops.ChangeCapture
         val ev = t(s, d, "events")
         val ms = unix_millis(col("ts"))
-        val t0 = ev.agg(min(ms)).head.getLong(0) // bounded scalar
+        val t0 = ev.agg(min(ms)).head().getLong(0) // bounded scalar
         val split = t0 + 15L * 86400000L
         val dim = ChangeCapture.scd2(ev.filter(ms <= split),
           "user_id", "event_type", ms, col("event_id"))

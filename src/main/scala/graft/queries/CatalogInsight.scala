@@ -444,7 +444,7 @@ private[graft] object CatalogInsight {
       when(col("vec_id") === seedIds.head, 0L)) {
       case (acc, (id, i)) => acc.when(col("vec_id") === id, i.toLong)
     }
-    val c0 = px.filter(col("vec_id").isin(seedIds: _*))
+    val c0 = px.filter(col("vec_id").isin(seedIds.toSeq: _*))
       .select(codeOf.as("code"), col("sub"), col("pos"), col("__v").as("c"))
     val c1 = pqAssign(px, c0).join(px, Seq("vec_id", "sub"))
       .groupBy("sub", "code", "pos")
@@ -1812,7 +1812,7 @@ private[graft] object CatalogInsight {
         // greedy merge on (weight, min-leaf-label); depth[token] += 1
         // whenever its subtree is merged — total order both engines
         var nodes = freq.map { case (t0, f) => (f, t0, Set(t0)) }.toVector
-        val depth = scala.collection.mutable.Map(freq.map(_._1 -> 0L): _*)
+        val depth = scala.collection.mutable.Map(freq.toSeq.map(_._1 -> 0L): _*)
         while (nodes.length > 1) {
           val sorted = nodes.sortBy(n => (n._1, n._2))
           val (a, b) = (sorted(0), sorted(1))
@@ -1825,7 +1825,7 @@ private[graft] object CatalogInsight {
           StructField("token", StringType, nullable = false),
           StructField("freq", LongType, nullable = false),
           StructField("code_len", LongType, nullable = false)))
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
+        s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), schema)
           .orderBy("token")
       },
       oracle = Some {
@@ -4372,7 +4372,7 @@ private[graft] object CatalogInsight {
         // bounded collect: 4 query ids (ranks 5-8 of the sorted ids)
         val qIds = px.select("vec_id").distinct().orderBy("vec_id")
           .limit(2 * PqCodes).collect().map(_.getLong(0)).sorted.drop(PqCodes)
-        val qpx = px.filter(col("vec_id").isin(qIds: _*))
+        val qpx = px.filter(col("vec_id").isin(qIds.toSeq: _*))
           .select(col("vec_id").as("query_id"), col("sub"), col("pos"),
             col("__v").as("__q"))
         val lut = qpx.join(c1, Seq("sub", "pos"))

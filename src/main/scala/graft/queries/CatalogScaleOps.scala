@@ -1,15 +1,10 @@
 package graft.queries
 
-import graft.Tables
-import graft.functions.{Aqi, TextFunctions => TF, VectorFunctions => VF}
-import graft.ops.{Dedup, Inference, Pack, Redact, Sampling, Similarity}
+import graft.functions.{TextFunctions => TF}
+import graft.ops.{Dedup, Sampling}
 import graft.pipeline.Transforms
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import scala.collection.immutable.ListMap
 
 import Catalog._
 
@@ -290,7 +285,7 @@ private[queries] object CatalogScaleOps {
     // rebuilds the identical rows from range() — pagination/flatten/skip
     // semantics sit under the same hash gate as every batch operator.
     "q157_api_source" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, _) => {
         import graft.pipeline.{ApiSource, FixtureApi}
         val fetcher = FixtureApi.fetcher
         val locs = ApiSource.fetchAllLocations(fetcher,
@@ -319,7 +314,7 @@ private[queries] object CatalogScaleOps {
     // which is exactly the parity a user switching between them relies
     // on.
     "q159_dsv2_source" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, _) => {
         import graft.pipeline.{FixtureApi, FixtureApiFetcher}
         import graft.sources.OpenAqSource
         val cls = classOf[FixtureApiFetcher].getName

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.{VectorFunctions => VF}
 import graft.ops.{Baskets, ChangeCapture, Similarity}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -109,11 +109,11 @@ private[queries] object CatalogSelection {
       fn = (s, d) => {
         val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
           .localCheckpoint(eager = true) // k rounds share one materialized scan
-        val seedId = emb.agg(min("vec_id")).head.getLong(0) // bounded scalar
+        val seedId = emb.agg(min("vec_id")).head().getLong(0) // bounded scalar
         def embOf(id: Long): org.apache.spark.sql.Column = {
           // bounded collect: ONE center row (k·dim floats total per run)
           val a = emb.filter(col("vec_id") === id)
-            .head.getAs[scala.collection.Seq[Float]]("embedding")
+            .head().getAs[scala.collection.Seq[Float]]("embedding")
           array(a.toSeq.map(lit): _*)
         }
         var picked = Vector[(Long, Long, Option[Double])]((1L, seedId, None))
@@ -122,7 +122,7 @@ private[queries] object CatalogSelection {
           .localCheckpoint(eager = true)
         for (i <- 2 to KCenterK) {
           val top = cur.orderBy(col("__mind").desc, col("vec_id").asc)
-            .select(col("vec_id"), col("__mind")).head // bounded: 1 row
+            .select(col("vec_id"), col("__mind")).head() // bounded: 1 row
           val (vid, rad) = (top.getLong(0), top.getDouble(1))
           picked :+= ((i.toLong, vid, Some(rad)))
           if (i < KCenterK)
@@ -261,7 +261,7 @@ private[queries] object CatalogSelection {
     "q304_decayed_counts" -> QueryDef(
       fn = (s, d) => {
         val ev = t(s, d, "events")
-        val anchor = ev.agg(max(unix_millis(col("ts")))).head.getLong(0) // bounded scalar
+        val anchor = ev.agg(max(unix_millis(col("ts")))).head().getLong(0) // bounded scalar
         val halvings = least(
           expr(s"($anchor - unix_millis(ts)) div ${86400000L * HalfLifeDays}"),
           lit(MaxHalvings.toLong))

@@ -2049,8 +2049,6 @@ private[queries] object CatalogStatTests {
           .groupBy("__d", "__w")
           .agg(sum(when(col("__ra") <= col("__d")
             && col("__rb") <= col("__d"), 1L).otherwise(0L)).as("overlap"))
-        val wCum = Window.orderBy(col("__d"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         overlap
           .withColumn("term_e12", expr("__w * overlap div __d"))
           .withColumn("rbo_e12", expr("sum(term_e12) OVER (ORDER BY __d" +
@@ -2553,7 +2551,7 @@ private[queries] object CatalogStatTests {
     // ORDER-FREE integer sums. chosen = the (total, b) argmin. Pure
     // bounded compute — 8 configs x 99 grid points.
     "q412_lsh_planner" -> QueryDef(
-      fn = (s, d) => {
+      fn = (s, _) => {
         val cfg = s.createDataFrame(Seq((128L, 1L), (64L, 2L), (32L, 4L),
           (16L, 8L), (8L, 16L), (4L, 32L), (2L, 64L), (1L, 128L)))
           .toDF("b", "r")

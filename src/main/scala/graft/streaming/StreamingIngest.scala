@@ -54,18 +54,6 @@ object StreamingIngest {
       .select(col("window.start").as("datetime"),
               col("location_id"), col("parameter"), col("value"), col("n"))
 
-  /** Continuous partitioned-parquet sink via foreachBatch, reusing the
-    * batch pipeline's transform + writer so stream output is
-    * indistinguishable from batch output.
-    *
-    * Delivery: default append is AT-LEAST-ONCE — a batch replayed after a
-    * failure between the write and the checkpoint commit appends its rows
-    * again (the same duplicate-on-rerun contract as the reference's batch
-    * job). `exactlyOnce = true` adds a `batch_id` partition column written
-    * with dynamic partition overwrite, so a replay of batch N replaces
-    * batch N's own directories instead of duplicating them — idempotent at
-    * the cost of one extra partition level in the layout.
-    */
   /** The per-batch write function behind [[writeMart]], exposed so the
     * delivery semantics are testable without driving a real failure/replay
     * through the checkpoint machinery.
@@ -83,6 +71,18 @@ object StreamingIngest {
       graft.pipeline.Sink.writePartitioned(withParts, outputPath)
   }
 
+  /** Continuous partitioned-parquet sink via foreachBatch, reusing the
+    * batch pipeline's transform + writer so stream output is
+    * indistinguishable from batch output.
+    *
+    * Delivery: default append is AT-LEAST-ONCE — a batch replayed after a
+    * failure between the write and the checkpoint commit appends its rows
+    * again (the same duplicate-on-rerun contract as the reference's batch
+    * job). `exactlyOnce = true` adds a `batch_id` partition column written
+    * with dynamic partition overwrite, so a replay of batch N replaces
+    * batch N's own directories instead of duplicating them — idempotent at
+    * the cost of one extra partition level in the layout.
+    */
   def writeMart(deduped: DataFrame, outputPath: String,
       checkpoint: String, exactlyOnce: Boolean = false): DataStreamWriter[Row] =
     deduped.writeStream

@@ -41,12 +41,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(one(TextFunctions.trigramsOfTokens(toks), "a b") == Seq())
   }
 
-  test("subwordCount fragments punctuation-heavy text like a BPE tokenizer") {
-    assert(one(TextFunctions.subwordCount(col("t")), "hello world") == 2L)
-    // "don't stop-me now!" → don / ' / t / stop / - / me / now / !
-    assert(one(TextFunctions.subwordCount(col("t")), "don't stop-me now!") == 8L)
-  }
-
   test("fingerprint is whitespace-normalized (same md5 for respaced text)") {
     val a = one(TextFunctions.fingerprint(col("t")), "hello   world")
     val b = one(TextFunctions.fingerprint(col("t")), "hello world")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.GraftSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class BasketsGraphSpec extends AnyFunSuite {
@@ -149,13 +148,6 @@ class BasketsGraphSpec extends AnyFunSuite {
     // two triangles sharing edge (1,2): {1,2,3} and {1,2,4}
     val r = census(Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L)))
     assert(r.getLong(3) == 2L)
-  }
-
-  test("canonicalEdges drops self-loops, orders endpoints, dedups") {
-    val df = Seq((2L, 1L), (1L, 2L), (3L, 3L), (1L, 2L)).toDF("a", "b")
-    val out = Graph.canonicalEdges(df, "a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out == Set((1L, 2L)))
   }
 
   // ---- Graph.pageRank ---------------------------------------------------

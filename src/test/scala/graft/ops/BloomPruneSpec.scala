@@ -69,7 +69,7 @@ class BloomPruneSpec extends AnyFunSuite {
                   (SELECT bloom_agg_${BloomPrune.DefaultExpectedItems}(pk)
                    FROM bloom_dim),
                   fk)
-            AND fk IN (SELECT pk FROM bloom_dim)""").head.getLong(0)
+            AND fk IN (SELECT pk FROM bloom_dim)""").head().getLong(0)
     assert(n == 40L)
   }
 }

@@ -27,13 +27,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(comp.size == 80 && comp.values.forall(_ == 0L))
   }
 
-  test("dedupMapping emits only non-canonical members") {
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val m = ConnectedComponents.dedupMapping(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m == Map(2L -> 1L, 3L -> 1L))
-  }
-
   test("pairsDistinct=true equals the default on distinct canonical pairs") {
     // r16 opt round: the flag skips CC's internal distinct when the
     // candidate pass emits each unordered pair exactly once (the
@@ -56,10 +49,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (3L, base + " five two four")).toDF("doc_id", "text")
     val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
       .filter(col("est_jaccard") >= 0.5).select("id_a", "id_b")
-    val mapping = ConnectedComponents.dedupMapping(cands)
+    val comp = ConnectedComponents.components(cands)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(mapping.get(2L).contains(1L))
-    assert(mapping.get(3L).contains(1L)) // transitive: via doc 2
+    assert(comp.get(2L).contains(1L))
+    assert(comp.get(3L).contains(1L)) // transitive: via doc 2
   }
 }
 

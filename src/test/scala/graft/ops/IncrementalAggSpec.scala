@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.GraftSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class IncrementalAggSpec extends AnyFunSuite {

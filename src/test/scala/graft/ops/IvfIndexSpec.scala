@@ -50,7 +50,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // lit(|c|^2/2)) — pinned here value-for-value on real embeddings.
     val emb = Tables.embeddings(spark, sf)
     val m = IvfIndex.train(emb, "vec_id", "embedding", k = 8, iterations = 2)
-    def litVec(c: Array[Double]) = array(c.map(lit): _*)
+    def litVec(c: Array[Double]) = array(c.toSeq.map(lit): _*)
     val literalScores = array(m.centroids.map(c =>
       graft.functions.VectorFunctions.dot(col("embedding"), litVec(c))
         - lit(c.map(x => x * x).sum / 2.0)): _*)
@@ -73,7 +73,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val far = Array(-1.0, -1.0)
     val v = array((col("id") + 1).cast("float"), (col("id") + 2).cast("float"))
     def litScores(cs: Seq[Array[Double]]) = array(cs.map(c =>
-      graft.functions.VectorFunctions.dot(v, array(c.map(lit): _*))
+      graft.functions.VectorFunctions.dot(v, array(c.toSeq.map(lit): _*))
         - lit(c.map(x => x * x).sum / 2.0)): _*)
     def literal(s: Column) = (array_position(s, array_max(s)) - 1).cast("int")
     val paths = Seq(

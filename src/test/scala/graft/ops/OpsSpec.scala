@@ -68,12 +68,6 @@ class DedupSpec extends AnyFunSuite {
     assert(both.filter($"native" =!= $"hof").count() == 0)
   }
 
-  test("minhashDedupMapping maps duplicates to canonical id") {
-    val m = Dedup.minhashDedupMapping(docs, "doc_id", "text", threshold = 0.95)
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("canonical_id")).toMap
-    assert(m(2L) == 1L)
-  }
-
   test("simhash: identical hamming 0; near-dup small; candidates found via blocking") {
     val sh = docs.select($"doc_id", Dedup.simhash($"text").as("sh"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("sh")).toMap
@@ -265,7 +259,7 @@ class SimilaritySpec extends AnyFunSuite {
       // corpus = noise + the query itself + an exact copy under a
       // different id; identical vectors share a signature at ANY seed,
       // so the copy is in the probed bucket and must win rank 1
-      // (cosine 1.0) once excludeSelf drops the query's own id
+      // (cosine 1.0) once the self-exclusion filter drops the query's own id
       val vecs = (Seq((100L, q), (101L, q)) ++ noise.zipWithIndex.map {
         case (v, i) => (i.toLong, v)
       }).toDF("vec_id", "embedding")
@@ -295,19 +289,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(f1(1).kind == "video" && f1(1).n_frames >= 1)
   }
 
-  test("readBinaryFiles ingests files as opaque payloads with metadata") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media").toFile
-    java.nio.file.Files.write(new java.io.File(dir, "a.img").toPath, "IMGDATA".getBytes)
-    java.nio.file.Files.write(new java.io.File(dir, "b.wav").toPath, "WAVDATA!".getBytes)
-    java.nio.file.Files.write(new java.io.File(dir, "skip.txt").toPath, "no".getBytes)
-    val media = Multimodal.readBinaryFiles(spark, dir.getAbsolutePath, glob = "*.{img,wav}")
-    val rows = media.collect().sortBy(_.kind)
-    assert(rows.map(_.kind).toSeq == Seq("img", "wav"))
-    assert(rows.head.payload.length == 7)
-    val feats = Multimodal.extractFeatures(media).collect()
-    assert(feats.length == 2 && feats.forall(_.byte_len > 0))
-  }
-
   test("resize produces the target byte budget deterministically") {
     val media = Seq(
       Multimodal.MediaRow(1L, "image", "somepayload".getBytes),
@@ -317,15 +298,6 @@ class MultimodalSpec extends AnyFunSuite {
     // deterministic on payload: same input, same thumbnail bytes
     val again = Multimodal.resize(media, 4, 2).collect().sortBy(_.media_id)
     assert(small.zip(again).forall { case (a, b) => a.payload.sameElements(b.payload) })
-  }
-
-  test("sampleFrameIndices strides and caps video frames") {
-    val media = Seq(Multimodal.MediaRow(1L, "video", "frames".getBytes)).toDS()
-    val feats = Multimodal.extractFeatures(media).toDF()
-    val sampled = Multimodal.sampleFrameIndices(feats, stride = 10, maxFrames = 5)
-    val idx = sampled.select("frame_indices").head().getSeq[Int](0)
-    assert(idx.length <= 5)
-    assert(idx.zip(idx.drop(1)).forall { case (a, b) => b - a == 10 })
   }
 
   // --- real container headers (HeaderCodec) ---

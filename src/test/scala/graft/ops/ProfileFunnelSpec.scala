@@ -100,7 +100,7 @@ class ProfileFunnelSpec extends AnyFunSuite {
   test("streaming funnel frontier matches batch funnelTimes (parity)") {
     val rnd = new scala.util.Random(23)
     val types = Seq("view", "click", "buy", "noise")
-    val rows = (1 to 400).map { i =>
+    val rows = (1 to 400).map { _ =>
       (rnd.nextInt(12).toLong,
         new java.sql.Timestamp(1700000000000L + rnd.nextInt(1000000) * 1000L),
         types(rnd.nextInt(types.size)))

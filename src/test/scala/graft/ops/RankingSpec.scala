@@ -64,12 +64,14 @@ class RankingSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(1.0))
   }
 
+  // the global rank and dense rank are the rnk / drnk columns of
+  // rankAndDenseRank; the two tests below pin each on its hard input
   test("globalRankExact equals the global window rank, tie groups intact") {
     // no id tiebreak: tie groups of ~143 rows each must share ONE rank
     // and leave the RANK gap after themselves, across bucket boundaries
     val df = corpus(1000)
     val twoPhase = Ranking
-      .globalRankExact(df, Seq(col("score").desc), numPartitions = 7)
+      .rankAndDenseRank(df, Seq(col("score").desc), numPartitions = 7)
       .select("id", "rnk").as[(Long, Long)].collect().toMap
     val window = df
       .withColumn("rnk", rank().over(Window.orderBy(col("score").desc)).cast("long"))
@@ -97,7 +99,7 @@ class RankingSpec extends AnyFunSuite {
       (4L, Option(1.0)), (5L, None), (6L, Option(2.0)))
       .toDF("id", "score")
     val twoPhase = Ranking
-      .denseRankExact(df, Seq(col("score").asc), numPartitions = 3)
+      .rankAndDenseRank(df, Seq(col("score").asc), numPartitions = 3)
       .select("id", "drnk").as[(Long, Long)].collect().toMap
     val window = df
       .withColumn("drnk",
@@ -153,25 +155,6 @@ class RankingSpec extends AnyFunSuite {
     val out = Ranking.rankAndDenseRank(df, Seq(col("score").asc), numPartitions = 4)
       .select("rnk", "drnk").as[(Long, Long)].collect()
     assert(out.forall(_ == ((1L, 1L))))
-  }
-
-  test("releaseDurablePins frees the internal DISK_ONLY cache") {
-    Ranking.releaseDurablePins(blocking = true) // clean slate for the count
-    val df = (1L to 50L).map(i => (i, (i * 37 % 11).toDouble)).toDF("id", "score")
-    val ranked = Ranking.globalRowNumber(df,
-      Seq(col("score").asc, col("id").asc), numPartitions = 4, durable = true)
-    assert(ranked.count() == 50L) // materialize: offsets pass ran, cache live
-    assert(Ranking.durablePinCount == 1)
-    val pinned = Ranking.durablePinnedFrames.head
-    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.DISK_ONLY,
-      s"internal frame not DISK_ONLY: ${pinned.storageLevel}")
-    assert(Ranking.releaseDurablePins(blocking = true) == 1)
-    assert(Ranking.durablePinCount == 0)
-    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      s"cache survived release: ${pinned.storageLevel}")
-    // non-durable pins (localCheckpoint) never enter the registry
-    val lc = Ranking.globalRowNumber(df, Seq(col("id").asc), numPartitions = 4)
-    assert(lc.count() == 50L && Ranking.durablePinCount == 0)
   }
 
   private def assertNtileMatches(df: org.apache.spark.sql.DataFrame, b: Int): Unit = {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.GraftSpark
-import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RrfSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
-  import spark.implicits._
 
   // 500 rows with heavy value ties (values 0..9) — the tie term must do
   // real work — and a second system anti-correlated with the first

@@ -35,10 +35,10 @@ class CatalogCurationSpec extends AnyFunSuite {
       assert(viol == 0)
       // the normalization range is the global score range
       val (mn, mx) = {
-        val r = out.agg(min("norm_score"), max("norm_score")).head
+        val r = out.agg(min("norm_score"), max("norm_score")).head()
         (r.getLong(0), r.getLong(1))
       }
-      val g = out.agg(min("score"), max("score")).head
+      val g = out.agg(min("score"), max("score")).head()
       assert(mn >= g.getLong(0) && mx <= g.getLong(1))
     } finally out.unpersist()
   }
@@ -74,7 +74,7 @@ class CatalogCurationSpec extends AnyFunSuite {
     try {
       assert(out.filter(col("alloc_r2") > col("supply")).count() == 0)
       assert(out.filter(col("alloc_r1") > col("alloc_r2")).count() == 0)
-      val r = out.agg(sum("supply"), sum("alloc_r2")).head
+      val r = out.agg(sum("supply"), sum("alloc_r2")).head()
       val budget = r.getLong(0) / 2
       assert(r.getLong(1) <= budget,
         s"allocated ${r.getLong(1)} > budget $budget")
@@ -100,7 +100,7 @@ class CatalogCurationSpec extends AnyFunSuite {
   }
 
   test("q242: the censored branch fires (deaths strictly fewer than users)") {
-    val deaths = run("q242_kaplan_meier").agg(sum("n_deaths")).head.getLong(0)
+    val deaths = run("q242_kaplan_meier").agg(sum("n_deaths")).head().getLong(0)
     val users = graft.Tables.events(spark, sf)
       .select("user_id").distinct().count()
     assert(deaths > 0 && deaths < users,
@@ -121,7 +121,7 @@ class CatalogCurationSpec extends AnyFunSuite {
   test("q245: both arms populated, matches bounded by treated, ATT defined") {
     // this test is what exposed the original ">= 1 signup" treatment as
     // vacuous (every synthetic user signs up => zero controls, null ATT)
-    val r = run("q245_propensity_match").head
+    val r = run("q245_propensity_match").head()
     assert(r.getLong(0) > 0, "no treated users")
     assert(r.getLong(1) <= r.getLong(0), "n_matched > n_treated")
     assert(r.getLong(1) > 0, "vacuous match set")
@@ -169,7 +169,7 @@ class CatalogCurationSpec extends AnyFunSuite {
   }
 
   test("q250: the media manifest composes (kept <= media, shards cover kept bytes)") {
-    val r = run("q250_media_build").head
+    val r = run("q250_media_build").head()
     val (nMedia, nKept, nShards) = (r.getLong(0), r.getLong(1), r.getLong(2))
     assert(nKept <= nMedia && nKept > 0)
     assert(nKept < nMedia, "injected exact twins must dedup away")

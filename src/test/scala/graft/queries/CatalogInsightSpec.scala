@@ -221,7 +221,7 @@ class CatalogInsightSpec extends AnyFunSuite {
     // Tables.load, not a raw read: the driver's ts encoding varies
     // (TsEncodingSpec gotcha) and unix_millis rejects TIMESTAMP_NTZ
     val ev = graft.Tables.load(spark, sf, "events")
-    val wfMs = ev.agg(max(unix_millis(col("ts")))).head.getLong(0) - 1800000L
+    val wfMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0) - 1800000L
     val batch = ev
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("bn"),

@@ -14,7 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ManifestTableSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
-  import spark.implicits._
 
   private def tmpTable(): String =
     java.nio.file.Files.createTempDirectory("graft-manifest").toString
